@@ -294,8 +294,8 @@ object ClusterOps {
     }
   }
 
-  private val labelsIndex = new Materialize.SupersedingCache[
-    (String, org.apache.spark.sql.types.StructType, Long)]
+  private val labelsIndex =
+    new Materialize.Artifact[(Materialize.Stored, Long)]("cluster-labels", "documents")
 
   /** Transitive near-dup cluster labels over the materialized pairs
     * artifact — THE cluster definition [[dedupCluster]] (#50) and
@@ -319,17 +319,14 @@ object ClusterOps {
     * job, amortized with the build itself). */
   private[graft] def clusterLabelsWithCount(spark: SparkSession,
       sfDir: String): (DataFrame, Long) = {
-    val fp = Materialize.fingerprint(spark, s"$sfDir/documents.parquet")
-    val (path, schema, n) = labelsIndex.getOrBuild(sfDir, fp) {
-      val l = connectedComponents(
+    val (labels, n) = labelsIndex(spark, sfDir) {
+      val l = labelsIndex.store(connectedComponents(
         DedupOps.minhashPairsShared(spark, sfDir).select($"doc_a", $"doc_b"),
         "doc_a", "doc_b")
-        .select($"id".as("doc_id"), $"label".as("cluster_id"))
-      val p = Materialize.writeParquet(l, "cluster-labels")
-      val read = spark.read.schema(l.schema).parquet(p)
-      (p, l.schema, read.count())
+        .select($"id".as("doc_id"), $"label".as("cluster_id")))
+      (l, l.read(spark).count())
     }
-    (spark.read.schema(schema).parquet(path), n)
+    (labels.read(spark), n)
   }
 
   /** #50 Duplicate clusters over the MinHash-LSH near-dup pairs:

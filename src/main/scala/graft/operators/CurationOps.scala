@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.{ColumnInterpolator, Tables}
 import graft.functions.TextFunctions._
+import graft.tools.Materialize
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
@@ -255,8 +256,7 @@ object CurationOps {
   def decontaminate(spark: SparkSession, sfDir: String): DataFrame =
     deconHitsShared(spark, sfDir).orderBy($"doc_id")
 
-  private val deconHitsCache = new graft.tools.Materialize.SupersedingCache[
-    (String, org.apache.spark.sql.types.StructType)]
+  private val deconHits = new Materialize.FrameArtifact("decon-hits", "documents")
 
   /** #51's per-doc contaminated-gram counts materialized ONCE per
     * corpus fingerprint — hit-docs-bounded (only contaminated docs
@@ -267,17 +267,11 @@ object CurationOps {
     * bands/calibration artifacts; the streaming gate keeps the live
     * [[gramHits]] definition (a stream has no fingerprint). */
   private[graft] def deconHitsShared(spark: SparkSession,
-      sfDir: String): DataFrame = {
-    val fp = graft.tools.Materialize.fingerprint(
-      spark, s"$sfDir/documents.parquet")
-    val (path, schema) = deconHitsCache.getOrBuild(sfDir, fp) {
+      sfDir: String): DataFrame =
+    deconHits(spark, sfDir) {
       val docs = Tables.documents(spark, sfDir)
-      val h = gramHits(docs.filter($"doc_id" % DecontMod =!= 0L),
-        benchGramSet(docs))
-      (graft.tools.Materialize.writeParquet(h, "decon-hits"), h.schema)
+      gramHits(docs.filter($"doc_id" % DecontMod =!= 0L), benchGramSet(docs))
     }
-    spark.read.schema(schema).parquet(path)
-  }
 
   /** The distinct benchmark gram set of [[decontaminate]] — shared by
     * the batch operator and the streaming per-drop gate
@@ -835,21 +829,14 @@ object CurationOps {
         expr("(lm_pct_e4 + div_pct_e4 + rep_pct_e4) div 3"))
   }
 
-  private val qualityPctCache =
-    new graft.tools.Materialize.SupersedingCache[(String, org.apache.spark.sql.types.StructType)]
+  private val qualityPct = new Materialize.FrameArtifact("quality-pct", "documents")
 
   /** #95 served from the build-once per-doc artifact (see
     * [[qualityPercentileBuild]]); deterministic total order restored on
-    * read. Explicit schema rides the cache entry so an empty corpus
-    * (no part files) still reads. */
-  def qualityPercentile(spark: SparkSession, sfDir: String): DataFrame = {
-    val fp = graft.tools.Materialize.fingerprint(spark, s"$sfDir/documents.parquet")
-    val (path, schema) = qualityPctCache.getOrBuild(sfDir, fp) {
-      val q = qualityPercentileBuild(spark, sfDir)
-      (graft.tools.Materialize.writeParquet(q, "quality-pct"), q.schema)
-    }
-    spark.read.schema(schema).parquet(path).orderBy($"doc_id")
-  }
+    * read. */
+  def qualityPercentile(spark: SparkSession, sfDir: String): DataFrame =
+    qualityPct(spark, sfDir)(qualityPercentileBuild(spark, sfDir))
+      .orderBy($"doc_id")
 
   /** #95b Quality-by-ingestion trend: the #95 composite percentile
     * aggregated over [[NoveltyBuckets]] equal doc_id RANGE slices of

@@ -3,6 +3,7 @@ package graft.operators
 import graft.{ColumnInterpolator, Tables}
 import graft.functions.TextFunctions._
 import graft.functions.VectorFunctions
+import graft.tools.Materialize
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
@@ -175,11 +176,10 @@ object DedupOps {
   def dedupMinhash(spark: SparkSession, sfDir: String): DataFrame =
     minhashPairsShared(spark, sfDir).orderBy($"doc_a", $"doc_b")
 
-  private val bandsIndex = new graft.tools.Materialize.SupersedingCache[
-    (String, org.apache.spark.sql.types.StructType)]
+  private val bandsIndex = new Materialize.FrameArtifact("minhash-bands", "documents")
 
-  private val incrCandIndex = new graft.tools.Materialize.SupersedingCache[
-    (String, org.apache.spark.sql.types.StructType, Option[Array[Long]])]
+  private val incrCandIndex = new Materialize.Artifact[
+    (Materialize.Stored, Option[Array[Long]])]("incr-cand", "documents")
 
   /** Max candidate-doc ids inlined as a scan IN filter by
     * [[dedupIncremental]]'s verify; beyond this the id list stops
@@ -220,20 +220,14 @@ object DedupOps {
     * drop) scan the compact band table instead of re-hashing 100 TB
     * of text. Same supersede-eviction as the calibration/IVF
     * artifacts. */
-  private[graft] def minhashBandsShared(spark: SparkSession, sfDir: String): DataFrame = {
-    val fp = graft.tools.Materialize.fingerprint(spark, s"$sfDir/documents.parquet")
-    val (path, schema) = bandsIndex.getOrBuild(sfDir, fp) {
-      val b = minhashBands(spark, sfDir)
-      (graft.tools.Materialize.writeParquet(b, "minhash-bands"), b.schema)
-    }
-    spark.read.schema(schema).parquet(path)
-  }
+  private[graft] def minhashBandsShared(spark: SparkSession, sfDir: String): DataFrame =
+    bandsIndex(spark, sfDir)(minhashBands(spark, sfDir))
 
   /** #66 drop-admission lifecycle for the corpus band artifact: once
     * a drop has passed [[dedupIncremental]] and its rows were
     * appended to the corpus table, the band artifact follows by
     * APPENDING the drop's band rows (MBs of new part files) and
-    * re-keying the cache entry to `updatedFingerprint` — the corpus
+    * re-keying the artifact to `updatedFingerprint` — the corpus
     * fingerprint measured AFTER the table append. The 100 TB corpus
     * is never re-hashed for a daily drop; the next drop's candidate
     * build scans only the appended artifact. False when no artifact
@@ -241,11 +235,8 @@ object DedupOps {
     * builds fresh (correct, just not incremental). */
   private[graft] def admitDrop(spark: SparkSession, sfDir: String,
       dropDocs: DataFrame, updatedFingerprint: String): Boolean =
-    bandsIndex.rekey(sfDir, updatedFingerprint) { case (path, schema) =>
-      bandExplode(dropDocs.select($"doc_id", $"text"))
-        .write.mode("append").parquet(path)
-      (path, schema)
-    }.isDefined
+    bandsIndex.append(sfDir, updatedFingerprint)(
+      bandExplode(dropDocs.select($"doc_id", $"text")))
 
   /** The verified J ≥ 1/2 near-dup pairs, served as a FILTER over the
     * [[minhashCalibShared]] artifact (which stores the unfiltered
@@ -359,9 +350,7 @@ object DedupOps {
     * on its own key; the near-dup flag left-joins the sublinear
     * cluster-label artifact; the 5-policy readout is a 1-row
     * conditional agg unpivoted by a bounded `stack`. */
-  private val gainBaseCache =
-    new graft.tools.Materialize.SupersedingCache[(String,
-      org.apache.spark.sql.types.StructType)]
+  private val gainBase = new Materialize.FrameArtifact("gain-base-", "documents")
 
   /** The (doc_id, n_tokens, raw/norm/prefix hash) projection behind
     * [[dedupGain]], materialized ONCE per corpus fingerprint: the
@@ -370,12 +359,10 @@ object DedupOps {
     * corpus text and recomputes three md5s per doc — measured 10.6 s
     * of the sf1 bench before, ~4 s after. Same build-once pattern as
     * the band/LM/quality artifacts. */
-  private def gainBaseShared(spark: SparkSession, sfDir: String): DataFrame = {
-    val fp = graft.tools.Materialize.fingerprint(
-      spark, s"$sfDir/documents.parquet")
-    val (path, schema) = gainBaseCache.getOrBuild(sfDir, fp) {
+  private def gainBaseShared(spark: SparkSession, sfDir: String): DataFrame =
+    gainBase(spark, sfDir) {
       val ltk = graft.functions.TextFunctions.tokens(lower($"text"))
-      val b = Tables.documents(spark, sfDir).select(
+      Tables.documents(spark, sfDir).select(
         $"doc_id",
         size(graft.functions.TextFunctions.tokens($"text")).cast(LongType)
           .as("n_tokens"),
@@ -383,10 +370,7 @@ object DedupOps {
         md5(graft.functions.TextHash.normText($"text")).as("norm_hash"),
         when(size(ltk) >= PrefixTok,
           md5(array_join(slice(ltk, 1, PrefixTok), " "))).as("prefix_hash"))
-      (graft.tools.Materialize.writeParquet(b, "gain-base-"), b.schema)
     }
-    spark.read.schema(schema).parquet(path)
-  }
 
   def dedupGain(spark: SparkSession, sfDir: String): DataFrame = {
     val base = gainBaseShared(spark, sfDir)
@@ -535,20 +519,18 @@ object DedupOps {
     // feeds BOTH the verify join and the corpus-side gram pruning
     // below, which without materialization would execute the
     // candidate subtree twice per run.
-    val fp = graft.tools.Materialize.fingerprint(spark, s"$sfDir/documents.parquet")
-    val (candPath, candSchema, pushedIds) = incrCandIndex.getOrBuild(sfDir, fp) {
-      val c = incrCandFrame(spark, sfDir)
-      val path = graft.tools.Materialize.writeParquet(c, "incr-cand")
+    val (candS, pushedIds) = incrCandIndex(spark, sfDir) {
+      val c = incrCandIndex.store(incrCandFrame(spark, sfDir))
       // the pushable id list is deterministic per fingerprint —
       // collect it ONCE at build time (from the written artifact, so
       // the candidate subtree still runs exactly once) instead of one
       // driver job per steady-state call
-      val ids = spark.read.schema(c.schema).parquet(path)
+      val ids = c.read(spark)
         .select($"doc_old").distinct().take(IncrIdPushLimit + 1)
         .map(_.getLong(0))
-      (path, c.schema, if (ids.length <= IncrIdPushLimit) Some(ids.sorted) else None)
+      (c, if (ids.length <= IncrIdPushLimit) Some(ids.sorted) else None)
     }
-    val cand = spark.read.schema(candSchema).parquet(candPath)
+    val cand = candS.read(spark)
     // gram-hash ONLY the candidate old docs, never the whole corpus:
     // the candidate ids are the tiny LSH output of one drop. Up to
     // [[IncrIdPushLimit]] of them they are PUSHED into the corpus
@@ -631,7 +613,7 @@ object DedupOps {
     // candidate cost for nothing. Pairs-bounded by the parquetRoundTrip
     // contract (the sublinear LSH output; #142's band-occupancy audit
     // is the standing blowup alarm).
-    val cand = graft.tools.Materialize.parquetRoundTrip(
+    val cand = Materialize.parquetRoundTrip(
       minhashCands(spark, sfDir), "minhash-cands")
     // Semi-join prune BOTH corpus-wide verify inputs (gram sets and
     // signatures) to docs that actually appear in a candidate pair
@@ -672,8 +654,7 @@ object DedupOps {
       .withColumn("err_e4", $"est_e4" - $"exact_e4")
   }
 
-  private val calibCache = new graft.tools.Materialize.SupersedingCache[
-    (String, org.apache.spark.sql.types.StructType)]
+  private val calib = new Materialize.FrameArtifact("minhash-calib", "documents")
 
   /** The per-pair calibration table materialized ONCE per corpus
     * fingerprint — pairs-bounded (the sublinear LSH candidate set),
@@ -683,15 +664,8 @@ object DedupOps {
     * frame). Same build-once/probe-many pattern as the bands / pairs
     * / exact-ANN artifacts. */
   private[graft] def minhashCalibShared(spark: SparkSession,
-      sfDir: String): DataFrame = {
-    val fp = graft.tools.Materialize.fingerprint(
-      spark, s"$sfDir/documents.parquet")
-    val (path, schema) = calibCache.getOrBuild(sfDir, fp) {
-      val c = minhashCalibrationDirect(spark, sfDir)
-      (graft.tools.Materialize.writeParquet(c, "minhash-calib"), c.schema)
-    }
-    spark.read.schema(schema).parquet(path)
-  }
+      sfDir: String): DataFrame =
+    calib(spark, sfDir)(minhashCalibrationDirect(spark, sfDir))
 
   def minhashCalibration(spark: SparkSession, sfDir: String): DataFrame =
     // project the report's 5 columns: the artifact additionally stores
@@ -765,8 +739,8 @@ object DedupOps {
     * demoting it buys nothing. */
   val HotDfMin = 8
 
-  private val hotGramIndex =
-    new graft.tools.Materialize.SupersedingCache[(Array[Long], Array[Int])]
+  private val hotGramIndex = new Materialize.Artifact[
+    (Array[Long], Array[Int])]("hot-grams", "documents")
 
   /** The ≤[[HotGramK]] highest-df 3-grams of the corpus with df ≥
     * [[HotDfMin]], as (hash-sorted grams, order rank per gram) arrays
@@ -803,9 +777,8 @@ object DedupOps {
     * hazard the exact pass exists to close). */
   val HotTableCeiling = 1 << 16
 
-  private[graft] def hotGrams(spark: SparkSession, sfDir: String): (Array[Long], Array[Int]) = {
-    val fp = graft.tools.Materialize.fingerprint(spark, s"$sfDir/documents.parquet")
-    hotGramIndex.getOrBuild(sfDir, fp) {
+  private[graft] def hotGrams(spark: SparkSession, sfDir: String): (Array[Long], Array[Int]) =
+    hotGramIndex(spark, sfDir) {
       // deterministic doc_id-keyed sample (≈ HotSampleDocs docs);
       // parquet count() is metadata-only, so sizing the modulus is free
       val nDocs = Tables.documents(spark, sfDir).count()
@@ -857,7 +830,6 @@ object DedupOps {
       val hotSorted = merged.map(_._1).sorted.toArray
       (hotSorted, hotSorted.map(rankOf))
     }
-  }
 
   /** #41 Exact n-gram Jaccard near-dup (3-grams, J >= 1/2) via PREFIX
     * FILTERING (the AllPairs/PPJoin candidate rule, Bayardo et al.
@@ -907,9 +879,8 @@ object DedupOps {
     * stream packed into the id (doc_id·4096 + min(n, 4095); the cap
     * only ever LOWERS the required count — recall-safe), so the
     * count filter needs no extra join. */
-  private val gram3Cache =
-    new graft.tools.Materialize.SupersedingCache[
-      (String, org.apache.spark.sql.types.StructType, Long, Long)]
+  private val gram3Index = new Materialize.Artifact[
+    (Materialize.Stored, Long, Long)]("gram3-", "documents")
 
   /** The 3-gram set frame as a build-once artifact keyed by the
     * corpus fingerprint — [[dedupNgram]]'s plan reads it THREE times
@@ -931,17 +902,14 @@ object DedupOps {
     * just < 2^26, so the guard checks both ends of the id range. */
   private[operators] def gramSets3WithIdRange(spark: SparkSession,
       sfDir: String): (DataFrame, Long, Long) = {
-    val fp = graft.tools.Materialize.fingerprint(spark, s"$sfDir/documents.parquet")
-    val (path, schema, maxId, minId) = gram3Cache.getOrBuild(sfDir, fp) {
-      val b = gramSets(spark, sfDir, 3)
-      val p = graft.tools.Materialize.writeParquet(b, "gram3-")
-      val r = spark.read.schema(b.schema).parquet(p)
-        .agg(max(col("doc_id")), min(col("doc_id"))).first()
+    val (gs, maxId, minId) = gram3Index(spark, sfDir) {
+      val b = gram3Index.store(gramSets(spark, sfDir, 3))
+      val r = b.read(spark).agg(max(col("doc_id")), min(col("doc_id"))).first()
       val mx = Option(r.get(0)).map(_.asInstanceOf[Long]).getOrElse(0L)
       val mn = Option(r.get(1)).map(_.asInstanceOf[Long]).getOrElse(0L)
-      (p, b.schema, mx, mn)
+      (b, mx, mn)
     }
-    (spark.read.schema(schema).parquet(path), maxId, minId)
+    (gs.read(spark), maxId, minId)
   }
 
   def dedupNgram(spark: SparkSession, sfDir: String): DataFrame = {
@@ -1307,8 +1275,7 @@ object DedupOps {
     * windows (boilerplate, > `maxDf` docs) are dropped before
     * pairing, the standard bound that keeps candidates sublinear at
     * 100 TB; pairs need ≥ 2 shared sampled windows. */
-  private val windowsIndex = new graft.tools.Materialize.SupersedingCache[
-    (String, org.apache.spark.sql.types.StructType)]
+  private val windowsIndex = new Materialize.FrameArtifact("sampled-windows", "documents")
 
   /** The content-defined sampled rolling-hash windows `(doc_id, h)`,
     * materialized ONCE per corpus fingerprint — the subtree is shared
@@ -1320,20 +1287,14 @@ object DedupOps {
     * deduplicated the subtree — measured 3× faster than
     * MEMORY_AND_DISK caching back in BENCH_r02 — but only the
     * materialized artifact is shared ACROSS queries.) */
-  private[operators] def sampledWindowsShared(spark: SparkSession, sfDir: String): DataFrame = {
-    val fp = graft.tools.Materialize.fingerprint(spark, s"$sfDir/documents.parquet")
-    // schema rides the cache entry (all-short-doc corpora write an
-    // empty frame; steady-state calls skip plan construction)
-    val (path, schema) = windowsIndex.getOrBuild(sfDir, fp) {
-      val wins = Tables.documents(spark, sfDir)
+  private[operators] def sampledWindowsShared(spark: SparkSession, sfDir: String): DataFrame =
+    windowsIndex(spark, sfDir) {
+      Tables.documents(spark, sfDir)
         .select($"doc_id",
           explode(graft.functions.RollingHash.rollingHashes($"text", TextOps.RollWindow)).as("h"))
         .filter($"h" % OverlapSample === 0L)
         .distinct()
-      (graft.tools.Materialize.writeParquet(wins, "sampled-windows"), wins.schema)
     }
-    spark.read.schema(schema).parquet(path)
-  }
 
   def overlapPairs(spark: SparkSession, sfDir: String, maxDf: Int = 10): DataFrame = {
     // One wide exchange of the windows artifact instead of the old
@@ -1460,35 +1421,33 @@ object DedupOps {
       .withColumn("bucket", shiftright(VectorFunctions.lshBucketWide($"q"),
         VectorFunctions.MaxPlanes - p))
 
-  private val embBucketsIndex = new graft.tools.Materialize.SupersedingCache[
-    (String, org.apache.spark.sql.types.StructType, Int)]
+  private val embBucketsIndex = new Materialize.Artifact[
+    (Materialize.Stored, Int)]("emb-buckets", "embeddings")
 
   /** Corpus (vec_id, q, n2, bucket) sign-bucket index materialized
     * ONCE per corpus fingerprint — the vector-index artifact a
     * production store keeps next to the embeddings (the embedding
     * twin of [[minhashBandsShared]]). Bucket is the table-0 wide
     * bucket truncated to the FULL-corpus scaled plane count; that p
-    * rides the cache entry so incremental consumers bucket their
+    * is stored with the index so incremental consumers bucket their
     * fresh drops under the index's own geometry (the log-scale rule
     * moves p only on decade growth, exactly when a production index
     * rebuilds anyway). */
   private[graft] def embBucketsShared(spark: SparkSession, sfDir: String)
       : (DataFrame, Int) = {
-    val fp = graft.tools.Materialize.fingerprint(spark, s"$sfDir/embeddings.parquet")
-    val (path, schema, p) = embBucketsIndex.getOrBuild(sfDir, fp) {
+    val (index, p) = embBucketsIndex(spark, sfDir) {
       val emb = Tables.embeddings(spark, sfDir)
       val pb = VectorFunctions.scaledPlanes(emb.count())
-      val b = embBucketed(emb, pb)
-      (graft.tools.Materialize.writeParquet(b, "emb-buckets"), b.schema, pb)
+      (embBucketsIndex.store(embBucketed(emb, pb)), pb)
     }
-    (spark.read.schema(schema).parquet(path), p)
+    (index.read(spark), p)
   }
 
   /** Drop-admission lifecycle for the sign-bucket index — the
     * embedding-space twin of [[admitDrop]]: after a drop is admitted
     * (its rows appended to the corpus embeddings table), bucket the
     * NEW vectors under the index's OWN plane geometry, append them to
-    * the stored artifact, and re-key the cache entry to the grown
+    * the stored artifact, and re-key the artifact to the grown
     * corpus's fingerprint — the corpus is never re-quantized for a
     * daily drop. The plane count intentionally stays the index's
     * (a vector store keeps its geometry until a rebuild); occupancy
@@ -1496,11 +1455,9 @@ object DedupOps {
     * rebuild signal, visible in the #142-style occupancy audits. */
   private[graft] def admitEmbDrop(spark: SparkSession, sfDir: String,
       dropVecs: DataFrame, updatedFingerprint: String): Boolean =
-    embBucketsIndex.rekey(sfDir, updatedFingerprint) { case (path, schema, p) =>
-      embBucketed(dropVecs.select($"vec_id", $"embedding"), p)
-        .write.mode("append").parquet(path)
-      (path, schema, p)
-    }.isDefined
+    embBucketsIndex.rekey(sfDir, updatedFingerprint) { case (index, p) =>
+      index.append(embBucketed(dropVecs.select($"vec_id", $"embedding"), p))
+    }
 
   /** #42e Incremental embedding near-dup — the [[dedupIncremental]]
     * daily-ingest shape in the SEMANTIC space: today's drop
@@ -1547,8 +1504,7 @@ object DedupOps {
   def dedupEmbeddingLshOr(spark: SparkSession, sfDir: String): DataFrame =
     embOrPairsShared(spark, sfDir).orderBy($"vec_a", $"vec_b")
 
-  private val embOrPairsCache = new graft.tools.Materialize.SupersedingCache[
-    (String, org.apache.spark.sql.types.StructType)]
+  private val embOrPairs = new Materialize.FrameArtifact("emb-or-pairs", "embeddings")
 
   /** The OR-construction semantic pair set materialized ONCE per
     * embeddings fingerprint. Round 11 left this unmaterialized
@@ -1560,15 +1516,8 @@ object DedupOps {
     * table is exactly what an embedding-dedup pipeline persists next
     * to its vector store. */
   private[operators] def embOrPairsShared(spark: SparkSession,
-      sfDir: String): DataFrame = {
-    val fp = graft.tools.Materialize.fingerprint(
-      spark, s"$sfDir/embeddings.parquet")
-    val (path, schema) = embOrPairsCache.getOrBuild(sfDir, fp) {
-      val pr = embOrPairsDirect(spark, sfDir)
-      (graft.tools.Materialize.writeParquet(pr, "emb-or-pairs"), pr.schema)
-    }
-    spark.read.schema(schema).parquet(path)
-  }
+      sfDir: String): DataFrame =
+    embOrPairs(spark, sfDir)(embOrPairsDirect(spark, sfDir))
 
   /** The defining OR-LSH computation behind [[embOrPairsShared]]. */
   private[graft] def embOrPairsDirect(spark: SparkSession,

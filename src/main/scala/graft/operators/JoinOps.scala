@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{ColumnInterpolator, Det, Tables}
+import graft.tools.Materialize
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -805,14 +806,7 @@ object JoinOps {
     * order (never corpus-quadratic), per-brand counts + the 1-row
     * order total broadcast back, lift multiplies in DECIMAL(38,0)
     * (n_both·n_orders·10⁴ overflows BIGINT at 100 TB order counts). */
-  private val basketCache =
-    new graft.tools.Materialize.SupersedingCache[String]
-  private val basketSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("l_orderkey",
-      org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("bs",
-      org.apache.spark.sql.types.ArrayType(
-        org.apache.spark.sql.types.StringType))))
+  private val basket = new Materialize.FrameArtifact("basket-", "lineitem", "part")
 
   def brandBasket(spark: SparkSession, sfDir: String): DataFrame = {
     // ONE fact pass: per-order sorted brand SET via a single
@@ -825,21 +819,16 @@ object JoinOps {
     // each order's sorted set (ascending ⇒ brand_a < brand_b for
     // free); the totals explode/count the same tiny artifact.
     // the artifact derives from BOTH tables (brands come off the part
-    // join), so both fingerprints key the cache — a part.parquet
+    // join), so both are its declared sources — a part.parquet
     // rewrite with lineitem unchanged must rebuild (r10 ADVICE)
-    val fp = graft.tools.Materialize.fingerprint(
-        spark, s"$sfDir/lineitem.parquet") + "|" +
-      graft.tools.Materialize.fingerprint(spark, s"$sfDir/part.parquet")
-    val setsPath = basketCache.getOrBuild(sfDir, fp) {
+    val sets = basket(spark, sfDir) {
       val p = Tables.part(spark, sfDir).select($"p_partkey", $"p_brand")
-      val b = Tables.lineitem(spark, sfDir)
+      Tables.lineitem(spark, sfDir)
         .select($"l_orderkey", $"l_partkey")
         .join(broadcast(p), $"l_partkey" === $"p_partkey")
         .groupBy($"l_orderkey")
         .agg(sort_array(collect_set($"p_brand")).as("bs"))
-      graft.tools.Materialize.writeParquet(b, "basket-")
     }
-    val sets = spark.read.schema(basketSchema).parquet(setsPath)
     val perBrand = sets.select(explode($"bs").as("p_brand"))
       .groupBy($"p_brand").agg(count(lit(1)).as("n_t"))
     val totOrders = sets.agg(count(lit(1)).as("n_orders_tot"))

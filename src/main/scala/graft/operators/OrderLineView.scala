@@ -1,9 +1,9 @@
 package graft.operators
 
 import graft.{ColumnInterpolator, Det, Tables}
+import graft.tools.Materialize
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
 
 /** The denormalized order-line view: `lineitem ⋈ orders` on the order
   * key, materialized ONCE per corpus fingerprint and served to every
@@ -32,10 +32,9 @@ import org.apache.spark.sql.types.StructType
   * ETL step a production deployment schedules with table refreshes;
   * consumers read back a columnar file whose `ReadSchema` prunes to
   * the 2-4 columns each report touches, so no consumer ever re-pays
-  * the join. Refresh tracking is by source fingerprint
-  * ([[graft.tools.Materialize.fingerprint]] over BOTH parquet dirs):
-  * a rewritten lineitem or orders table supersedes the artifact on
-  * next touch.
+  * the join. Refresh tracking is by source fingerprint over all
+  * THREE parquet dirs the view reads: a rewritten lineitem, orders or
+  * part table supersedes the artifact on next touch.
   *
   * Exactness: the view stores source columns verbatim (timestamps and
   * flags round-trip parquet losslessly) plus the ONE derived column
@@ -49,8 +48,8 @@ import org.apache.spark.sql.types.StructType
   */
 object OrderLineView {
 
-  private val cache =
-    new graft.tools.Materialize.SupersedingCache[(String, StructType)]
+  private val view = new Materialize.FrameArtifact(
+    "orderline-", "lineitem", "orders", "part")
 
   /** The view's defining join, directly over the source tables — the
     * build plan, and the spec-side equality reference for [[scan]].
@@ -91,17 +90,9 @@ object OrderLineView {
   }
 
   /** The materialized view: built by [[direct]] once per (sfDir,
-    * fingerprint(lineitem)+fingerprint(orders)) and read back as a
-    * plain parquet scan — filters and column pruning push into the
-    * artifact exactly as they would into the source tables. */
-  def scan(spark: SparkSession, sfDir: String): DataFrame = {
-    val fp = graft.tools.Materialize.fingerprint(
-      spark, s"$sfDir/lineitem.parquet") + "|" +
-      graft.tools.Materialize.fingerprint(spark, s"$sfDir/orders.parquet")
-    val (path, schema) = cache.getOrBuild(sfDir, fp) {
-      val v = direct(spark, sfDir)
-      (graft.tools.Materialize.writeParquet(v, "orderline-"), v.schema)
-    }
-    spark.read.schema(schema).parquet(path)
-  }
+    * lineitem + orders + part fingerprints) and read back as a plain
+    * parquet scan — filters and column pruning push into the artifact
+    * exactly as they would into the source tables. */
+  def scan(spark: SparkSession, sfDir: String): DataFrame =
+    view(spark, sfDir)(direct(spark, sfDir))
 }

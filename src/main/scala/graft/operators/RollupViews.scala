@@ -1,9 +1,9 @@
 package graft.operators
 
 import graft.{ColumnInterpolator, Det, Tables}
+import graft.tools.Materialize
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
 
 /** Fact-rollup views: the per-ORDER lineitem rollup and the
   * per-CUSTOMER orders rollup, each materialized ONCE per source
@@ -33,10 +33,8 @@ import org.apache.spark.sql.types.StructType
   */
 object RollupViews {
 
-  private val orderCache =
-    new graft.tools.Materialize.SupersedingCache[(String, StructType)]
-  private val custCache =
-    new graft.tools.Materialize.SupersedingCache[(String, StructType)]
+  private val orderArtifact = new Materialize.FrameArtifact("orderstats-", "lineitem")
+  private val custArtifact = new Materialize.FrameArtifact("custstats-", "orders")
 
   /** Per-order rollup of lineitem: line count + total quantity (e2
     * fixed-point, the [[JoinOps.orderQtyTotals]] definition). One
@@ -47,15 +45,8 @@ object RollupViews {
       .agg(count(lit(1)).as("n_lines"),
         Det.sumFixed($"l_quantity", 2).as("total_qty_e2"))
 
-  def orderStats(spark: SparkSession, sfDir: String): DataFrame = {
-    val fp = graft.tools.Materialize.fingerprint(
-      spark, s"$sfDir/lineitem.parquet")
-    val (path, schema) = orderCache.getOrBuild(sfDir, fp) {
-      val v = orderStatsDirect(spark, sfDir)
-      (graft.tools.Materialize.writeParquet(v, "orderstats-"), v.schema)
-    }
-    spark.read.schema(schema).parquet(path)
-  }
+  def orderStats(spark: SparkSession, sfDir: String): DataFrame =
+    orderArtifact(spark, sfDir)(orderStatsDirect(spark, sfDir))
 
   /** Per-customer rollup of orders: order count, lifetime spend (e2),
     * last order date, first-order year (cohort), and the sorted set
@@ -74,13 +65,6 @@ object RollupViews {
         min(year($"o_orderdate").cast("long")).as("cohort"),
         array_sort(collect_set(year($"o_orderdate").cast("long"))).as("yrs"))
 
-  def customerStats(spark: SparkSession, sfDir: String): DataFrame = {
-    val fp = graft.tools.Materialize.fingerprint(
-      spark, s"$sfDir/orders.parquet")
-    val (path, schema) = custCache.getOrBuild(sfDir, fp) {
-      val v = customerStatsDirect(spark, sfDir)
-      (graft.tools.Materialize.writeParquet(v, "custstats-"), v.schema)
-    }
-    spark.read.schema(schema).parquet(path)
-  }
+  def customerStats(spark: SparkSession, sfDir: String): DataFrame =
+    custArtifact(spark, sfDir)(customerStatsDirect(spark, sfDir))
 }

@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.{ColumnInterpolator, Tables}
 import graft.functions.VectorFunctions._
+import graft.tools.Materialize
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -46,8 +47,7 @@ object SimilarityOps {
     * consumer needs (#43/#152/#118 use 5, #79's exact leg 3, #110 2). */
   val AnnExactK = 5
 
-  private val exactRankCache = new graft.tools.Materialize.SupersedingCache[
-    (String, org.apache.spark.sql.types.StructType)]
+  private val exactRank = new Materialize.FrameArtifact("ann-exact-", "embeddings")
 
   /** The EXACT cosine ranking materialized ONCE per corpus
     * fingerprint: for every fixture query and every corpus label, the
@@ -70,10 +70,8 @@ object SimilarityOps {
     * groups × K rows, never the corpus). The artifact is exactly what
     * an ANN evaluation tier persists next to its index: the
     * ground-truth ranking for the standing query batch. */
-  private[operators] def exactRankShared(spark: SparkSession, sfDir: String): DataFrame = {
-    val fp = graft.tools.Materialize.fingerprint(
-      spark, s"$sfDir/embeddings.parquet")
-    val (path, schema) = exactRankCache.getOrBuild(sfDir, fp) {
+  private[operators] def exactRankShared(spark: SparkSession, sfDir: String): DataFrame =
+    exactRank(spark, sfDir) {
       import spark.implicits.{newProductEncoder, newLongEncoder}
       val v = Tables.embeddings(spark, sfDir)
         .select($"vec_id", quantize($"embedding").as("q"),
@@ -88,7 +86,7 @@ object SimilarityOps {
           $"vec_id",
           cosineE6(dotL($"a.q", $"b.q"), $"a.n2", $"b.n2").as("cos_e6"))
         .as[(Long, Long, Long, Long, Long)]
-      val top = scored
+      scored
         .groupByKey(r => (r._1, r._2, r._3))
         .mapValues(r => (r._5, r._4)) // (cos_e6, vec_id)
         .agg(new BoundedTopK[(Long, Long)](AnnExactK,
@@ -98,10 +96,7 @@ object SimilarityOps {
           top.iterator.map { case (cos, vec) => (qid, ql, l, vec, cos) }
         }
         .toDF("query_id", "qlabel", "label", "vec_id", "cos_e6")
-      (graft.tools.Materialize.writeParquet(top, "ann-exact-"), top.schema)
     }
-    spark.read.schema(schema).parquet(path)
-  }
 
   /** Per-query top-k of an [[exactRankShared]] projection by the
     * exact-tier total order (cos_e6 desc, vec_id asc) — the serve-side
@@ -214,16 +209,13 @@ object SimilarityOps {
         round(sum($"q").cast("double") / count(lit(1))).cast(LongType).as("mean_q"))
       .orderBy($"dim")
 
-  /** Materialized IVF cell table per corpus (parquet path): built
-    * once and reused by every later query batch — the 100 TB
-    * amortization story in code, not just a comment. A production
-    * deployment writes the index next to the corpus; here it lands
-    * under the session temp root.
-    *
-    * Keyed by dir PLUS a (name, size, mtime) fingerprint of the
-    * embedding files, so regenerating the parquet under the same path
-    * in one JVM rebuilds the index instead of serving stale cells. */
-  private val ivfIndex = new graft.tools.Materialize.SupersedingCache[String]
+  /** Materialized IVF cell table per corpus: built once and reused by
+    * every later query batch — the 100 TB amortization story in code,
+    * not just a comment. A production deployment writes the index next
+    * to the corpus; here it lands under the session temp root.
+    * Regenerating the embeddings under the same path in one JVM
+    * rebuilds the index instead of serving stale cells. */
+  private val ivfIndex = new Materialize.FrameArtifact("ivf-index", "embeddings")
 
   /** IVF-style ANN top-3: each query probes its 2 nearest cells of
     * the materialized index. Pivots are the REAL trained k-means
@@ -313,8 +305,8 @@ object SimilarityOps {
     (next, sumDist)
   }
 
-  private val kmeansCents =
-    new graft.tools.Materialize.SupersedingCache[Array[(Long, Array[Long], Long)]]
+  private val kmeansCents = new Materialize.Artifact[
+    Array[(Long, Array[Long], Long)]]("kmeans-centroids", "embeddings")
 
   /** The k×dim centroids after one Lloyd update, built ONCE per
     * corpus fingerprint: ~4 KB that ride task closures, shared by the
@@ -323,12 +315,10 @@ object SimilarityOps {
     * the way a production pipeline connects its clustering to its
     * index. */
   private[graft] def kmeansCentroidsShared(spark: SparkSession,
-      sfDir: String): Array[(Long, Array[Long], Long)] = {
-    val fp = graft.tools.Materialize.fingerprint(spark, s"$sfDir/embeddings.parquet")
-    kmeansCents.getOrBuild(sfDir, fp) {
+      sfDir: String): Array[(Long, Array[Long], Long)] =
+    kmeansCents(spark, sfDir) {
       lloydUpdate(spark, sfDir, kmeansSeeds(spark, sfDir))._1
     }
-  }
 
   /** Final (cluster_id, vec_id, dist) assignment against the shared
     * updated centroids — one narrow corpus scan. Deterministic and
@@ -360,8 +350,7 @@ object SimilarityOps {
       .toDF("cluster_id", "vec_id", "dist")
   }
 
-  private val kmeansIndex = new graft.tools.Materialize.SupersedingCache[
-    (String, org.apache.spark.sql.types.StructType)]
+  private val kmeansIndex = new Materialize.FrameArtifact("kmeans-assign", "embeddings")
 
   /** [[kmeansAssign]] materialized ONCE per corpus fingerprint — the
     * doc→cluster table IS a production artifact (a pipeline writes it
@@ -370,14 +359,8 @@ object SimilarityOps {
     * would run the assignment subtree once per side of its joins.
     * Same build-once/supersede-evict contract as the IVF index (which
     * also stores a corpus-cardinality frame). */
-  private[graft] def kmeansAssignShared(spark: SparkSession, sfDir: String): DataFrame = {
-    val fp = graft.tools.Materialize.fingerprint(spark, s"$sfDir/embeddings.parquet")
-    val (path, schema) = kmeansIndex.getOrBuild(sfDir, fp) {
-      val a = kmeansAssign(spark, sfDir)
-      (graft.tools.Materialize.writeParquet(a, "kmeans-assign"), a.schema)
-    }
-    spark.read.schema(schema).parquet(path)
-  }
+  private[graft] def kmeansAssignShared(spark: SparkSession, sfDir: String): DataFrame =
+    kmeansIndex(spark, sfDir)(kmeansAssign(spark, sfDir))
 
   /** #67 Deterministic k-means profile over the embedding corpus —
     * the cluster-balance report a curation pipeline runs to pick
@@ -498,14 +481,11 @@ object SimilarityOps {
     // reading (or quantizing) the 100 TB corpus
     def emb = Tables.embeddings(spark, sfDir)
     val pivots = kmeansCentroidsShared(spark, sfDir)
-    val fp = graft.tools.Materialize.fingerprint(spark, s"$sfDir/embeddings.parquet")
-    val indexPath = ivfIndex.getOrBuild(sfDir, fp) {
-      val cells = quantized(emb.filter($"vec_id" >= 10))
+    val cells = ivfIndex(spark, sfDir) {
+      quantized(emb.filter($"vec_id" >= 10))
         .map { case (id, q, n2) => (bestCells(pivots)(q, n2, 1).head, id, q, n2) }
         .toDF("cell", "vec_id", "q", "n2")
-      graft.tools.Materialize.writeParquet(cells, "ivf-index")
     }
-    val cells = spark.read.parquet(indexPath)
     val probes = quantized(emb.filter($"vec_id" < 10))
       .flatMap { case (id, q, n2) => bestCells(pivots)(q, n2, 2).map(c => (c, id, q, n2)) }
       .toDF("qcell", "query_id", "q", "n2")
@@ -1029,8 +1009,7 @@ object SimilarityOps {
   private def nearestSub(book: Array[(Int, Array[Long])], sub: Array[Long]): Int =
     nearestSubD(book, sub)._1
 
-  private val pqBooks =
-    new graft.tools.Materialize.SupersedingCache[PqBooks]
+  private val pqBooks = new Materialize.Artifact[PqBooks]("pq-codebooks", "embeddings")
 
   /** PQ codebook training — one deterministic Lloyd round PER
     * SUBSPACE, all [[PqM]] subspaces in a single corpus pass: seeds
@@ -1079,10 +1058,8 @@ object SimilarityOps {
     * [[annPq]] and the streaming encode gate
     * ([[graft.streaming.StreamingJobs.pqEncodeGate]]). */
   private[graft] def pqCodebooksShared(spark: SparkSession,
-      sfDir: String): PqBooks = {
-    val fp = graft.tools.Materialize.fingerprint(spark, s"$sfDir/embeddings.parquet")
-    pqBooks.getOrBuild(sfDir, fp)(pqTrain(spark, sfDir))
-  }
+      sfDir: String): PqBooks =
+    pqBooks(spark, sfDir)(pqTrain(spark, sfDir))
 
   /** The PQ encode stage — ONE definition shared by the batch ADC
     * scorer ([[annPq]]) and the streaming encode gate, so the two

@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.{ColumnInterpolator, Tables}
 import graft.functions.TextFunctions._
+import graft.tools.Materialize
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -408,16 +409,8 @@ object TextOps {
     retrievalTopk(bm25Scored(postingFrames(spark, sfDir)), Bm25TopK)
       .orderBy($"qid", $"rnk")
 
-  private val postingsCache =
-    new graft.tools.Materialize.SupersedingCache[(String, String)]
-  private val postTfSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("doc_id", LongType),
-    org.apache.spark.sql.types.StructField("term",
-      org.apache.spark.sql.types.StringType),
-    org.apache.spark.sql.types.StructField("tf", LongType)))
-  private val postDlSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("doc_id", LongType),
-    org.apache.spark.sql.types.StructField("dl", LongType)))
+  private val postings = new Materialize.Artifact[(Materialize.Stored, Materialize.Stored)](
+    "post-", "documents")
 
   /** The posting-list frames every lexical ranker shares — ONE
     * definition of tf / df / query table / doc length / corpus
@@ -438,9 +431,7 @@ object TextOps {
       qs.split(" ").toSeq.distinct.map(t => (qid, t))
     }
     val queryTerms = qterms.map(_._2).distinct
-    val fp = graft.tools.Materialize.fingerprint(
-      spark, s"$sfDir/documents.parquet")
-    val (tfPath, dlPath) = postingsCache.getOrBuild(sfDir, fp) {
+    val (tfS, dlS) = postings(spark, sfDir) {
       val docs = Tables.documents(spark, sfDir)
       val dlB = docs.select($"doc_id",
         size(tokens($"text")).cast(LongType).as("dl"))
@@ -448,11 +439,10 @@ object TextOps {
         .select($"doc_id", explode(tokens($"text")).as("term"))
         .filter($"term".isin(queryTerms.map(t => t: Any): _*))
         .groupBy($"doc_id", $"term").agg(count(lit(1)).as("tf"))
-      (graft.tools.Materialize.writeParquet(tfB, "post-tf-"),
-        graft.tools.Materialize.writeParquet(dlB, "post-dl-"))
+      (postings.store(tfB, "tf-"), postings.store(dlB, "dl-"))
     }
-    val tf = spark.read.schema(postTfSchema).parquet(tfPath)
-    val dl = spark.read.schema(postDlSchema).parquet(dlPath)
+    val tf = tfS.read(spark)
+    val dl = dlS.read(spark)
     val stats = dl.agg(count(lit(1)).as("n_docs"),
       sum($"dl").as("total_tokens"))
     val df = tf.groupBy($"term").agg(count(lit(1)).as("df"))
@@ -608,17 +598,13 @@ object TextOps {
     // per corpus pays the check job once; repeated calls — and
     // plan-only consumers (explain, specs) — get the cached verdict
     // with no eager job and broadcast the materialized parquet.
-    val fp = graft.tools.Materialize.fingerprint(
-      spark, s"$sfDir/documents.parquet")
-    val (rTabPath, collided) = lmRTabCache.getOrBuild(sfDir, fp) {
-      val rTab = big.join(broadcast(uni), Seq("w1"))
+    val (rTab, collided) = lmRTab(spark, sfDir) {
+      val r = lmRTab.store(big.join(broadcast(uni), Seq("w1"))
         .select(xxhash64($"w1", $"w2").as("bh"),
-          expr("c2 * 1000000 div c1").as("r"))
-      val path = graft.tools.Materialize.writeParquet(rTab, "lm-rtab-")
-      val col = spark.read.schema(rTabSchema).parquet(path)
+          expr("c2 * 1000000 div c1").as("r")))
+      (r, r.read(spark)
         .groupBy($"bh").agg(count(lit(1)).as("n"))
-        .filter($"n" > 1).limit(1).count() > 0
-      (path, col)
+        .filter($"n" > 1).limit(1).count() > 0)
     }
     val stream = lmBigrams(Tables.documents(spark, sfDir))
     val scored =
@@ -628,8 +614,7 @@ object TextOps {
           .select($"doc_id", expr("c2 * 1000000 div c1").as("r"))
       else
         stream.select($"doc_id", xxhash64($"w1", $"w2").as("bh"))
-          .join(broadcast(
-            spark.read.schema(rTabSchema).parquet(rTabPath)), "bh")
+          .join(broadcast(rTab.read(spark)), "bh")
           .select($"doc_id", $"r")
     scored.groupBy($"doc_id")
       .agg(count(lit(1)).as("n_bigrams"),
@@ -662,25 +647,12 @@ object TextOps {
     (uni, big)
   }
 
-  private val lmCache =
-    new graft.tools.Materialize.SupersedingCache[(String, String)]
-  /** (rTab parquet path, xxhash64-collision verdict) per corpus
-    * fingerprint — see [[lmQuality]]. */
-  private val lmRTabCache =
-    new graft.tools.Materialize.SupersedingCache[(String, Boolean)]
-  private val rTabSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("bh", LongType),
-    org.apache.spark.sql.types.StructField("r", LongType)))
-  private val uniSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("w1",
-      org.apache.spark.sql.types.StringType),
-    org.apache.spark.sql.types.StructField("c1", LongType)))
-  private val bigSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("w1",
-      org.apache.spark.sql.types.StringType),
-    org.apache.spark.sql.types.StructField("w2",
-      org.apache.spark.sql.types.StringType),
-    org.apache.spark.sql.types.StructField("c2", LongType)))
+  private val lmTables = new Materialize.Artifact[(Materialize.Stored, Materialize.Stored)](
+    "lm-", "documents")
+  /** (rTab, xxhash64-collision verdict) per corpus fingerprint — see
+    * [[lmQuality]]. */
+  private val lmRTab = new Materialize.Artifact[
+    (Materialize.Stored, Boolean)]("lm-rtab-", "documents")
 
   /** [[lmCounts]] as a build-once artifact keyed by the corpus
     * fingerprint — four operators price the corpus LM (#81 fluency,
@@ -688,18 +660,13 @@ object TextOps {
     * collocations), so the two vocab-bounded count tables are
     * materialized once and every consumer scans parquet (the
     * amortize-to-first-consumer design of the MinHash pair artifact;
-    * NOTES.md "Bench attribution"). Explicit read schemas serve the
-    * empty-corpus case, where an empty frame writes no part files. */
+    * NOTES.md "Bench attribution"). */
   def lmCountsShared(spark: SparkSession, sfDir: String): (DataFrame, DataFrame) = {
-    val fp = graft.tools.Materialize.fingerprint(
-      spark, s"$sfDir/documents.parquet")
-    val (uniPath, bigPath) = lmCache.getOrBuild(sfDir, fp) {
-      val (uni, big) = lmCounts(spark, sfDir)
-      (graft.tools.Materialize.writeParquet(uni, "lm-uni-"),
-        graft.tools.Materialize.writeParquet(big, "lm-big-"))
+    val (uni, big) = lmTables(spark, sfDir) {
+      val (u, b) = lmCounts(spark, sfDir)
+      (lmTables.store(u, "uni-"), lmTables.store(b, "big-"))
     }
-    (spark.read.schema(uniSchema).parquet(uniPath),
-      spark.read.schema(bigSchema).parquet(bigPath))
+    (uni.read(spark), big.read(spark))
   }
 
   /** #114c Vocabulary-coverage curve: word types bucketed by

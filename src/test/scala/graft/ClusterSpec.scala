@@ -46,9 +46,8 @@ class ClusterSpec extends SparkTestBase {
 
   test("empty pair set yields an empty, schema-correct result (both paths)") {
     // the distributed path (limit = -1 so 0 edges still exceeds it)
-    // exercises the all-empty parquet round-trip: no part files are
-    // written and the read-back must use the explicit schema — the
-    // shape q_dedup_cluster hits on a tiny SF with no near-dup pairs
+    // exercises the all-empty parquet round-trip — the shape
+    // q_dedup_cluster hits on a tiny SF with no near-dup pairs
     import spark.implicits._
     val empty = Seq.empty[(Long, Long)].toDF("a", "b")
     for (limit <- Seq(ClusterOps.DriverEdgeLimit, -1L)) {

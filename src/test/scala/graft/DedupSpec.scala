@@ -29,9 +29,8 @@ class DedupSpec extends SparkTestBase {
 
   test("shared artifacts tolerate a dedup-clean / short-doc corpus (empty frames)") {
     // every text unique and shorter than the rolling window → the
-    // minhash-pairs AND sampled-windows artifacts are EMPTY frames
-    // (parquet dirs with no part files); the schema-explicit read-back
-    // must serve them instead of failing inference
+    // minhash-pairs AND sampled-windows artifacts are EMPTY frames,
+    // which the stored-schema read-back must serve
     val dir = tmpDir("graft-clean-corpus-")
     Seq((1L, "alpha one", "en", "srcA", 9L),
         (2L, "beta two", "en", "srcA", 8L),

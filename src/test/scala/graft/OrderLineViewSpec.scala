@@ -61,4 +61,21 @@ class OrderLineViewSpec extends SparkTestBase {
       "the rebuilt artifact must reflect the new source rows")
     assert(halfCount > 0)
   }
+
+  test("a rewritten part table supersedes the artifact — brands follow the source") {
+    // lineitem and orders stay byte-identical: only the part dim moves
+    val dir = tmpDir("olv-part-")
+    Tables.lineitem(spark, sf).write.parquet(s"$dir/lineitem.parquet")
+    Tables.orders(spark, sf).write.parquet(s"$dir/orders.parquet")
+    Tables.part(spark, sf).write.parquet(s"$dir/part.parquet")
+    def brands: Set[String] = OrderLineView.scan(spark, dir)
+      .filter($"p_brand".isNotNull).select($"p_brand").distinct()
+      .as[String](org.apache.spark.sql.Encoders.STRING).collect().toSet
+    val before = brands
+    assert(before.nonEmpty)
+    Tables.part(spark, sf).withColumn("p_brand", concat(lit("X-"), $"p_brand"))
+      .write.mode("overwrite").parquet(s"$dir/part.parquet")
+    assert(brands === before.map("X-" + _),
+      "the view must serve the rewritten part table's brands")
+  }
 }

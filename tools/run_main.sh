@@ -1,8 +1,11 @@
 #!/bin/bash
 # Run a graft main directly against the sbt-compiled classes (faster
 # than sbt runMain; same JDK17 add-opens set as build.sbt).
+# Runs the classes of the checkout this script sits in; Spark's jars
+# come from $SPARK_HOME/jars.
 # usage: SPARK_DRIVER_MEM=32g tools/run_main.sh graft.tools.GenScale [args...]
 MAIN="$1"; shift
+ROOT="$(cd "$(dirname "${BASH_SOURCE[0]}")/.." && pwd)"
 OPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
          java.nio java.util java.util.concurrent java.util.concurrent.atomic \
@@ -13,5 +16,5 @@ exec java $OPENS \
   -Xmx"${SPARK_DRIVER_MEM:-8g}" \
   -Dspark.ui.enabled=false \
   -Dspark.sql.session.timeZone=UTC \
-  -cp "/root/repo/target/scala-2.13/classes:/opt/spark/jars/*" \
+  -cp "$ROOT/target/scala-2.13/classes:${SPARK_HOME:?set SPARK_HOME}/jars/*" \
   "$MAIN" "$@"
