@@ -1,10 +1,10 @@
 package graft
 
-import graft.functions.{CountInSetExpr, DotLongExpr, GramHashesExpr, GramStringsExpr, MaxTokenCountExpr, MinhashSigExpr, Norm2LongExpr, OrderedPairsExpr, QuantizeE3Expr, RollingHashExpr, ZValueExpr}
-import org.apache.spark.sql.SparkSessionExtensions
+import graft.functions.{LayoutFunctions, RollingHash, TextHash, TextSetExprs, VectorFunctions}
+import org.apache.spark.sql.{Column, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.graftbridge.ColumnBridge
 
 /** SQL surface for graft's native expressions, injected via
   * `SparkSessionExtensions` — the Spark-idiomatic way to ship an
@@ -28,123 +28,78 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Li
   *   graft_dot(a, b)                — BIGINT dot of two long arrays
   *   graft_norm2(a)                 — BIGINT squared norm
   *
-  * without touching the Scala API. Shape parameters must be integer
+  * without touching the Scala API. Each function is one row of
+  * [[GraftExtensions.functions]] and builds through the same Column
+  * builder the Scala API uses. Shape parameters must be integer
   * literals; arity and literal-ness are validated when the analyzer
   * resolves the call, with a usage message rather than an internal
   * index error.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
-  private def checkArity(fn: String, usage: String, args: Seq[Expression], n: Int): Unit =
-    if (args.size != n) throw new IllegalArgumentException(
-      s"$fn expects $n arguments: $usage; got ${args.size}")
+  override def apply(ext: SparkSessionExtensions): Unit =
+    for (f <- GraftExtensions.functions) ext.injectFunction((
+      new FunctionIdentifier(f.name),
+      new ExpressionInfo(classOf[GraftExtensions].getName, f.name),
+      (args: Seq[Expression]) => {
+        if (args.size != f.arity) throw new IllegalArgumentException(
+          s"${f.name} expects ${f.arity} arguments: ${f.usage}; got ${args.size}")
+        ColumnBridge.convert(f.build(new GraftExtensions.Args(f.name, args)))
+      }))
+}
 
-  private def litInt(e: Expression, fn: String, arg: String): Int = e match {
-    case Literal(v: Int, _) => v
-    case other => throw new IllegalArgumentException(
-      s"$fn: $arg must be an integer literal, got $other")
+object GraftExtensions {
+
+  /** One SQL function: its name, usage string, arity and builder. */
+  private final case class SqlFunction(name: String, usage: String, arity: Int,
+      build: Args => Column)
+
+  /** The arguments of one call, read as columns or literal shape
+    * parameters; a bad literal fails with the function's name. */
+  private final class Args(fn: String, args: Seq[Expression]) {
+    def col(i: Int): Column = ColumnBridge.column(args(i))
+
+    def int(i: Int, arg: String): Int = args(i) match {
+      case Literal(v: Int, _) => v
+      case other => throw new IllegalArgumentException(
+        s"$fn: $arg must be an integer literal, got $other")
+    }
+
+    def csv(i: Int, arg: String): Seq[String] = args(i) match {
+      case Literal(v: org.apache.spark.unsafe.types.UTF8String, _) =>
+        // trim around commas ('the, a, of' means the/a/of, not ' a');
+        // reject empties so a trailing comma fails loudly instead of
+        // silently shrinking the set. Markers cannot contain commas.
+        val parts = v.toString.split(",", -1).map(_.trim).toSeq
+        if (parts.exists(_.isEmpty)) throw new IllegalArgumentException(
+          s"$fn: $arg has an empty element (leading/trailing/double comma): '$v'")
+        parts
+      case other => throw new IllegalArgumentException(
+        s"$fn: $arg must be a comma-separated string literal, got $other")
+    }
   }
 
-  private def litCsv(e: Expression, fn: String, arg: String): Seq[String] = e match {
-    case Literal(v: org.apache.spark.unsafe.types.UTF8String, _) =>
-      // trim around commas ('the, a, of' means the/a/of, not ' a');
-      // reject empties so a trailing comma fails loudly instead of
-      // silently shrinking the set. Markers cannot contain commas.
-      val parts = v.toString.split(",", -1).map(_.trim).toSeq
-      if (parts.exists(_.isEmpty)) throw new IllegalArgumentException(
-        s"$fn: $arg has an empty element (leading/trailing/double comma): '$v'")
-      parts
-    case other => throw new IllegalArgumentException(
-      s"$fn: $arg must be a comma-separated string literal, got $other")
-  }
-
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      new FunctionIdentifier("graft_gram_hashes"),
-      new ExpressionInfo(classOf[GramHashesExpr].getName, "graft_gram_hashes"),
-      (args: Seq[Expression]) => {
-        checkArity("graft_gram_hashes", "(text, n)", args, 2)
-        GramHashesExpr(args.head, litInt(args(1), "graft_gram_hashes", "n"))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_minhash_sig"),
-      new ExpressionInfo(classOf[MinhashSigExpr].getName, "graft_minhash_sig"),
-      (args: Seq[Expression]) => {
-        checkArity("graft_minhash_sig", "(text, n, k)", args, 3)
-        MinhashSigExpr(args.head, litInt(args(1), "graft_minhash_sig", "n"),
-          litInt(args(2), "graft_minhash_sig", "k"))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_rolling_hashes"),
-      new ExpressionInfo(classOf[RollingHashExpr].getName, "graft_rolling_hashes"),
-      (args: Seq[Expression]) => {
-        checkArity("graft_rolling_hashes", "(text, window)", args, 2)
-        RollingHashExpr(args.head, litInt(args(1), "graft_rolling_hashes", "w"))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_gram_strings"),
-      new ExpressionInfo(classOf[GramStringsExpr].getName, "graft_gram_strings"),
-      (args: Seq[Expression]) => {
-        checkArity("graft_gram_strings", "(text, n)", args, 2)
-        GramStringsExpr(args.head, litInt(args(1), "graft_gram_strings", "n"))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_count_in_set"),
-      new ExpressionInfo(classOf[CountInSetExpr].getName, "graft_count_in_set"),
-      (args: Seq[Expression]) => {
-        checkArity("graft_count_in_set", "(arr, 'a,b,c')", args, 2)
-        CountInSetExpr(args.head, litCsv(args(1), "graft_count_in_set", "set"))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_max_token_count"),
-      new ExpressionInfo(classOf[MaxTokenCountExpr].getName, "graft_max_token_count"),
-      (args: Seq[Expression]) => {
-        checkArity("graft_max_token_count", "(arr)", args, 1)
-        MaxTokenCountExpr(args.head)
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_zvalue"),
-      new ExpressionInfo(classOf[ZValueExpr].getName, "graft_zvalue"),
-      (args: Seq[Expression]) => {
-        checkArity("graft_zvalue", "(x, y, bits)", args, 3)
-        // explicit long casts: int arguments would CCE on the
-        // interpreted path (constant folding) but widen under codegen
-        ZValueExpr(
-          org.apache.spark.sql.catalyst.expressions.Cast(args.head,
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.catalyst.expressions.Cast(args(1),
-            org.apache.spark.sql.types.LongType),
-          litInt(args(2), "graft_zvalue", "bits"))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_quantize"),
-      new ExpressionInfo(classOf[QuantizeE3Expr].getName, "graft_quantize"),
-      (args: Seq[Expression]) => {
-        checkArity("graft_quantize", "(emb)", args, 1)
-        QuantizeE3Expr(args.head)
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_dot"),
-      new ExpressionInfo(classOf[DotLongExpr].getName, "graft_dot"),
-      (args: Seq[Expression]) => {
-        checkArity("graft_dot", "(a, b)", args, 2)
-        DotLongExpr(args.head, args(1))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_norm2"),
-      new ExpressionInfo(classOf[Norm2LongExpr].getName, "graft_norm2"),
-      (args: Seq[Expression]) => {
-        checkArity("graft_norm2", "(a)", args, 1)
-        Norm2LongExpr(args.head)
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_ordered_pairs"),
-      new ExpressionInfo(classOf[OrderedPairsExpr].getName, "graft_ordered_pairs"),
-      (args: Seq[Expression]) => {
-        checkArity("graft_ordered_pairs", "(ids)", args, 1)
-        OrderedPairsExpr(org.apache.spark.sql.catalyst.expressions.Cast(
-          args.head, org.apache.spark.sql.types.ArrayType(
-            org.apache.spark.sql.types.LongType)))
-      }))
-  }
+  private val functions: Seq[SqlFunction] = Seq(
+    SqlFunction("graft_gram_hashes", "(text, n)", 2,
+      a => TextHash.gramHashes(a.col(0), a.int(1, "n"))),
+    SqlFunction("graft_minhash_sig", "(text, n, k)", 3,
+      a => TextHash.minhashSig(a.col(0), a.int(1, "n"), a.int(2, "k"))),
+    SqlFunction("graft_rolling_hashes", "(text, window)", 2,
+      a => RollingHash.rollingHashes(a.col(0), a.int(1, "w"))),
+    SqlFunction("graft_gram_strings", "(text, n)", 2,
+      a => TextHash.gramStrings(a.col(0), a.int(1, "n"))),
+    SqlFunction("graft_count_in_set", "(arr, 'a,b,c')", 2,
+      a => TextSetExprs.countInSet(a.col(0), a.csv(1, "set"))),
+    SqlFunction("graft_max_token_count", "(arr)", 1,
+      a => TextSetExprs.maxTokenCount(a.col(0))),
+    SqlFunction("graft_zvalue", "(x, y, bits)", 3,
+      a => LayoutFunctions.zvalue(a.col(0), a.col(1), a.int(2, "bits"))),
+    SqlFunction("graft_quantize", "(emb)", 1,
+      a => VectorFunctions.quantize(a.col(0))),
+    SqlFunction("graft_dot", "(a, b)", 2,
+      a => VectorFunctions.dotL(a.col(0), a.col(1))),
+    SqlFunction("graft_norm2", "(a)", 1,
+      a => VectorFunctions.norm2(a.col(0))),
+    SqlFunction("graft_ordered_pairs", "(ids)", 1,
+      a => TextSetExprs.orderedPairs(a.col(0))))
 }

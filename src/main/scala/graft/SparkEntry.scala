@@ -567,7 +567,7 @@ object SparkEntry {
 
   /** Direct-polynomial recompute of the RollWindow-char rolling-window
     * hashes in HUGEINT (`w(doc_id, p, h)`) — the ONE independent
-    * check of RollingHashExpr's O(1) recurrence, shared by
+    * check of RollingHash's O(1) recurrence, shared by
     * q_rolling_fp and q_overlap_pairs so the two oracles cannot
     * drift. */
   private val rollWindowCte: String = {

@@ -1,11 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression, GenericInternalRow, GetJsonObject, Literal, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.graftbridge.ColumnBridge
-import org.apache.spark.sql.types.{DataType, LongType, StringType}
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, GenericInternalRow, GetJsonObject, Literal}
+import org.apache.spark.sql.types.{LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Narrow JSON field extraction for the q_json_extract hot path (r14,
@@ -43,8 +40,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * random JSON (well-formed and malformed). */
 object JsonExprs {
 
+  /** Nullable LONG; null when the key is absent, the document is
+    * malformed, or the extracted text does not cast to BIGINT (all
+    * exactly as `CAST(get_json_object(..) AS BIGINT)` decides them) —
+    * the kernel's boxed null is the SQL NULL. */
   def jsonLongKey(json: Column, key: String): Column =
-    ColumnBridge.column(JsonLongKeyExpr(ColumnBridge.expression(json), key))
+    Kernel.call(this, "longKey", LongType, Seq(json), Seq(key),
+      returnNullable = true)
 
   /** Per-thread slow-path state: Spark's GetJsonObject over a bound
     * input slot, one instance per JSON key. */
@@ -156,41 +158,4 @@ object JsonExprs {
         if (u.toLong(s.lw)) java.lang.Long.valueOf(s.lw.value) else null
     }
   }
-}
-
-/** [[JsonExprs.jsonLongKey]] — nullable LONG; null when the key is
-  * absent, the document is malformed, or the extracted text does not
-  * cast to BIGINT (all exactly as `CAST(get_json_object(..) AS
-  * BIGINT)` decides them). */
-case class JsonLongKeyExpr(child: Expression, key: String)
-    extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = true
-
-  @transient private lazy val keyU = UTF8String.fromString(key)
-
-  override def nullSafeEval(j: Any): Any =
-    JsonExprs.longKey(j.asInstanceOf[UTF8String], keyU) match {
-      case null => null
-      case l: java.lang.Long => l.longValue()
-    }
-
-  // UnaryExpression.eval handles the null-child case; boxed-null from
-  // the kernel must ALSO surface as SQL NULL, which nullSafeEval's
-  // `case null => null` does in the interpreted path and the explicit
-  // isNull store does in codegen.
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val keyRef = ctx.addReferenceObj("jsonKey", keyU, classOf[UTF8String].getName)
-    val v = ctx.freshName("graftJsonV")
-    nullSafeCodeGen(ctx, ev, c => {
-      s"""
-         |java.lang.Long $v = graft.functions.JsonExprs.longKey($c, $keyRef);
-         |if ($v == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = $v.longValue(); }
-       """.stripMargin
-    })
-  }
-  override protected def withNewChildInternal(c: Expression): JsonLongKeyExpr =
-    copy(child = c)
-  override def prettyName: String = "json_long_key"
 }

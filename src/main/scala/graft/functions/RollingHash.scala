@@ -1,11 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.graftbridge.ColumnBridge
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Rabin–Karp rolling polynomial hash over a document's characters
@@ -70,18 +66,5 @@ object RollingHash {
     new GenericArrayData(rollingJvm(text.toString, window))
 
   def rollingHashes(text: Column, window: Int): Column =
-    ColumnBridge.column(RollingHashExpr(ColumnBridge.expression(text), window))
-}
-
-case class RollingHashExpr(child: Expression, window: Int)
-    extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullSafeEval(text: Any): Any =
-    RollingHash.rollingData(text.asInstanceOf[UTF8String], window)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.RollingHash.rollingData($c, $window);")
-  override protected def withNewChildInternal(c: Expression): RollingHashExpr =
-    copy(child = c)
-  override def prettyName: String = "rolling_hashes"
+    Kernel.call(this, "rollingData", Kernel.LongArray, Seq(text), Seq(window))
 }

@@ -31,14 +31,14 @@ object TextSetExprs {
     * (array<string>); 0 for an empty array — the Gopher-style
     * repetition signal's kernel. */
   def maxTokenCount(tk: Column): Column =
-    ColumnBridge.column(MaxTokenCountExpr(ColumnBridge.expression(tk)))
+    Kernel.call(this, "maxTokenCountData", LongType, Seq(tk))
 
   /** Σ count² over the distinct elements of `tk` (array<string>) —
     * the Simpson-diversity kernel: P(two sampled tokens equal) =
     * Σc²/n². 0 for an empty array. One hash-map pass per document,
     * same narrow codegen'd shape as [[maxTokenCount]]. */
   def sumSqTokenCounts(tk: Column): Column =
-    ColumnBridge.column(SumSqTokenCountsExpr(ColumnBridge.expression(tk)))
+    Kernel.call(this, "sumSqTokenCountsData", LongType, Seq(tk))
 
   /** Every unordered pair of DISTINCT values of a long-id array as
     * array<struct<doc_a, doc_b>> with doc_a < doc_b strictly (equal
@@ -49,10 +49,15 @@ object TextSetExprs {
     * transform(ids, b -> ...))))`) allocates n² structs through three
     * interpreted lambdas and discards half; this emits exactly C(n,2)
     * pairs in one codegen'd pass. Bucket sizes are df-/collision-
-    * bounded by construction, so the output array stays small. */
+    * bounded by construction, so the output array stays small. The
+    * explicit cast makes an int-element array read as longs in both
+    * codegen and interpreted eval. */
   def orderedPairs(ids: Column): Column =
-    ColumnBridge.column(OrderedPairsExpr(
-      ColumnBridge.expression(ids.cast("array<bigint>"))))
+    Kernel.call(this, "orderedPairsData", ArrayType(
+      StructType(Seq(
+        StructField("doc_a", LongType, nullable = false),
+        StructField("doc_b", LongType, nullable = false))),
+      containsNull = false), Seq(ids.cast("array<bigint>")))
 
   /** r14 fusion of dedupNgram's packed candidate-pair stage (guide §4:
     * kill per-row allocation in the hot path). Semantically identical
@@ -67,10 +72,11 @@ object TextSetExprs {
     * pair with pidA < pidB it emits
     * `((docA·32 + min(sa,31)) << 32) | (docB·32 + min(sb,31))`
     * iff max(sa,sb) ≤ 2·min(sa,sb), exactly the old pipeline's
-    * arithmetic. */
+    * arithmetic. Inputs are non-negative packed pids (dedupNgram's
+    * scan-time guard enforces the domain). */
   def packedCandPairs(ids: Column, packN: Long): Column =
-    ColumnBridge.column(PackedCandPairsExpr(
-      ColumnBridge.expression(ids.cast("array<bigint>")), packN))
+    Kernel.call(this, "packedCandPairsData", Kernel.LongArray,
+      Seq(ids.cast("array<bigint>")), Seq(packN))
 
   def packedCandPairsData(ids: ArrayData, packN: Long): ArrayData = {
     val n = ids.numElements()
@@ -193,45 +199,6 @@ object TextSetExprs {
   }
 }
 
-/** Input must already be array<bigint> — construct through
-  * [[TextSetExprs.orderedPairs]] or the SQL registration, which
-  * insert an explicit cast (an int-element array would otherwise
-  * fail `getLong` on the interpreted path while codegen widens:
-  * mode-dependent behavior on the SQL surface). */
-case class OrderedPairsExpr(child: Expression)
-    extends UnaryExpression {
-  override def dataType: DataType = ArrayType(
-    StructType(Seq(
-      StructField("doc_a", LongType, nullable = false),
-      StructField("doc_b", LongType, nullable = false))),
-    containsNull = false)
-  override def nullSafeEval(a: Any): Any =
-    TextSetExprs.orderedPairsData(a.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.TextSetExprs.orderedPairsData($c);")
-  override protected def withNewChildInternal(c: Expression): OrderedPairsExpr =
-    copy(child = c)
-  override def prettyName: String = "ordered_pairs"
-}
-
-/** [[TextSetExprs.packedCandPairs]] — input must already be
-  * array<bigint> of non-negative packed pids (the construction helper
-  * inserts the cast; dedupNgram's scan-time guard enforces the
-  * domain). */
-case class PackedCandPairsExpr(child: Expression, packN: Long)
-    extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullSafeEval(a: Any): Any =
-    TextSetExprs.packedCandPairsData(a.asInstanceOf[ArrayData], packN)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.TextSetExprs.packedCandPairsData($c, ${packN}L);")
-  override protected def withNewChildInternal(c: Expression): PackedCandPairsExpr =
-    copy(child = c)
-  override def prettyName: String = "packed_cand_pairs"
-}
-
 case class CountInSetExpr(child: Expression, markers: Seq[String])
     extends UnaryExpression {
   override def dataType: DataType = LongType
@@ -252,30 +219,4 @@ case class CountInSetExpr(child: Expression, markers: Seq[String])
   override protected def withNewChildInternal(c: Expression): CountInSetExpr =
     copy(child = c)
   override def prettyName: String = "count_in_set"
-}
-
-case class MaxTokenCountExpr(child: Expression)
-    extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def nullSafeEval(a: Any): Any =
-    TextSetExprs.maxTokenCountData(a.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.TextSetExprs.maxTokenCountData($c);")
-  override protected def withNewChildInternal(c: Expression): MaxTokenCountExpr =
-    copy(child = c)
-  override def prettyName: String = "max_token_count"
-}
-
-case class SumSqTokenCountsExpr(child: Expression)
-    extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def nullSafeEval(a: Any): Any =
-    TextSetExprs.sumSqTokenCountsData(a.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.TextSetExprs.sumSqTokenCountsData($c);")
-  override protected def withNewChildInternal(c: Expression): SumSqTokenCountsExpr =
-    copy(child = c)
-  override def prettyName: String = "sum_sq_token_counts"
 }

@@ -20,13 +20,16 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * loop per row. All are one-pass and evaluated inside the scan/join
   * projections — no change to plan shape.
   *
-  * Each expression implements `doGenCode` as a static call into the
-  * JVM kernel below. This matters beyond saving a virtual dispatch:
-  * `CollapseCodegenStages` refuses whole-stage codegen for ANY plan
-  * node containing a `CodegenFallback` expression, so a fallback here
-  * would knock the entire scan→project→join stage onto the slow
-  * iterator path. With real codegen the ANN/dedup stages stay inside
-  * one `WholeStageCodegen` span (asserted in PlanSpec).
+  * Each one generates a static call into the JVM kernel below —
+  * `norm2` and `sumMod` through [[Kernel.call]], `quantize` and
+  * `dotL` through their own classes (the element type read from the
+  * child; NULL on mismatched lengths). This matters beyond saving a
+  * virtual dispatch: `CollapseCodegenStages` refuses whole-stage
+  * codegen for ANY plan node containing a `CodegenFallback`
+  * expression, so a fallback here would knock the entire
+  * scan→project→join stage onto the slow iterator path. With real
+  * codegen the ANN/dedup stages stay inside one `WholeStageCodegen`
+  * span (asserted in PlanSpec).
   */
 object VectorExprs {
 
@@ -43,7 +46,7 @@ object VectorExprs {
 
   /** Integer squared norm of an array<long> column. */
   def norm2Long(a: Column): Column =
-    ColumnBridge.column(Norm2LongExpr(ColumnBridge.expression(a)))
+    Kernel.call(this, "norm2Data", LongType, Seq(a))
 
   // ---- codegen kernels (static forwarders; called from generated
   // ---- Java and from the interpreted eval paths) --------------------
@@ -89,20 +92,7 @@ object VectorExprs {
 
   /** Column form of [[sumModData]]. */
   def sumMod(a: Column, p: Long): Column =
-    ColumnBridge.column(SumModLongExpr(ColumnBridge.expression(a), p))
-}
-
-case class SumModLongExpr(child: Expression, p: Long)
-    extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def nullSafeEval(a: Any): Any =
-    VectorExprs.sumModData(a.asInstanceOf[ArrayData], p)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.VectorExprs.sumModData($c, ${p}L);")
-  override protected def withNewChildInternal(c: Expression): SumModLongExpr =
-    copy(child = c)
-  override def prettyName: String = "sum_mod_long"
+    Kernel.call(this, "sumModData", LongType, Seq(a), Seq(p))
 }
 
 case class QuantizeE3Expr(child: Expression)
@@ -143,17 +133,4 @@ case class DotLongExpr(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       l: Expression, r: Expression): DotLongExpr = copy(left = l, right = r)
   override def prettyName: String = "dot_long"
-}
-
-case class Norm2LongExpr(child: Expression)
-    extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def nullSafeEval(a: Any): Any =
-    VectorExprs.norm2Data(a.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.VectorExprs.norm2Data($c);")
-  override protected def withNewChildInternal(c: Expression): Norm2LongExpr =
-    copy(child = c)
-  override def prettyName: String = "norm2_long"
 }

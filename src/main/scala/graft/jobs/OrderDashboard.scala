@@ -39,26 +39,9 @@ object OrderDashboard {
   def run(spark: SparkSession, sourceDir: String, schema: StructType,
           store: KvStore, checkpoint: String,
           watermarkDelay: String = "1 day",
-          maxRestarts: Int = 3, restartDelayMs: Long = 1000): Int = {
-    def orders: DataFrame = Readers.fileStream(spark, sourceDir, schema)
-    def startQuery(df: DataFrame, keys: Seq[String], ckSubdir: String) =
-      df.writeStream
-        .option("checkpointLocation", s"$checkpoint/$ckSubdir")
-        .outputMode(OutputMode.Update)
-        .foreachBatch(Sinks.mergeUpsertWriter(store, keys,
-          Seq("total_num", "total_money_e2")))
-        .trigger(Trigger.AvailableNow())
-        .start()
-    val r1 = Restarts.fixedDelay(maxRestarts, restartDelayMs) { () =>
-      startQuery(StreamingJobs.orderTotals(orders, watermarkDelay),
-        Seq("order_day"), "totals")
-    }
-    val r2 = Restarts.fixedDelay(maxRestarts, restartDelayMs) { () =>
-      startQuery(StreamingJobs.orderDashboard(orders, watermarkDelay),
-        Seq("order_day", "province"), "province")
-    }
-    r1 + r2
-  }
+          maxRestarts: Int = 3, restartDelayMs: Long = 1000): Int =
+    drain(Readers.fileStream(spark, sourceDir, schema), store, checkpoint,
+      watermarkDelay, maxRestarts, restartDelayMs)
 
   /** The same dashboard fed by the GENERATED order stream — the
     * reference's own topology (custom `SourceFunction` → windowed
@@ -72,9 +55,16 @@ object OrderDashboard {
           maxOrders: Long = graft.sources.OrderGen.DefaultMaxOrders,
           rowsPerBatch: Long = 500L,
           watermarkDelay: String = "1 day",
-          maxRestarts: Int = 3, restartDelayMs: Long = 1000): Int = {
-    def orders: DataFrame =
-      Readers.orderStream(spark, maxOrders, rowsPerBatch)
+          maxRestarts: Int = 3, restartDelayMs: Long = 1000): Int =
+    drain(Readers.orderStream(spark, maxOrders, rowsPerBatch), store,
+      checkpoint, watermarkDelay, maxRestarts, restartDelayMs)
+
+  /** Both dashboard queries over `orders` (a streaming frame, read
+    * anew by each query), each drained to the store under its own
+    * checkpoint subdirectory with fixed-delay restarts. Returns the
+    * restarts used by both. */
+  private def drain(orders: => DataFrame, store: KvStore, checkpoint: String,
+      watermarkDelay: String, maxRestarts: Int, restartDelayMs: Long): Int = {
     def startQuery(df: DataFrame, keys: Seq[String], ckSubdir: String) =
       df.writeStream
         .option("checkpointLocation", s"$checkpoint/$ckSubdir")

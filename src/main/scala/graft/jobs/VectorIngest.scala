@@ -6,7 +6,6 @@ import graft.sinks.DocStore
 import graft.sources.Readers
 import graft.streaming.Restarts
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 import org.apache.spark.sql.types.StructType
 
@@ -20,8 +19,9 @@ import org.apache.spark.sql.types.StructType
   * neighbors never enter the index.
   *
   * Every stage is a SHARED definition with a gated batch operator:
-  *  - contamination scoring: `CurationOps.deconHits` — the exact #91
-  *    judgment (the #91b streaming gate uses the same stage);
+  *  - contamination scoring and readout: `CurationOps.deconHits` and
+  *    `deconBest` — the exact #91 judgment (the #91b streaming gate
+  *    uses the same two stages);
   *  - PQ coding: `SimilarityOps.encodeFrame` against the
   *    batch-trained codebooks — the #44d scorer's own encoder;
   *  - dedup-by-key: the [[DocStore]] is keyed by vec_id, so replayed
@@ -52,15 +52,9 @@ object VectorIngest {
     def writer(batch: DataFrame, batchId: Long): Unit = {
       val qv = CurationOps.quantVecs(batch)
       val hits = CurationOps.deconHits(qv, bench)
-      // quarantine: the #91 readout rule per contaminated vector
-      // (best = (cos desc, bench asc) — computed as a max over the
-      // per-vector hit rows, bounded by the benchmark size)
-      hits
-        .groupBy($"vec_id")
-        .agg(max(struct($"cos_e6", (-$"bench_id").as("nb"))).as("best"),
-          count(lit(1)).as("n_hits"))
-        .select($"vec_id", (-$"best.nb").as("best_bench"),
-          $"best.cos_e6".as("max_cos_e6"), $"n_hits")
+      // quarantine: the #91 readout rule per contaminated vector,
+      // the streaming gate's own readout over the same hits
+      CurationOps.deconBest(hits)
         .foreachPartition { rows: Iterator[Row] =>
           rows.foreach { r =>
             quarantine.index(String.valueOf(r.getLong(0)), Map(

@@ -441,6 +441,19 @@ object CurationOps {
       .filter($"cos_e6" >= EmbDecontCos)
   }
 
+  /** Per-vector best match over [[deconHits]] output: best bench =
+    * (cos desc, bench asc), taken as a max over (cos, −bench) structs
+    * — an associative merge, so streaming agg state per vector is
+    * O(1) — plus the hit count. ONE readout shared by the streaming
+    * gate and the vector ingest job's quarantine. */
+  private[graft] def deconBest(hits: DataFrame): DataFrame =
+    hits
+      .groupBy($"vec_id")
+      .agg(max(struct($"cos_e6", (-$"bench_id").as("nb"))).as("best"),
+        count(lit(1)).as("n_hits"))
+      .select($"vec_id", (-$"best.nb").as("best_bench"),
+        $"best.cos_e6".as("max_cos_e6"), $"n_hits")
+
   def deconEmbedding(spark: SparkSession, sfDir: String): DataFrame = {
     val corpus = quantVecs(Tables.embeddings(spark, sfDir))
       .filter($"vec_id" % EmbDecontMod =!= 0L)

@@ -159,7 +159,7 @@ object DedupOps {
 
   /** Two-pointer intersection count of two SORTED long arrays
     * (delegates to the shared kernel behind
-    * [[graft.functions.SortedIntersectCountExpr]]). */
+    * [[graft.functions.TextHash.sortedIntersectCount]]). */
   private[graft] def intersectCount(a: Array[Long], b: Array[Long]): Int =
     graft.functions.TextHash.intersectCountJvm(a, b)
 
@@ -1056,7 +1056,7 @@ object DedupOps {
 
   /** #40 SimHash: 60-bit signature; bit b is the sign of the
     * count-weighted sum of (+-1) over token-hash bit b — computed in
-    * one narrow per-row pass (graft.functions.SimhashExpr; per-bit
+    * one narrow per-row pass (graft.functions.TextHash.simhash; per-bit
     * sums are order-independent so it equals the explode+groupBy
     * form). No shuffle at any scale. */
   def simhash(spark: SparkSession, sfDir: String): DataFrame =
@@ -1263,7 +1263,7 @@ object DedupOps {
 
   /** #41b Containment / partial-overlap pairs via CONTENT-DEFINED
     * sampled rolling-hash windows: 16-char window hashes
-    * (graft.functions.RollingHashExpr, window = TextOps.RollWindow),
+    * (graft.functions.RollingHash.rollingHashes, window = TextOps.RollWindow),
     * keeping the windows whose hash ≡ 0 mod [[OverlapSample]].
     * Content-defined selection is alignment-independent: an identical
     * span selects the SAME windows in both documents wherever it

@@ -32,7 +32,7 @@ object LayoutOps {
     *
     * Both columns are min/max-normalized to `bits`-bit grid cells
     * (plan-time literals from one tiny agg), interleaved with the
-    * codegen'd [[graft.functions.ZValueExpr]], range-partitioned into
+    * codegen'd [[graft.functions.LayoutFunctions.zvalue]], range-partitioned into
     * `nFiles` z-slices and sorted within each — so every output file
     * covers a contiguous z range ≈ an axis-aligned tile, and its
     * row-group stats are tight in BOTH columns. The z column is

@@ -86,7 +86,7 @@ object TextOps {
   }
 
   /** #48b Rolling-window fingerprint summary per document: the
-    * Rabin–Karp window hashes (graft.functions.RollingHashExpr — O(1)
+    * Rabin–Karp window hashes (graft.functions.RollingHash.rollingHashes — O(1)
     * per step, narrow map) reduced to window count, min/max window
     * hash, and an order-independent mod-P sum — the per-doc signature
     * used for partial-overlap candidate generation. The DuckDB oracle

@@ -335,19 +335,16 @@ object StreamingJobs {
     * eval data" check run at ingest instead of over the whole corpus.
     * Same stateless scoring stage as the batch operator
     * (`CurationOps.deconHits` — one shared definition), then one
-    * update-mode agg keyed by vec_id; each vector arrives in exactly
+    * update-mode agg keyed by vec_id (`CurationOps.deconBest`, the
+    * vector ingest job's quarantine readout); each vector arrives in exactly
     * one micro-batch, so each contaminated vector emits exactly once
     * (the [[lmGate]] contract). The majority pick is a max over
     * (cos, −bench) structs — an associative merge, so the agg state
     * per key is O(1). StreamingSpec pins stream ≡ batch per vector. */
-  def deconGate(stream: DataFrame, bench: DataFrame): DataFrame =
-    graft.operators.CurationOps.deconHits(
-        graft.operators.CurationOps.quantVecs(stream), bench)
-      .groupBy($"vec_id")
-      .agg(max(struct($"cos_e6", (-$"bench_id").as("nb"))).as("best"),
-        count(lit(1)).as("n_hits"))
-      .select($"vec_id", (-$"best.nb").as("best_bench"),
-        $"best.cos_e6".as("max_cos_e6"), $"n_hits")
+  def deconGate(stream: DataFrame, bench: DataFrame): DataFrame = {
+    import graft.operators.CurationOps.{deconBest, deconHits, quantVecs}
+    deconBest(deconHits(quantVecs(stream), bench))
+  }
 
   /** Stream–stream interval join: each order pairs with payment
     * events for the same user within [0, `interval`] after the order

@@ -14,18 +14,29 @@ import org.apache.spark.sql.functions._
   *     interpreted projection;
   *  2. codegen and interpreted eval agree bit-for-bit — run the same
   *     frame under `NO_CODEGEN` and exact-compare.
+  *
+  * The frames are local `Seq`s, whose projections the optimizer would
+  * otherwise fold into a `LocalRelation` — evaluated interpreted in
+  * BOTH modes — so `ConvertToLocalRelation` is excluded here; and
+  * whole-stage codegen ignores the factory mode, so the `NO_CODEGEN`
+  * side also turns it off.
   */
 class CodegenSpec extends SparkTestBase {
 
   private val FactoryMode = "spark.sql.codegen.factoryMode"
 
   private def collectUnder(mode: String)(df: => DataFrame): Seq[String] = {
-    val prev = spark.conf.getOption(FactoryMode)
-    spark.conf.set(FactoryMode, mode)
+    val confs = Seq(
+      FactoryMode -> mode,
+      "spark.sql.optimizer.excludedRules" ->
+        "org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation",
+      "spark.sql.codegen.wholeStage" -> (mode != "NO_CODEGEN").toString)
+    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
     try df.collect().map(_.toString).toSeq.sorted
-    finally prev match {
-      case Some(v) => spark.conf.set(FactoryMode, v)
-      case None => spark.conf.unset(FactoryMode)
+    finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
     }
   }
 
@@ -38,6 +49,15 @@ class CodegenSpec extends SparkTestBase {
       (4L, ""),
       (5L, "emoji 😀 text and more tokens to hash")
     ).toDF("id", "text")
+    // jsonLongKey inputs: fast path, missing key, malformed document,
+    // slow path (a string value that casts), NULL document
+    val props = Seq(
+      (1L, """{"k": 87, "j": -3}"""),
+      (2L, """{"j": 5}"""),
+      (3L, """{"k": 4"""),
+      (4L, """{"k": "12"}"""),
+      (5L, null)
+    ).toDF("id", "props")
     val emb = Seq(
       (1L, Array(0.1f, -0.2f, 0.3f, 0.0005f)),
       (2L, Array(0.1f, -0.2f, 0.3f, -0.0005f)),
@@ -51,7 +71,7 @@ class CodegenSpec extends SparkTestBase {
       VectorFunctions.dotL(q, q).as("self_dot"),
       // mismatched lengths must yield NULL (zip_with pad semantics)
       VectorFunctions.dotL(q, slice(q, 1, 2)).as("mismatch_dot"))
-    val t = docs.select(
+    val t = docs.join(props, "id").select(
       col("id"),
       TextHash.gramHashes(col("text"), 3).as("grams"),
       TextHash.simhash(col("text"), 60).as("sh"),
@@ -66,11 +86,18 @@ class CodegenSpec extends SparkTestBase {
       graft.functions.TextSetExprs.maxTokenCount(
         graft.functions.TextFunctions.tokens(col("text"))).as("top_tok"),
       graft.functions.TextSetExprs.sumSqTokenCounts(
-        graft.functions.TextFunctions.tokens(col("text"))).as("ssq_tok"))
+        graft.functions.TextFunctions.tokens(col("text"))).as("ssq_tok"),
+      TextHash.chunkHashes(col("text"), 4, 2).as("chunks"),
+      TextHash.normText(col("text")).as("norm"),
+      graft.functions.JsonExprs.jsonLongKey(col("props"), "k").as("jk"))
     val tt = t.select(
       col("id"), col("grams"), col("sh"), col("sig"), col("rolling"),
       col("gram_strs"), col("sum_mod"), col("marker_hits"),
-      col("top_tok"), col("ssq_tok"),
+      col("top_tok"), col("ssq_tok"), col("chunks"), col("norm"), col("jk"),
+      // packed pids = doc·8 + size: one size-incompatible pair (2 vs 5)
+      graft.functions.TextSetExprs.packedCandPairs(
+        array(lit(9L), col("id") * 8 + 2, lit(21L), col("id") * 8 + 5),
+        8L).as("packed"),
       TextHash.sortedIntersectCount(
         sort_array(col("grams")), sort_array(col("grams"))).as("self_common"),
       TextHash.dfPrefix(sort_array(col("grams")),

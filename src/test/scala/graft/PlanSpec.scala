@@ -145,13 +145,13 @@ class PlanSpec extends SparkTestBase {
     // contract in CoreOps.jsonExtract); if a Spark upgrade re-enables
     // pushing it through, the extraction appears twice — once inlined
     // inside the pushed filter (VERDICT r1 #4's 2× parse). r14: the
-    // extraction is the narrow json_long_key kernel (≡
+    // extraction is the narrow JsonExprs.longKey kernel (≡
     // CAST(get_json_object AS BIGINT)); the full-struct from_json must
     // not reappear.
     val plan = fullPlanString("q_json_extract")
-    assert(!plan.contains("from_json"), "must use json_long_key, not from_json")
-    val parses = "json_long_key".r.findAllIn(plan).size
-    assert(parses == 1, s"expected exactly 1 json_long_key in the plan, saw $parses")
+    assert(!plan.contains("from_json"), "must use JsonExprs.longKey, not from_json")
+    val parses = "longKey\\(".r.findAllIn(plan).size
+    assert(parses == 1, s"expected exactly 1 longKey( call in the plan, saw $parses")
   }
 
   test("native hash expressions stay inside whole-stage codegen") {
@@ -161,7 +161,7 @@ class PlanSpec extends SparkTestBase {
     // ship real doGenCode, keeping the scan→project stage fused.
     for ((q, marker) <- Seq(
         "q_minhash_band" -> "minhash_sig",
-        "q_simhash" -> "simhash",
+        "q_simhash" -> "simhashData",
         "q_dedup_ngram" -> "df_prefix")) {
       val df = SparkEntry.queries(q)(spark, sf)
       // AQE only inserts WSCG into the FINAL plan at execution; collect()
@@ -199,7 +199,7 @@ class PlanSpec extends SparkTestBase {
     // INTERPRETED (~16 µs/element — NOTES.md) and always print as
     // `lambdafunction(...)` in the plan; the text family must stay
     // fully codegen'd (q_rolling_fp's mod-P fold is now the native
-    // SumModLongExpr, so no exceptions remain).
+    // VectorExprs.sumMod kernel, so no exceptions remain).
     for (q <- Seq("q_text_quality", "q_text_langid", "q_token_count",
         "q_text_pii", "q_curation", "q_text_repetition", "q_ngram_topk",
         "q_lang_mismatch", "q_rolling_fp", "q_fingerprint",
