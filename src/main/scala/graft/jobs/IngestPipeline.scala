@@ -33,7 +33,8 @@ import org.apache.spark.sql.types.StructType
   *    are idempotent under micro-batch replay, so the composition is
   *    exactly-once end to end.
   *
-  * Two checkpointed queries share the source (the dashboard pattern):
+  * Two checkpointed queries share the source (one query would need
+  * the store to add each batch's funnel counts, guarded by batch id):
   *
   *  1. "corpus": flags → gate filter → redact → per-batch collapse to
   *     one min-doc_id row per content hash → insert-if-absent into

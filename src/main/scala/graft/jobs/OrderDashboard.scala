@@ -4,6 +4,7 @@ import graft.sinks.{KvStore, Sinks}
 import graft.sources.Readers
 import graft.streaming.{Restarts, StreamingJobs}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 import org.apache.spark.sql.types.StructType
 
@@ -17,19 +18,18 @@ import org.apache.spark.sql.types.StructType
   *  - source: Kafka in production ([[Readers.kafkaSource]]); any
   *    directory of order files for backfill/testing
   *    ([[Readers.fileStream]]) — same downstream plan either way;
-  *  - transforms: [[StreamingJobs.orderTotals]] (per-day site-wide
-  *    totals, the reference's TotalDataFun) and
-  *    [[StreamingJobs.orderDashboard]] (per-day per-province, its
-  *    GroupDataFuc) — watermarked daily windows, integer money;
-  *  - sink: [[Sinks.mergeUpsertWriter]] — idempotent upsert, so
-  *    checkpointed replay is exactly-once;
-  *  - resilience: [[Restarts.fixedDelay]] around each checkpointed
+  *  - transform: [[StreamingJobs.orderDashboard]] — one watermarked
+  *    daily-window aggregation with two grouping sets: per-day
+  *    per-province totals (the reference's GroupDataFuc) and per-day
+  *    site-wide totals (its TotalDataFun), integer money;
+  *  - sink: [[Sinks.mergeUpsert]], once per grouping set —
+  *    idempotent upsert, so checkpointed replay is exactly-once;
+  *  - resilience: [[Restarts.fixedDelay]] around the one checkpointed
   *    query (the reference's RestartStrategies).
   *
-  * At 100 TB/day: the only shuffles are the two aggregations (keys =
-  * days and days × provinces — tiny); state is bounded by the
-  * watermark; the sinks write O(keys) rows per trigger from
-  * executors.
+  * At 100 TB/day: the only shuffle is the one aggregation (keys =
+  * days × (provinces + 1) — tiny); state is bounded by the watermark;
+  * the sinks write O(keys) rows per trigger from executors.
   */
 object OrderDashboard {
 
@@ -59,28 +59,34 @@ object OrderDashboard {
     drain(Readers.orderStream(spark, maxOrders, rowsPerBatch), store,
       checkpoint, watermarkDelay, maxRestarts, restartDelayMs)
 
-  /** Both dashboard queries over `orders` (a streaming frame, read
-    * anew by each query), each drained to the store under its own
-    * checkpoint subdirectory with fixed-delay restarts. Returns the
-    * restarts used by both. */
+  /** The dashboard query over `orders`, drained to the store under the
+    * `dashboard` checkpoint subdirectory with fixed-delay restarts.
+    * Returns the restarts used. */
   private def drain(orders: => DataFrame, store: KvStore, checkpoint: String,
-      watermarkDelay: String, maxRestarts: Int, restartDelayMs: Long): Int = {
-    def startQuery(df: DataFrame, keys: Seq[String], ckSubdir: String) =
-      df.writeStream
-        .option("checkpointLocation", s"$checkpoint/$ckSubdir")
+      watermarkDelay: String, maxRestarts: Int, restartDelayMs: Long): Int =
+    Restarts.fixedDelay(maxRestarts, restartDelayMs) { () =>
+      StreamingJobs.orderDashboard(orders, watermarkDelay).writeStream
+        .option("checkpointLocation", s"$checkpoint/dashboard")
         .outputMode(OutputMode.Update)
-        .foreachBatch(Sinks.mergeUpsertWriter(store, keys,
-          Seq("total_num", "total_money_e2")))
+        .foreachBatch(upsertWriter(store))
         .trigger(Trigger.AvailableNow())
         .start()
-    val r1 = Restarts.fixedDelay(maxRestarts, restartDelayMs) { () =>
-      startQuery(StreamingJobs.orderTotals(orders, watermarkDelay),
-        Seq("order_day"), "totals")
     }
-    val r2 = Restarts.fixedDelay(maxRestarts, restartDelayMs) { () =>
-      startQuery(StreamingJobs.orderDashboard(orders, watermarkDelay),
-        Seq("order_day", "province"), "province")
+
+  /** foreachBatch sink for [[StreamingJobs.orderDashboard]]: routes
+    * each row by `grouping_id` — site-wide totals under "day",
+    * province totals under "day|province" (a NULL province keeps its
+    * own "day|null" key). The batch is persisted so its stateful plan
+    * runs once for both upserts. */
+  private[graft] def upsertWriter(store: KvStore): (DataFrame, Long) => Unit =
+    (batch, _) => {
+      val values = Seq("total_num", "total_money_e2")
+      batch.persist()
+      try {
+        Sinks.mergeUpsert(store, Seq("order_day"), values)(
+          batch.filter(col("grouping_id") === 1))
+        Sinks.mergeUpsert(store, Seq("order_day", "province"), values)(
+          batch.filter(col("grouping_id") === 0))
+      } finally batch.unpersist()
     }
-    r1 + r2
-  }
 }

@@ -108,9 +108,6 @@ object Sinks {
     }
   }
 
-  def docIndexWriter(store: DocStore, idCol: String): (DataFrame, Long) => Unit =
-    (batch, _) => docIndex(store, idCol)(batch)
-
   /** JDBC-upsert-style merge keyed by several columns (reference
     * OrderAnalysy.scala:564 GroupOrderMysqlSink upserts by
     * (day, province)). Values joined with '|' — replace with a real

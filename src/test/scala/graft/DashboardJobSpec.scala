@@ -38,6 +38,38 @@ class DashboardJobSpec extends SparkTestBase {
     StoreRegistry.clear("dashjob")
   }
 
+  test("order dashboard drops orders behind the watermark and keeps ones inside it") {
+    val src = tmpDir("dashlatesrc")
+    val ck = tmpDir("dashlateck")
+    val store = StoreRegistry.kv("dashlate")
+    val day = 86400L
+    def t(s: Long) = new Timestamp(s * 1000L)
+    def land(rows: (Timestamp, String, Double)*): Unit =
+      rows.toDF("ts", "province", "amount").write.mode("append").parquet(src)
+
+    land((t(100), "zhejiang", 10.5), (t(200), "shanghai", 2.0))
+    val schema = spark.read.parquet(src).schema
+    OrderDashboard.run(spark, src, schema, store, ck)
+    land((t(5 * day + 100), "zhejiang", 3.0))
+    OrderDashboard.run(spark, src, schema, store, ck)
+    val day0 = "1970-01-01 00:00:00.0"
+    val day5 = "1970-01-06 00:00:00.0"
+    assert(store.get(day0).contains("2|1250"))
+    assert(store.get(s"$day5|zhejiang").contains("1|300"))
+
+    // day 0 is behind the 1-day watermark (day 5 minus one day): the
+    // late order changes neither the day-0 total nor its province row,
+    // while an out-of-order one inside the watermark updates both of
+    // its rows
+    land((t(300), "zhejiang", 1.0), (t(5 * day + 50), "zhejiang", 0.5))
+    OrderDashboard.run(spark, src, schema, store, ck)
+    assert(store.get(day0).contains("2|1250"))
+    assert(store.get(s"$day0|zhejiang").contains("1|1050"))
+    assert(store.get(day5).contains("2|350"))
+    assert(store.get(s"$day5|zhejiang").contains("2|350"))
+    StoreRegistry.clear("dashlate")
+  }
+
   test("generated-source dashboard equals a batch aggregation of the same rows") {
     // the reference's own topology end to end: custom source
     // (OrderAnalysy.scala:338 OrderSource, here the DataSourceV2

@@ -1,5 +1,6 @@
 package graft
 
+import graft.jobs.OrderDashboard
 import graft.sinks.{Sinks, StoreRegistry}
 import graft.streaming.StreamingJobs
 import org.apache.spark.sql.functions.col
@@ -36,25 +37,39 @@ class SinksSpec extends SparkTestBase {
   test("streaming order dashboard upserts per (day, province) exactly-once (OrderAnalysy analog)") {
     implicit val sqlCtx = spark.sqlContext
     val store = StoreRegistry.kv("dash")
-    val in = MemoryStream[(Timestamp, String, Double)]
+    val in = MemoryStream[(Timestamp, Option[String], Double)]
     val orders = in.toDF().toDF("ts", "province", "amount")
     val q = StreamingJobs.orderDashboard(orders, "1 hour")
       .writeStream
       .outputMode(OutputMode.Update)
-      .foreachBatch(Sinks.mergeUpsertWriter(store,
-        Seq("order_day", "province"), Seq("total_num", "total_money_e2")))
+      .foreachBatch(OrderDashboard.upsertWriter(store))
       .start()
+    val day = "1970-01-01 00:00:00.0"
+    val provinces = Seq("zhejiang", "shanghai", "null")
+    // the day total row equals the sum of its province rows
+    def assertDayIsSumOfProvinces(): Unit = {
+      val parts = provinces.flatMap(p => store.get(s"$day|$p"))
+        .map(_.split('|').map(_.toLong))
+      assert(store.get(day).contains(
+        s"${parts.map(_(0)).sum}|${parts.map(_(1)).sum}"), store.get(day))
+    }
     try {
       def t(s: Long) = new Timestamp(s * 1000L)
-      in.addData((t(100), "zhejiang", 10.5), (t(200), "zhejiang", 1.0),
-        (t(300), "shanghai", 2.0))
+      in.addData((t(100), Some("zhejiang"), 10.5), (t(200), Some("zhejiang"), 1.0),
+        (t(300), Some("shanghai"), 2.0))
       q.processAllAvailable()
-      // update mode re-upserts the same keys as totals grow
-      in.addData((t(400), "zhejiang", 0.5))
+      assertDayIsSumOfProvinces()
+      // update mode re-upserts the same keys as totals grow; an order
+      // with no province keeps its own "day|null" key and still counts
+      // in the day total
+      in.addData((t(400), Some("zhejiang"), 0.5), (t(500), None, 4.0))
       q.processAllAvailable()
-      assert(store.size == 2)
-      assert(store.get("1970-01-01 00:00:00.0|zhejiang").contains("3|1200"))
-      assert(store.get("1970-01-01 00:00:00.0|shanghai").contains("1|200"))
+      assertDayIsSumOfProvinces()
+      assert(store.size == 4)
+      assert(store.get(s"$day|zhejiang").contains("3|1200"))
+      assert(store.get(s"$day|shanghai").contains("1|200"))
+      assert(store.get(s"$day|null").contains("1|400"))
+      assert(store.get(day).contains("5|1800"))
     } finally q.stop()
     StoreRegistry.clear("dash")
   }
