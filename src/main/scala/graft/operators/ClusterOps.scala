@@ -179,12 +179,12 @@ object ClusterOps {
     * round's joins roughly SQUARE the inherited sizeInBytes, so the
     * BigInt estimate doubles its bit length per round until stats
     * estimation overflows ("BigInteger would overflow supported
-    * range"; tools.ReproStats reproduces it on 100 rows —
-    * q_embed_cluster hit it live at sf100 under the old
-    * min-propagation loop near round 28). A period of 4 bounds growth
-    * at ~1k bits while costing one small parquet round trip per 4
-    * rounds — and star contraction takes O(log n) rounds total, so at
-    * most a handful of resets ever run. */
+    * range"; ClusterSpec's "propagation survives a plan-stats reset
+    * boundary" case guards it — q_embed_cluster hit it live at sf100
+    * under the old min-propagation loop near round 28). A period of 4
+    * bounds growth at ~1k bits while costing one small parquet round
+    * trip per 4 rounds — and star contraction takes O(log n) rounds
+    * total, so at most a handful of resets ever run. */
   val CcStatsResetRounds = 4
 
   /** Distributed path: alternating LARGE-STAR / SMALL-STAR

@@ -368,47 +368,38 @@ object CoreOps {
   private[graft] val FunnelSteps = Seq("view", "click", "purchase")
 
   /** Furthest funnel stage reachable from a buffered (stepIdx, µs)
-    * multiset, by the greedy earliest-entry chain — the ONE JVM
-    * definition [[graft.streaming.StreamingJobs.funnelGate]] executes
-    * and PropertySpec proves optimal (greedy earliest entry reaches
-    * stage k iff ANY strictly-increasing chain through steps 0..k−1
-    * exists). With a finite `gapUs`, each step must land within
-    * gapUs of the previous step's entry — the "conversion window"
-    * semantic of product-analytics funnels. Greedy earliest is the
-    * DEFINITION there, not an optimization: first-touch-then-window
-    * is what the funnel means (a user who converted off a later
-    * view did not convert off their first interest). */
-  /** [[chainStage]] (no conversion window) resumable from a partial
-    * state (stage0, after0) — the TTL-fold kernel of
-    * [[graft.streaming.StreamingJobs.funnelGate]]. Split-equivalence:
-    * for event sets P, L with every P time < every L time,
-    * chainStateFrom(P ++ L, 0, -inf) == chainStateFrom(L,
-    * chainStateFrom(P, 0, -inf)) — each level the P-scan reached took
-    * the level's minimum eligible time over P, which is below every L
-    * time and hence the minimum over P ++ L; the first level the
-    * P-scan failed has no eligible P event at all, so the union scan
-    * continues on L alone, which is exactly the resumed scan. */
+    * multiset, by the greedy earliest-entry chain — the definition
+    * PropertySpec proves optimal (greedy earliest entry reaches stage
+    * k iff ANY strictly-increasing chain through steps 0..k−1 exists).
+    * With a finite `gapUs`, each step must land within gapUs of the
+    * previous step's entry — the "conversion window" semantic of
+    * product-analytics funnels. Greedy earliest is the DEFINITION
+    * there, not an optimization: first-touch-then-window is what the
+    * funnel means (a user who converted off a later view did not
+    * convert off their first interest). */
+  private[graft] def chainStage(evs: Seq[(Int, Long)], nSteps: Int,
+      gapUs: Long = Long.MaxValue): Long =
+    chainStateFrom(evs, nSteps, 0L, Long.MinValue, gapUs)._1
+
+  /** The greedy chain of [[chainStage]] resumed from a partial state
+    * (stage0, after0 = entry time of stage0), returning the state it
+    * reaches — the TTL-fold kernel of
+    * [[graft.streaming.StreamingJobs.funnelGate]] (with no conversion
+    * window). Split-equivalence: for event sets P, L with every P time
+    * <= every L time, chainStateFrom(P ++ L, 0, -inf) ==
+    * chainStateFrom(L, chainStateFrom(P, 0, -inf)) — each level the
+    * P-scan reached took the level's minimum eligible time over P,
+    * which is at most every L time and hence the minimum over P ++ L;
+    * the first level the P-scan failed has no eligible P event at
+    * all, so the union scan continues on L alone (a later level's P
+    * times are not above the L entry time), which is exactly the
+    * resumed scan. */
   private[graft] def chainStateFrom(evs: Seq[(Int, Long)], nSteps: Int,
-      stage0: Long, after0: Long): (Long, Long) = {
+      stage0: Long, after0: Long, gapUs: Long): (Long, Long) = {
     var after = after0
     var stage = stage0
     var open = true
     (stage0.toInt until nSteps).foreach { k =>
-      if (open) {
-        val ts = evs.collect { case (s, us) if s == k && us > after => us }
-        if (ts.isEmpty) open = false
-        else { after = ts.min; stage = k + 1L }
-      }
-    }
-    (stage, after)
-  }
-
-  private[graft] def chainStage(evs: Seq[(Int, Long)], nSteps: Int,
-      gapUs: Long = Long.MaxValue): Long = {
-    var after = Long.MinValue
-    var stage = 0L
-    var open = true
-    (0 until nSteps).foreach { k =>
       if (open) {
         // saturating upper bound: MinValue + MaxValue stays a bound
         val hi = if (after == Long.MinValue || gapUs == Long.MaxValue)
@@ -420,7 +411,7 @@ object CoreOps {
         else { after = ts.min; stage = k + 1L }
       }
     }
-    stage
+    (stage, after)
   }
 
   /** Conversion window of [[eventFunnelWindow]]: each step must

@@ -1,9 +1,10 @@
 package graft.streaming
 
 import graft.ColumnInterpolator
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode}
+import scala.reflect.runtime.universe.TypeTag
 
 /** Reads the engine's own event-time watermark for a running query
   * SYNCHRONOUSLY (the Flink analog: the operator reads ITS watermark,
@@ -484,263 +485,195 @@ object StreamingJobs {
       books: graft.operators.SimilarityOps.PqBooks): DataFrame =
     graft.operators.SimilarityOps.encodeFrame(stream, books)
 
-  /** Per-user state for [[funnelGate]]: the already-FOLDED chain
-    * state (stage reached + entry time of that stage) over events
-    * that aged past the TTL horizon, plus the live CEP-style
-    * partial-match buffer of (step index, epoch-µs) still inside the
-    * horizon — the same frozen-prefix + live-buffer discipline as
-    * [[TransState]]. */
-  case class FunnelState(frozenStage: Long, frozenAfter: Long,
-      buffer: Seq[(Int, Long)])
+  /** Per-key state of [[ttlFoldGate]]: the FROZEN fold of the events
+    * that aged past the TTL horizon, plus the live buffer of the rest,
+    * sorted by event time (once a prefix has folded, its first
+    * element is the boundary anchor if the gate keeps one). */
+  private[graft] case class TtlState[F, E](frozen: F, buffer: Seq[E])
+
+  /** What one CEP gate supplies to [[ttlFoldGate]]: its element's
+    * event time and sort order, the empty frozen value, the fold of a
+    * time-sorted run of elements into frozen state, the readout of a
+    * key's answer from frozen state, and whether a folded prefix keeps
+    * its last element as the boundary ANCHOR (the first live element,
+    * so a gap or edge that crosses the fold is still computed live and
+    * a late in-horizon arrival can still split it). `fold` must split:
+    * folding a sorted run in two pieces — behind the anchor, if kept —
+    * equals folding it whole; PropertySpec checks this at every cut. */
+  private[graft] case class TtlFold[K, E, F, U](empty: F, anchored: Boolean,
+      time: E => Long, order: Ordering[E],
+      fold: (F, Seq[E]) => F, readout: (K, F) => U) {
+    val keep: Int = if (anchored) 1 else 0
+
+    /** Folds the first `n` elements of `s.buffer` into the frozen
+      * value; the rest, behind the anchor if kept, stays live. */
+    def foldPrefix(s: TtlState[F, E], n: Int): TtlState[F, E] =
+      if (n <= 0) s
+      else TtlState(fold(s.frozen, s.buffer.take(n)), s.buffer.drop(n - keep))
+
+    /** The key's answer over everything it has seen. */
+    def answer(key: K, s: TtlState[F, E]): U = readout(key, fold(s.frozen, s.buffer))
+  }
+
+  /** The one state machine behind the event-time CEP gates
+    * ([[funnelGate]], [[gapGate]], [[transitionGate]]; the #29f
+    * event-time-TTL pattern). Per key, a CEP-style buffer of the
+    * events still inside the TTL horizon, re-sorted and re-answered on
+    * every arrival, so late/out-of-order arrivals WITHIN the horizon
+    * are exact. Update-mode rows: the last row per key is the answer
+    * at any point.
+    *
+    * Horizon: events more than `ttlUs` behind the key's max event
+    * time FOLD into the frozen value and leave the buffer, so state is
+    * O(events per TTL window), not O(key history). The fold is
+    * LOSSLESS for event-time-ordered arrival (the split property of
+    * [[TtlFold]]); only a late arrival older than the horizon lands
+    * approximate — the same horizon contract as [[streamingNearDup]].
+    *
+    * DEAD keys leave the store via a two-stage event-time timeout, so
+    * the store tracks LIVE keys, not distinct-ever keys: a key silent
+    * `ttl` past its max event time (in watermark time) folds its
+    * buffer down to the anchor, or to nothing — the O(1) remnant a
+    * reappearing key resumes from LOSSLESSLY — and after a further
+    * `ttl` of silence the remnant is removed outright (by then any old
+    * history sits ≥ 2·ttl beyond the horizon, squarely under the
+    * approximation contract). The watermark on `gate_ts =
+    * timestamp_micros(us)` drives those timeouts, and the engine drops
+    * a row at or behind it before the state function sees it; see
+    * [[GateWatermarkDelay]]. `cols` are the input columns of the row
+    * type `R`, which `key` and `elem` split. */
+  private def ttlFoldGate[R <: Product : TypeTag, K: Encoder, E: TypeTag, F: TypeTag, U: Encoder](
+      events: DataFrame, cols: Seq[Column], ttlUs: Long, delay: String,
+      key: R => K, elem: R => E, g: TtlFold[K, E, F, U]): Dataset[U] = {
+    val spark = events.sparkSession
+    import spark.implicits.newProductEncoder
+    val ttlMs = math.max(1L, ttlUs / 1000L)
+    events
+      .withColumn("gate_ts", timestamp_micros($"us"))
+      .withWatermark("gate_ts", delay)
+      // gate_ts rides along untouched: the engine requires the
+      // watermarked column in the stateful operator's child output
+      .select(cols :+ $"gate_ts": _*)
+      .as[R]
+      .groupByKey(key)
+      .mapGroupsWithState(GroupStateTimeout.EventTimeTimeout) {
+        (k: K, batch: Iterator[R], state: GroupState[TtlState[F, E]]) =>
+          if (state.hasTimedOut) {
+            val prev = state.get
+            if (prev.buffer.size > g.keep) {
+              // stage 1: fold the buffer down to its anchor (or to nothing)
+              val next = g.foldPrefix(prev, prev.buffer.size)
+              state.update(next)
+              state.setTimeoutTimestamp(state.getCurrentWatermarkMs() + ttlMs)
+              g.answer(k, next)
+            } else {
+              // stage 2: a further ttl of silence — drop the key
+              state.remove()
+              g.answer(k, prev)
+            }
+          } else {
+            val prev = state.getOption.getOrElse(TtlState(g.empty, Nil))
+            val sorted = (prev.buffer ++ batch.map(elem)).sorted(g.order)
+            val last = g.time(sorted.last)
+            // first retained index; everything before it folds (> 0
+            // guards both the all-live case and ttl overflow to < 0)
+            val cut = sorted.indexWhere(g.time(_) >= last - ttlUs)
+            val next = g.foldPrefix(TtlState(prev.frozen, sorted), cut)
+            state.update(next)
+            state.setTimeoutTimestamp(math.max(
+              last / 1000L + ttlMs, state.getCurrentWatermarkMs() + 1L))
+            g.answer(k, next)
+          }
+      }
+  }
+
+  /** Input rows of [[funnelGate]] and [[gapGate]] (user_id, event_type,
+    * us, gate_ts) and of [[transitionGate]] (user_id, us, event_id,
+    * event_type, gate_ts). */
+  private type TypedEvent = (Long, String, Long, java.sql.Timestamp)
+  private type TypedTransition = (Long, Long, Long, String, java.sql.Timestamp)
+
+  /** [[funnelGate]]'s fold: (step index, µs) events into the chain
+    * state (stage reached, entry time of that stage). No anchor: the
+    * frozen pair already resumes the chain (CoreOps.chainStateFrom
+    * documents the split-equivalence proof). */
+  private[graft] val FunnelFold = TtlFold[Long, (Int, Long), (Long, Long), (Long, Long)](
+    empty = (0L, Long.MinValue), anchored = false,
+    time = _._2, order = Ordering.by((e: (Int, Long)) => e._2),
+    fold = (s, evs) => graft.operators.CoreOps.chainStateFrom(
+      evs, graft.operators.CoreOps.FunnelSteps.length, s._1, s._2, Long.MaxValue),
+    readout = (user, s) => (user, s._1))
 
   /** Streaming form of CoreOps.eventFunnel (#103b): per user, the
     * furthest view → click → purchase stage reachable from the events
     * seen SO FAR, re-evaluated on every arrival — the live funnel
     * dashboard. Exactly the batch operator's greedy earliest-entry
-    * chain over the buffered multiset, so late/out-of-order arrivals
-    * WITHIN the TTL horizon are handled exactly: a late 'view' that
-    * lowers t1 re-opens earlier clicks, which buffered state can
-    * honor and a running-min could not. Update-mode rows are MONOTONE
-    * per user (growing the event set can only extend the chain), so
-    * the last row per user is the answer at any point.
+    * chain over the buffered multiset, so a late 'view' that lowers
+    * t1 re-opens earlier clicks, which buffered state can honor and a
+    * running-min could not. Rows are MONOTONE per user (growing the
+    * event set can only extend the chain).
     *
-    * State is O(events per TTL window), not O(user history): events
-    * that age more than `ttlUs` behind the user's max event time FOLD
-    * into a frozen (stage, entry-time) chain state and leave the
-    * buffer (CoreOps.chainStateFrom documents the split-equivalence
-    * proof), the #29f event-time-TTL pattern [[transitionGate]]
-    * already carries. The fold is LOSSLESS for event-time-ordered
-    * arrival; only a late arrival older than the horizon lands
-    * approximate — the same horizon contract as [[streamingNearDup]].
-    *
-    * DEAD keys leave the store (r10 judge) via a two-stage
-    * event-time timeout, so the store tracks LIVE keys, not
-    * distinct-ever keys: a key silent `ttl` past its max event time
-    * (in watermark time) folds its whole buffer into the frozen
-    * chain state — the O(1) remnant a reappearing key resumes from
-    * LOSSLESSLY — and after a further `ttl` of silence the remnant
-    * is removed outright (by then any old history sits ≥ 2·ttl
-    * beyond the horizon, squarely under the approximation contract).
-    * The watermark column is projected away before the stateful
-    * operator, so it drives timeouts only; no row is ever dropped as
-    * late. Input contract: (user_id, event_type, us) — epoch-µs like
-    * the batch operator. */
+    * Events aging past the TTL horizon fold into a frozen (stage,
+    * entry-time) chain state with no anchor, and dead keys leave in
+    * two stages, both as [[ttlFoldGate]] describes ([[FunnelFold]]).
+    * Input contract: (user_id, event_type, us) — epoch-µs like the
+    * batch operator. */
   def funnelGate(events: DataFrame,
       ttlUs: Long = TransitionTtlUs,
       delay: String = GateWatermarkDelay): Dataset[(Long, Long)] = {
     val spark = events.sparkSession
     import spark.implicits.{newLongEncoder, newProductEncoder}
     val steps = graft.operators.CoreOps.FunnelSteps
-    val nSteps = steps.length
-    val ttlMs = math.max(1L, ttlUs / 1000L)
-    val typed = events
-      .withColumn("gate_ts", timestamp_micros($"us"))
-      .withWatermark("gate_ts", delay)
-      // gate_ts rides along untouched: the engine requires the
-      // watermarked column in the stateful operator's child output
-      .select($"user_id", $"event_type", $"us", $"gate_ts")
-      .filter($"event_type".isin(steps: _*))
-      .as[(Long, String, Long, java.sql.Timestamp)]
-    typed.groupByKey(_._1)
-      .mapGroupsWithState(GroupStateTimeout.EventTimeTimeout) {
-        (user: Long, batch: Iterator[(Long, String, Long, java.sql.Timestamp)],
-         state: GroupState[FunnelState]) =>
-          if (state.hasTimedOut) {
-            val prev = state.get
-            if (prev.buffer.nonEmpty) {
-              // stage 1: fold the whole buffer into the frozen chain
-              // state (the lossless anchor) and keep only the remnant
-              val (fs, fa) = graft.operators.CoreOps.chainStateFrom(
-                prev.buffer, nSteps, prev.frozenStage, prev.frozenAfter)
-              state.update(FunnelState(fs, fa, Nil))
-              state.setTimeoutTimestamp(state.getCurrentWatermarkMs() + ttlMs)
-              (user, fs)
-            } else {
-              // stage 2: a further ttl of silence — drop the key
-              val fs = prev.frozenStage
-              state.remove()
-              (user, fs)
-            }
-          } else {
-            val prev = state.getOption
-              .getOrElse(FunnelState(0L, Long.MinValue, Nil))
-            val sorted = (prev.buffer ++
-              batch.map(e => (steps.indexOf(e._2), e._3))).sortBy(_._2)
-            val horizon = sorted.last._2 - ttlUs
-            // first retained index; everything before it folds (> 0
-            // guards both the all-live case and ttl overflow to < 0)
-            val cut = sorted.indexWhere(_._2 >= horizon)
-            val (fs, fa, buffer) =
-              if (cut <= 0) (prev.frozenStage, prev.frozenAfter, sorted)
-              else {
-                val (s, a) = graft.operators.CoreOps.chainStateFrom(
-                  sorted.take(cut), nSteps, prev.frozenStage, prev.frozenAfter)
-                (s, a, sorted.drop(cut))
-              }
-            state.update(FunnelState(fs, fa, buffer))
-            state.setTimeoutTimestamp(math.max(
-              sorted.last._2 / 1000L + ttlMs,
-              state.getCurrentWatermarkMs() + 1L))
-            (user, graft.operators.CoreOps
-              .chainStateFrom(buffer, nSteps, fs, fa)._1)
-          }
-      }
+    // filtering before the watermark plans the same: the optimizer
+    // pushes a filter on other columns below EventTimeWatermark
+    ttlFoldGate(events.filter($"event_type".isin(steps: _*)),
+      Seq($"user_id", $"event_type", $"us"), ttlUs, delay,
+      (r: TypedEvent) => r._1, (r: TypedEvent) => (steps.indexOf(r._2), r._3), FunnelFold)
   }
 
-  /** Per-(user, type) state for [[gapGate]]: already-FOLDED gap
-    * statistics (count / min / max / SUM — sum, not mean, so the
-    * merged integer mean divides the exact global sum) over gaps
-    * whose BOTH endpoints aged past the TTL horizon, plus the live
-    * buffer of in-horizon timestamps. The buffer's first element is
-    * the expired prefix's last timestamp (the boundary ANCHOR), so
-    * the frozen→live gap is still computed live and re-splittable by
-    * in-horizon late arrivals — the same anchor discipline as
-    * [[TransState]]. */
-  case class GapState(frozenN: Long, frozenMin: Long, frozenMax: Long,
-      frozenSum: Long, buffer: Seq[Long])
+  /** [[gapGate]]'s fold: sorted µs timestamps into (n, min, max, SUM)
+    * gap counters — sum, not mean, so the integer mean divides the
+    * exact global sum. Anchored: the gap multiset of a sorted sequence
+    * splits exactly at any element into prefix-internal gaps +
+    * anchor-crossing gaps. */
+  private[graft] val GapFold =
+    TtlFold[(Long, String), Long, (Long, Long, Long, Long), (Long, String, Long, Long, Long, Long)](
+      empty = (0L, 0L, 0L, 0L), anchored = true,
+      time = identity, order = Ordering.Long,
+      fold = { case (c @ (n, mn, mx, sm), ts) =>
+        val gaps = ts.iterator.sliding(2).withPartial(false)
+          .map { case Seq(a, b) => b - a }.toSeq
+        if (gaps.isEmpty) c
+        else if (n == 0L) (gaps.size.toLong, gaps.min, gaps.max, gaps.sum)
+        else (n + gaps.size, math.min(mn, gaps.min), math.max(mx, gaps.max),
+          sm + gaps.sum)
+      },
+      readout = { case ((user, tpe), (n, mn, mx, sm)) =>
+        if (n == 0L) (user, tpe, 0L, 0L, 0L, 0L) else (user, tpe, n, mn, mx, sm / n)
+      })
 
   /** Streaming form of WindowOps.eventGaps (#113b): per (user, type)
     * key, the count / min / max / integer-mean µs gap between the
     * key's consecutive events seen SO FAR — the live cadence monitor
     * (rate-limit and bot alarms fire on mean/min collapsing, without
-    * waiting for a batch profile). Recomputed per arrival from the
-    * buffered sorted timestamps, so late/out-of-order arrivals WITHIN
-    * the TTL horizon are EXACT: an event landing between two
+    * waiting for a batch profile). An event landing between two
     * already-seen neighbors replaces their gap with two smaller ones —
     * running last-ts state would have welded it to whatever happened
-    * to arrive last. Update-mode rows: the last row per key is the
-    * answer at any point; keys with one event report n_gaps = 0.
+    * to arrive last. Keys with one event report n_gaps = 0.
     *
-    * State is O(events per TTL window), not O(key history):
-    * timestamps that age more than `ttlUs` behind the key's max event
-    * time FOLD their prefix-internal gaps into frozen (n, min, max,
-    * sum) counters and leave the buffer, with the prefix's last
-    * timestamp kept as the boundary anchor — the #29f event-time-TTL
-    * pattern [[transitionGate]] and [[funnelGate]] carry. The gap
-    * multiset of a sorted sequence splits exactly at any element into
-    * prefix-internal gaps + anchor-crossing gaps, so the fold is
-    * LOSSLESS for event-time-ordered arrival; only a late arrival
-    * older than the horizon lands approximate.
-    *
-    * DEAD keys leave the store via the same two-stage event-time
-    * timeout as [[funnelGate]]: ttl of silence folds the buffer into
-    * the frozen counters behind the boundary anchor (a reappearing
-    * key resumes LOSSLESSLY — the anchor-crossing gap is still
-    * computed live); a further ttl removes the remnant outright.
+    * Timestamps aging past the TTL horizon fold their prefix-internal
+    * gaps into frozen counters behind the prefix's last timestamp as
+    * the boundary anchor, and dead keys leave in two stages, both as
+    * [[ttlFoldGate]] describes ([[GapFold]]).
     * Input contract: (user_id, event_type, us). */
   def gapGate(events: DataFrame,
       ttlUs: Long = TransitionTtlUs,
       delay: String = GateWatermarkDelay): Dataset[(Long, String, Long, Long, Long, Long)] = {
     val spark = events.sparkSession
-    import spark.implicits.{newLongEncoder, newProductEncoder, newStringEncoder}
-    val ttlMs = math.max(1L, ttlUs / 1000L)
-    val typed = events
-      .withColumn("gate_ts", timestamp_micros($"us"))
-      .withWatermark("gate_ts", delay)
-      // gate_ts rides along untouched: the engine requires the
-      // watermarked column in the stateful operator's child output
-      .select($"user_id", $"event_type", $"us", $"gate_ts")
-      .as[(Long, String, Long, java.sql.Timestamp)]
-    def gapsOf(ts: Seq[Long]): Seq[Long] =
-      ts.iterator.sliding(2).withPartial(false)
-        .map { case Seq(a, b) => b - a }.toSeq
-    def foldAll(prev: GapState): GapState = {
-      val pGaps = gapsOf(prev.buffer)
-      GapState(
-        prev.frozenN + pGaps.size,
-        if (prev.frozenN == 0L) pGaps.min
-        else math.min(prev.frozenMin, pGaps.min),
-        if (prev.frozenN == 0L) pGaps.max
-        else math.max(prev.frozenMax, pGaps.max),
-        prev.frozenSum + pGaps.sum, Seq(prev.buffer.last))
-    }
-    def answerOf(key: (Long, String), fz: GapState): (Long, String, Long, Long, Long, Long) =
-      if (fz.frozenN == 0L) (key._1, key._2, 0L, 0L, 0L, 0L)
-      else (key._1, key._2, fz.frozenN, fz.frozenMin, fz.frozenMax,
-        fz.frozenSum / fz.frozenN)
-    typed.groupByKey(e => (e._1, e._2))
-      .mapGroupsWithState(GroupStateTimeout.EventTimeTimeout) {
-        (key: (Long, String), batch: Iterator[(Long, String, Long, java.sql.Timestamp)],
-         state: GroupState[GapState]) =>
-          if (state.hasTimedOut) {
-            val prev = state.get
-            if (prev.buffer.size > 1) {
-              // stage 1: fold the buffer's internal gaps into the
-              // frozen counters, keep only the boundary anchor
-              val merged = foldAll(prev)
-              state.update(merged)
-              state.setTimeoutTimestamp(state.getCurrentWatermarkMs() + ttlMs)
-              answerOf(key, merged)
-            } else {
-              // stage 2: a further ttl of silence — drop the key
-              val ans = answerOf(key, prev)
-              state.remove()
-              ans
-            }
-          } else gapArrival(key, batch, state, ttlUs, ttlMs, gapsOf)
-      }
+    import spark.implicits.newProductEncoder
+    ttlFoldGate(events, Seq($"user_id", $"event_type", $"us"), ttlUs, delay,
+      (r: TypedEvent) => (r._1, r._2), (r: TypedEvent) => r._3, GapFold)
   }
-
-  /** Arrival path of [[gapGate]], split out for readability. */
-  private def gapArrival(key: (Long, String),
-      batch: Iterator[(Long, String, Long, java.sql.Timestamp)],
-      state: GroupState[GapState],
-      ttlUs: Long, ttlMs: Long,
-      gapsOf: Seq[Long] => Seq[Long]): (Long, String, Long, Long, Long, Long) = {
-      val prev = state.getOption.getOrElse(GapState(0L, 0L, 0L, 0L, Nil))
-      val sorted = (prev.buffer ++ batch.map(_._3)).sorted
-      val horizon = sorted.last - ttlUs
-      // first retained index; everything before it folds (> 0
-      // guards both the all-live case and ttl overflow to < 0)
-      val cut = sorted.indexWhere(_ >= horizon)
-      val (fz, buffer) =
-        if (cut <= 0) (prev, sorted)
-        else {
-          val pGaps = gapsOf(sorted.take(cut))
-          val merged =
-            if (pGaps.isEmpty) prev
-            else GapState(
-              prev.frozenN + pGaps.size,
-              if (prev.frozenN == 0L) pGaps.min
-              else math.min(prev.frozenMin, pGaps.min),
-              if (prev.frozenN == 0L) pGaps.max
-              else math.max(prev.frozenMax, pGaps.max),
-              prev.frozenSum + pGaps.sum, Nil)
-          // keep the prefix's last ts as the anchor so the
-          // prefix→live gap is counted (and re-split) live
-          (merged, sorted.drop(cut - 1))
-        }
-      val lGaps = gapsOf(buffer)
-      state.update(GapState(fz.frozenN, fz.frozenMin, fz.frozenMax,
-        fz.frozenSum, buffer))
-      state.setTimeoutTimestamp(math.max(
-        sorted.last / 1000L + ttlMs,
-        state.getCurrentWatermarkMs() + 1L))
-      val n = fz.frozenN + lGaps.size
-      if (n == 0L) (key._1, key._2, 0L, 0L, 0L, 0L)
-      else {
-        val mn =
-          if (fz.frozenN == 0L) lGaps.min
-          else if (lGaps.isEmpty) fz.frozenMin
-          else math.min(fz.frozenMin, lGaps.min)
-        val mx =
-          if (fz.frozenN == 0L) lGaps.max
-          else if (lGaps.isEmpty) fz.frozenMax
-          else math.max(fz.frozenMax, lGaps.max)
-        val sm = fz.frozenSum + lGaps.sum
-        (key._1, key._2, n, mn, mx, sm / n)
-      }
-  }
-
-  /** Per-user state for [[transitionGate]]: already-FOLDED edge
-    * counts (events that aged past the TTL horizon contribute here
-    * and leave the buffer) plus the live CEP-style partial-match
-    * buffer of (us, event_id, type) — the same buffer discipline as
-    * [[funnelGate]] and [[gapGate]], but bounded: transition edges
-    * depend on the time-SORTED sequence only within the TTL horizon,
-    * so only that window's events are kept and re-sorted. */
-  case class TransState(frozen: Seq[(String, String, Long)],
-      buffer: Seq[(Long, Long, String)])
 
   /** Default [[transitionGate]] TTL: 30 days in µs — wider than any
     * plausible out-of-orderness, narrow enough that a continuously
@@ -753,101 +686,50 @@ object StreamingJobs {
     * must not time keys out mid-replay), so the default behaves
     * exactly like the pre-timeout gates; a live deployment passes
     * its real lateness bound so dead keys actually leave the store.
-    * The watermark column is projected away before the stateful
-    * operator, so it drives TIMEOUTS only — late rows are never
-    * dropped (the in-horizon fold already handles them exactly, and
-    * beyond-horizon rows land under the documented approximation
-    * contract). */
+    * The watermark also bounds lateness: the stateful operator drops
+    * a row at or behind it, so a delay shorter than the input's real
+    * disorder loses rows, not just precision (in-horizon late rows
+    * ahead of it fold exactly; beyond-horizon ones land under the
+    * documented approximation contract). */
   val GateWatermarkDelay: String = "365 days"
+
+  /** [[transitionGate]]'s fold: (us, event_id, type) events, sorted
+    * by (us, event_id), into (from, to, n) next-event edge counts,
+    * sorted by edge. Anchored: the edges of a sorted sequence split
+    * exactly at any event into prefix-internal edges + the edges from
+    * that event on. */
+  private[graft] val TransitionFold =
+    TtlFold[Long, (Long, Long, String), Seq[(String, String, Long)], (Long, Seq[(String, String, Long)])](
+      empty = Nil, anchored = true,
+      time = _._1, order = Ordering.by((e: (Long, Long, String)) => (e._1, e._2)),
+      fold = (edges, evs) =>
+        (edges ++ evs.iterator.sliding(2).withPartial(false)
+          .map { case Seq(a, b) => (a._3, b._3, 1L) })
+          .groupBy(e => (e._1, e._2)).toSeq.sortBy(_._1)
+          .map { case ((f, t), es) => (f, t, es.map(_._3).sum) },
+      readout = (user, edges) => (user, edges))
 
   /** Streaming form of WindowOps.eventTransitions (#120b streaming):
     * per user, the (from, to, n) next-event edge counts over the
-    * events seen SO FAR — recomputed per arrival from the buffered
-    * sorted sequence, so late/out-of-order arrivals WITHIN the TTL
-    * horizon are EXACT (an event landing between seen neighbors
+    * events seen SO FAR. An event landing between seen neighbors
     * SPLITS their edge into two different edges; running last-event
-    * state would weld it to arrival order). Events that age more
-    * than `ttlUs` behind the user's max event time FOLD into frozen
-    * edge counts and leave the buffer (the last folded event stays
-    * as the boundary anchor, so the frozen→live edge is still
-    * counted and still splittable by in-horizon late arrivals) —
-    * state is O(events per TTL window), not O(user history), and the
-    * fold is LOSSLESS for event-time-ordered arrival; only a late
-    * arrival older than the horizon lands approximate, the same
-    * horizon contract as [[streamingNearDup]] (#29f). Update-mode
-    * rows: the last row per user carries that user's full current
-    * edge list; a global reduction of those lists equals the batch
-    * matrix.
+    * state would weld it to arrival order. The last row per user
+    * carries that user's full current edge list; a global reduction of
+    * those lists equals the batch matrix.
     *
-    * DEAD keys leave the store via the same two-stage event-time
-    * timeout as [[funnelGate]]: ttl of silence folds the buffer's
-    * edges into the frozen counts behind the boundary anchor (a
-    * reappearing key resumes LOSSLESSLY — the anchor→live edge is
-    * still counted); a further ttl removes the remnant outright.
-    * Input contract: (user_id, us, event_id, event_type). */
+    * Events aging past the TTL horizon fold into frozen edge counts
+    * behind the last folded event as the boundary anchor (the
+    * anchor→live edge is still counted and still splittable), and dead
+    * keys leave in two stages, both as [[ttlFoldGate]] describes
+    * ([[TransitionFold]]). Input contract: (user_id, us, event_id,
+    * event_type). */
   def transitionGate(events: DataFrame,
       ttlUs: Long = TransitionTtlUs,
       delay: String = GateWatermarkDelay): Dataset[(Long, Seq[(String, String, Long)])] = {
     val spark = events.sparkSession
-    import spark.implicits.{newLongEncoder, newProductEncoder, newStringEncoder, newProductSeqEncoder}
-    val ttlMs = math.max(1L, ttlUs / 1000L)
-    def edgesOf(evs: Seq[(Long, Long, String)]): Seq[(String, String, Long)] =
-      evs.iterator.sliding(2).withPartial(false)
-        .map { case Seq(a, b) => (a._3, b._3) }.toSeq
-        .groupBy(identity).toSeq
-        .map { case ((f, t), ps) => (f, t, ps.size.toLong) }
-    def merge(a: Seq[(String, String, Long)],
-        b: Seq[(String, String, Long)]): Seq[(String, String, Long)] =
-      (a ++ b).groupBy(e => (e._1, e._2)).toSeq.sortBy(_._1)
-        .map { case ((f, t), es) => (f, t, es.map(_._3).sum) }
-    events
-      .withColumn("gate_ts", timestamp_micros($"us"))
-      .withWatermark("gate_ts", delay)
-      // gate_ts rides along untouched: the engine requires the
-      // watermarked column in the stateful operator's child output
-      .select($"user_id", $"us", $"event_id", $"event_type", $"gate_ts")
-      .as[(Long, Long, Long, String, java.sql.Timestamp)]
-      .groupByKey(_._1)
-      .mapGroupsWithState(GroupStateTimeout.EventTimeTimeout) {
-        (user: Long, batch: Iterator[(Long, Long, Long, String, java.sql.Timestamp)],
-         state: GroupState[TransState]) =>
-          if (state.hasTimedOut) {
-            val prev = state.get
-            if (prev.buffer.size > 1) {
-              // stage 1: fold the buffer's edges into the frozen
-              // counts, keep only the last event as the anchor
-              val frozen = merge(prev.frozen, edgesOf(prev.buffer))
-              state.update(TransState(frozen, Seq(prev.buffer.last)))
-              state.setTimeoutTimestamp(state.getCurrentWatermarkMs() + ttlMs)
-              (user, frozen)
-            } else {
-              // stage 2: a further ttl of silence — drop the key
-              val ans = merge(prev.frozen, Nil)
-              state.remove()
-              (user, ans)
-            }
-          } else {
-            val prev = state.getOption.getOrElse(TransState(Nil, Nil))
-            val sorted = (prev.buffer ++ batch.map(e => (e._2, e._3, e._4)))
-              .sortBy(e => (e._1, e._2))
-            val horizon = sorted.last._1 - ttlUs
-            // first retained index; everything before it folds (> 0
-            // guards both the all-live case and ttl overflow to < 0)
-            val cut = sorted.indexWhere(_._1 >= horizon)
-            val (frozen, buffer) =
-              if (cut <= 0) (prev.frozen, sorted)
-              // fold edges STRICTLY inside the expired prefix; keep its
-              // last event as the anchor so the prefix→live edge is
-              // counted (and re-split) from the live buffer
-              else (merge(prev.frozen, edgesOf(sorted.take(cut))),
-                sorted.drop(cut - 1))
-            state.update(TransState(frozen, buffer))
-            state.setTimeoutTimestamp(math.max(
-              sorted.last._1 / 1000L + ttlMs,
-              state.getCurrentWatermarkMs() + 1L))
-            (user, merge(frozen, edgesOf(buffer)))
-          }
-      }
+    import spark.implicits.{newLongEncoder, newProductEncoder}
+    ttlFoldGate(events, Seq($"user_id", $"us", $"event_id", $"event_type"), ttlUs, delay,
+      (r: TypedTransition) => r._1, (r: TypedTransition) => (r._2, r._3, r._4), TransitionFold)
   }
 
   /** Double-11 dashboard (reference orderTest/OrderAnalysy.scala:453

@@ -143,9 +143,9 @@ class ClusterSpec extends SparkTestBase {
     // each round's joins square the inherited sizeInBytes — the
     // BigInt doubles its bit length per round until stats estimation
     // overflows ("BigInteger would overflow supported range", round
-    // ~28; tools.ReproStats reproduces it on 100 rows, q_embed_cluster
-    // hit it live at sf100). starContract resets plan state with a
-    // parquet round trip every CcStatsResetRounds rounds; this chain's
+    // ~28; q_embed_cluster hit it live at sf100, and this case is its
+    // regression guard). starContract resets plan state with a parquet
+    // round trip every CcStatsResetRounds rounds; this chain's
     // length forces the round count PAST that boundary, so the test
     // proves labels stay exact and blocks stay freed ACROSS a reset.
     import spark.implicits._

@@ -8,7 +8,9 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
 
 /** Checkpoint-restart contract of the three EventTimeTimeout gates
-  * (funnel / gap / transition): StreamingSpec proves
+  * (funnel / gap / transition), which share one state machine,
+  * StreamingJobs.ttlFoldGate: one TtlState per key, one horizon cut
+  * and one two-stage dead-key timeout. StreamingSpec proves
   * drop-and-lossless-resume within ONE query run; these cases kill
   * the query AFTER a timeout transition fired and resume from the
   * checkpoint, proving the folded anchor is part of the durable state

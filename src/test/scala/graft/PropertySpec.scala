@@ -444,4 +444,34 @@ class PropertySpec extends AnyFunSuite {
       assert(g2 <= g5 && g5 <= greedy, s"evs=$evs gap monotonicity")
     }
   }
+
+  test("TTL fold is lossless at every cut") {
+    import graft.streaming.StreamingJobs.{FunnelFold, GapFold, TransitionFold, TtlFold, TtlState}
+    // what the gates rely on: folding any time-sorted prefix (behind
+    // its anchor, if kept) and answering over the rest equals answering
+    // over the whole list from the empty frozen value — once, or at
+    // a second cut of the buffer the first one left
+    def lossless[K, E, F, U](g: TtlFold[K, E, F, U], key: K, evs: Seq[E]): Unit = {
+      val sorted = evs.sorted(g.order)
+      val whole = g.answer(key, TtlState(g.empty, sorted))
+      (0 to sorted.size).foreach { i =>
+        val once = g.foldPrefix(TtlState(g.empty, sorted), i)
+        assert(g.answer(key, once) == whole, s"cut $i of $sorted")
+        (0 to once.buffer.size).foreach { j =>
+          assert(g.answer(key, g.foldPrefix(once, j)) == whole,
+            s"cuts $i then $j of $sorted")
+        }
+      }
+    }
+    forSamples(Gen.listOf(Gen.zip(Gen.choose(0, 2), Gen.choose(0L, 12L)))) { evs =>
+      lossless(FunnelFold, 7L, evs)
+    }
+    forSamples(Gen.listOf(Gen.choose(0L, 40L))) { ts =>
+      lossless(GapFold, (7L, "view"), ts)
+    }
+    forSamples(Gen.listOf(Gen.zip(Gen.choose(0L, 12L), Gen.choose(0L, 99L),
+        Gen.oneOf("view", "click", "purchase")))) { evs =>
+      lossless(TransitionFold, 7L, evs)
+    }
+  }
 }
