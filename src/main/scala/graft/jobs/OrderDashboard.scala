@@ -4,7 +4,8 @@ import graft.sinks.{KvStore, Sinks}
 import graft.sources.Readers
 import graft.streaming.{Restarts, StreamingJobs}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.execution.streaming.checkpointing.OffsetSeqLog
+import org.apache.spark.sql.functions.{col, lit, timestamp_millis}
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 import org.apache.spark.sql.types.StructType
 
@@ -26,6 +27,15 @@ import org.apache.spark.sql.types.StructType
   *    idempotent upsert, so checkpointed replay is exactly-once;
   *  - resilience: [[Restarts.fixedDelay]] around the one checkpointed
   *    query (the reference's RestartStrategies).
+  *
+  * No-data micro-batches are off for this query, so a call runs one
+  * micro-batch per drop and none after it. In Update mode a no-data
+  * batch emits nothing; it only evicts the windows the advanced
+  * watermark closed. The commit log keeps that watermark, so the next
+  * call's data batch evicts those windows, and the sink drops their
+  * rows (see `drain`): the store values are the same, and the state
+  * holds at most one window more than with eviction at the end of
+  * each call.
   *
   * At 100 TB/day: the only shuffle is the one aggregation (keys =
   * days × (provinces + 1) — tiny); state is bounded by the watermark;
@@ -61,17 +71,49 @@ object OrderDashboard {
 
   /** The dashboard query over `orders`, drained to the store under the
     * `dashboard` checkpoint subdirectory with fixed-delay restarts.
-    * Returns the restarts used. */
+    * Returns the restarts used.
+    *
+    * No-data batches are turned off on the caller's session only
+    * around `start()`: the query clones the session's conf when it is
+    * built, inside `start()`, and runs every batch on that clone, so
+    * the setting reaches this query alone and the caller's session is
+    * restored at once (the CEP gates need no-data batches to fire
+    * their timeouts). A `newSession()` would not do: it starts from
+    * the default conf, not the caller's.
+    *
+    * Spark drops a late row against the PREVIOUS batch's watermark.
+    * With a no-data batch between two calls, that is the watermark the
+    * last data batch advanced to; without one, it is a batch older. So
+    * each batch also drops the rows of windows its own watermark
+    * closes (`order_end` at or before it, read from the batch's entry
+    * in the offset log) before they reach the store. That is the cut
+    * the no-data batch gave, so the store values are the same. */
   private def drain(orders: => DataFrame, store: KvStore, checkpoint: String,
-      watermarkDelay: String, maxRestarts: Int, restartDelayMs: Long): Int =
+      watermarkDelay: String, maxRestarts: Int, restartDelayMs: Long): Int = {
+    val queryCheckpoint = s"$checkpoint/dashboard"
+    val upsert = upsertWriter(store)
     Restarts.fixedDelay(maxRestarts, restartDelayMs) { () =>
-      StreamingJobs.orderDashboard(orders, watermarkDelay).writeStream
-        .option("checkpointLocation", s"$checkpoint/dashboard")
+      val dashboard = StreamingJobs.orderDashboard(orders, watermarkDelay)
+      val spark = dashboard.sparkSession
+      val offsets = new OffsetSeqLog(spark, s"$queryCheckpoint/offsets")
+      val upsertOpen: (DataFrame, Long) => Unit = (batch, batchId) => {
+        val watermarkMs = offsets.offsetSeqMetadataForBatchId(batchId)
+          .fold(0L)(_.batchWatermarkMs)
+        upsert(batch.filter(col("order_end") > timestamp_millis(lit(watermarkMs))), batchId)
+      }
+      val writer = dashboard.writeStream
+        .option("checkpointLocation", queryCheckpoint)
         .outputMode(OutputMode.Update)
-        .foreachBatch(upsertWriter(store))
+        .foreachBatch(upsertOpen)
         .trigger(Trigger.AvailableNow())
-        .start()
+      val before = spark.conf.getOption(NoDataBatches)
+      spark.conf.set(NoDataBatches, "false")
+      try writer.start()
+      finally before.fold(spark.conf.unset(NoDataBatches))(spark.conf.set(NoDataBatches, _))
     }
+  }
+
+  private val NoDataBatches = "spark.sql.streaming.noDataMicroBatches.enabled"
 
   /** foreachBatch sink for [[StreamingJobs.orderDashboard]]: routes
     * each row by `grouping_id` — site-wide totals under "day",

@@ -124,8 +124,4 @@ object Sinks {
       }
     }
   }
-
-  def mergeUpsertWriter(store: KvStore, keyCols: Seq[String],
-                        valCols: Seq[String]): (DataFrame, Long) => Unit =
-    (batch, _) => mergeUpsert(store, keyCols, valCols)(batch)
 }

@@ -740,7 +740,8 @@ object StreamingJobs {
     * the watermark evicts all of their state; `rollup` would add a
     * grand-total row that never evicts. Update mode, fed to an
     * idempotent upsert sink (jobs.OrderDashboard routes by
-    * `grouping_id`, since an order's own province may be NULL). Money
+    * `grouping_id`, since an order's own province may be NULL);
+    * `order_end` is the window end the watermark closes. Money
     * is Det.sumFixed fixed-point, the same cross-engine-exact integer
     * contract as every batch operator. */
   def orderDashboard(orders: DataFrame, delay: String): DataFrame = {
@@ -751,7 +752,7 @@ object StreamingJobs {
       .agg(count(lit(1)).as("total_num"),
         graft.Det.sumFixed($"amount", 2).as("total_money_e2"),
         grouping_id().as("grouping_id"))
-      .select($"window.start".as("order_day"), $"province", $"grouping_id",
-        $"total_num", $"total_money_e2")
+      .select($"window.start".as("order_day"), $"window.end".as("order_end"),
+        $"province", $"grouping_id", $"total_num", $"total_money_e2")
   }
 }

@@ -70,6 +70,61 @@ class DashboardJobSpec extends SparkTestBase {
     StoreRegistry.clear("dashlate")
   }
 
+  test("order dashboard runs one micro-batch per call and its state stays bounded over ten daily drops") {
+    import org.apache.spark.sql.streaming.{StreamingQueryListener, StreamingQueryProgress}
+    import StreamingQueryListener._
+    import java.util.concurrent.ConcurrentLinkedQueue
+    import scala.jdk.CollectionConverters._
+    val src = tmpDir("dashdailysrc")
+    val ck = tmpDir("dashdailyck")
+    val store = StoreRegistry.kv("dashdaily")
+    val day = 86400L
+    val provinces = Seq("zhejiang", "shanghai", "beijing")
+    def t(s: Long) = new Timestamp(s * 1000L)
+
+    val progress = new ConcurrentLinkedQueue[StreamingQueryProgress]()
+    val ended = new ConcurrentLinkedQueue[java.util.UUID]()
+    val listener = new StreamingQueryListener {
+      def onQueryStarted(e: QueryStartedEvent): Unit = ()
+      def onQueryProgress(e: QueryProgressEvent): Unit = progress.add(e.progress)
+      def onQueryTerminated(e: QueryTerminatedEvent): Unit = ended.add(e.runId)
+    }
+    // this job's batches: the ones reading `src`
+    def mine = progress.asScala.filter(_.sources.exists(_.description.contains(src))).toSeq
+    spark.streams.addListener(listener)
+    try {
+      for (d <- 0 until 10) {
+        provinces.zipWithIndex
+          .map { case (p, i) => (t(d * day + 3600L * (i + 1)), p, 1.0 + i) }
+          .toDF("ts", "province", "amount").write.mode("append").parquet(src)
+        val seen = mine.map(_.runId).toSet
+        assert(OrderDashboard.run(spark, src, spark.read.parquet(src).schema, store, ck) == 0)
+        // listener events arrive asynchronously; a query's terminated
+        // event is posted after all of its progress events
+        val deadline = System.nanoTime() + 30L * 1000000000L
+        def runs = mine.map(_.runId).filterNot(seen).distinct
+        while ((runs.isEmpty || !runs.forall(ended.contains)) && System.nanoTime() < deadline)
+          Thread.sleep(20)
+        assert(runs.size == 1, s"call $d: runs $runs")
+        val batches = mine.filter(_.runId == runs.head)
+        assert(batches.size == 1, s"call $d ran ${batches.size} micro-batches")
+        assert(batches.head.numInputRows == provinces.size)
+        // eviction waits for the next data batch: the state holds the
+        // days the watermark (max ts − 1 day) has not closed as of the
+        // previous batch, at most three, each with its province rows
+        // and its day row, whatever the number of drops so far
+        val stateRows = batches.head.stateOperators.map(_.numRowsTotal).sum
+        assert(stateRows <= 3 * (provinces.size + 1), s"call $d: $stateRows state rows")
+      }
+    } finally spark.streams.removeListener(listener)
+    for (d <- 0 until 10) {
+      val k = new Timestamp(d * day * 1000L).toString
+      assert(store.get(k).contains("3|600"), s"day $d: ${store.get(k)}")
+      assert(store.get(s"$k|shanghai").contains("1|200"), s"day $d shanghai")
+    }
+    StoreRegistry.clear("dashdaily")
+  }
+
   test("generated-source dashboard equals a batch aggregation of the same rows") {
     // the reference's own topology end to end: custom source
     // (OrderAnalysy.scala:338 OrderSource, here the DataSourceV2

@@ -1,7 +1,7 @@
 package graft
 
 import graft.jobs.IngestPipeline
-import graft.sinks.StoreRegistry
+import graft.sinks.{KvStore, StoreRegistry}
 import org.apache.spark.sql.functions._
 
 /** End-to-end LLM-data ingest job (jobs.IngestPipeline): document
@@ -129,4 +129,48 @@ class IngestJobSpec extends SparkTestBase {
 
     StoreRegistry.clear("ingcorpus2"); StoreRegistry.clear("ingfunnel2")
   }
+
+  test("a batch that fails after recording its funnel totals is replayed without double counting") {
+    val src = tmpDir("ingsrc3")
+    val ck = tmpDir("ingck3")
+    val corpus = StoreRegistry.doc("ingcorpus3")
+    val good = "the quick brown fox jumps over a lazy dog near a riverbank today"
+    val pii = "contact alice@example.com about the quick brown fox and lazy dog story"
+    Seq(
+      (1L, good, "xx", "web", good.length.toLong),
+      (2L, "tiny doc", "xx", "web", 8L),
+      (3L, pii, "xx", "web", pii.length.toLong),
+      (4L, good, "xx", "mail", good.length.toLong)
+    ).toDF("doc_id", "text", "lang", "source", "n_chars")
+      .coalesce(1).write.mode("append").parquet(src)
+    val schema = spark.read.parquet(src).schema
+
+    // the first put throws: batch 0's totals are recorded, its corpus
+    // docs are written, and Spark has not committed it yet
+    val totals0 = new java.io.File(s"$ck/ingest/funnel-totals/0")
+    val funnel = new FailFirstPut(StoreRegistry.kv("ingfunnel3"), totals0.exists())
+    assert(IngestPipeline.run(spark, src, schema, corpus, funnel, ck,
+      restartDelayMs = 10) == 1)
+    assert(funnel.totalsRecordedAtFailure.contains(true))
+    assert(funnel.get("web").contains("3|2|2"), s"web: ${funnel.get("web")}")
+    assert(funnel.get("mail").contains("1|1|1"), s"mail: ${funnel.get("mail")}")
+    assert(funnel.size == 2 && corpus.size == 2)
+
+    StoreRegistry.clear("ingcorpus3"); StoreRegistry.clear("ingfunnel3")
+  }
+}
+
+/** A funnel store whose first `put` throws, after noting what
+  * `probe` reads at that moment. */
+private final class FailFirstPut(inner: KvStore, probe: => Boolean) extends KvStore {
+  @volatile var totalsRecordedAtFailure: Option[Boolean] = None
+  def put(key: String, value: String): Unit = {
+    if (totalsRecordedAtFailure.isEmpty) {
+      totalsRecordedAtFailure = Some(probe)
+      throw new IllegalStateException("injected funnel store failure")
+    }
+    inner.put(key, value)
+  }
+  def get(key: String): Option[String] = inner.get(key)
+  def size: Int = inner.size
 }
