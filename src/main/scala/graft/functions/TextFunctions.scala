@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, LongType, StringType}
+import org.apache.spark.sql.types.LongType
 
 /** Codegen-friendly text primitives (SURVEY.md §2.7).
   *
@@ -14,9 +14,7 @@ import org.apache.spark.sql.types.{ArrayType, LongType, StringType}
   * stay inside whole-stage codegen (PlanSpec guards the text-family
   * plans against `lambdafunction` reappearing). The only hash used is
   * md5, which is bit-identical across engines (the cross-engine
-  * determinism contract, SURVEY.md §4). The n-gram builder still uses
-  * a `transform` HOF — it sits off the per-token hot path (one lambda
-  * per SHINGLE, in plans dominated by their shuffle).
+  * determinism contract, SURVEY.md §4).
   */
 object TextFunctions {
 
@@ -38,14 +36,12 @@ object TextFunctions {
   def tokens(text: Column): Column =
     array_remove(split(text, " "), "")
 
-  /** Distinct word n-grams joined with single spaces. Empty array when
-    * the doc has fewer than n tokens (guards `sequence`, which would
-    * otherwise generate a descending range). */
-  def ngrams(tk: Column, n: Int): Column =
-    when(size(tk) >= n,
-      array_distinct(transform(sequence(lit(1), size(tk) - lit(n - 1)),
-        i => concat_ws(" ", (0 until n).map(o => element_at(tk, i + lit(o))): _*))))
-      .otherwise(array().cast(ArrayType(StringType)))
+  /** The exact-duplicate content key: md5 of the trimmed, lower-cased
+    * text. ONE definition for every exact-dup dedup, keeper and
+    * ingest-store key; the SQL and oracle strings spell the same
+    * `md5(lower(trim(text)))`. */
+  def contentHash(text: Column): Column =
+    md5(lower(trim(text)))
 
   // ---- MinHash universal-hash permutations ---------------------------
   // One md5 per shingle, then k cheap integer permutations

@@ -12,14 +12,14 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** Native kernels for the hot text-hashing path.
   *
-  * The declarative pipeline (`transform(ngrams(tokens(text)), md5…)`)
-  * goes through interpreted higher-order functions — ~16 µs/doc-gram
-  * of UTF8String/hex-string churn. These kernels do the whole
-  * tokenize → n-gram → md5 → 60-bit-int pipeline in ONE per-row JVM
-  * pass over primitive arrays (~50× less overhead) while keeping the
-  * exact same bit-level semantics as the SQL/DuckDB form
-  * (SURVEY.md §4): tokens = split on single spaces with empties
-  * dropped; hash = first 15 hex digits of md5 as a long
+  * The declarative form of this pipeline (a `transform` over the
+  * token n-grams, md5 per gram) goes through interpreted higher-order
+  * functions — ~16 µs/doc-gram of UTF8String/hex-string churn. These
+  * kernels do the whole tokenize → n-gram → md5 → 60-bit-int pipeline
+  * in ONE per-row JVM pass over primitive arrays (~50× less
+  * overhead) while keeping the exact same bit-level semantics as the
+  * SQL/DuckDB form (SURVEY.md §4): tokens = split on single spaces
+  * with empties dropped; hash = first 15 hex digits of md5 as a long
   * (= unsigned(first 8 bytes) >>> 4).
   *
   * `MinhashSigExpr` additionally folds the k universal-hash

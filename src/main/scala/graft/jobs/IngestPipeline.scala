@@ -2,6 +2,7 @@ package graft.jobs
 
 import java.io.{DataInputStream, DataOutputStream, InputStream, OutputStream}
 
+import graft.functions.TextFunctions.contentHash
 import graft.operators.{CurationOps, TextOps}
 import graft.sinks.{DocStore, KvStore}
 import graft.sources.Readers
@@ -26,7 +27,7 @@ import org.apache.spark.sql.types.StructType
   *  - redaction: `TextOps.redactStage` — the ONE rewrite behind
   *    `q_pii_redact`, applied at admission so drops land clean;
   *  - exact dedup: store-backed first-occurrence-wins on the same
-  *    `md5(lower(trim(text)))` content hash as the batch keeper rule
+  *    `TextFunctions.contentHash` key as the batch keeper rule
   *    (the reference's Redis-SET dedup shape: the store IS the state,
   *    so dedup survives restarts with zero Spark state);
   *  - sinks: the curated corpus lands in a [[DocStore]] (ES-style
@@ -81,7 +82,7 @@ object IngestPipeline {
 
     def writeCorpus(batch: DataFrame): Unit = {
       val gated = batch.filter(col("q_ok") === 1L && col("l_ok") === 1L)
-        .withColumn("h", md5(lower(trim(col("text")))))
+        .withColumn("h", contentHash(col("text")))
       // one candidate per content hash per batch — the min-doc_id row,
       // the batch-local analog of the batch keeper rule (min over the
       // corpus); across batches the store's first write wins, the

@@ -2,9 +2,8 @@ package graft.jobs
 
 import graft.sinks.{KvStore, Sinks}
 import graft.sources.Readers
-import graft.streaming.{Restarts, StreamingJobs}
+import graft.streaming.{BatchWatermark, Restarts, StreamingJobs}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.streaming.checkpointing.OffsetSeqLog
 import org.apache.spark.sql.functions.{col, lit, timestamp_millis}
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 import org.apache.spark.sql.types.StructType
@@ -81,13 +80,13 @@ object OrderDashboard {
     * their timeouts). A `newSession()` would not do: it starts from
     * the default conf, not the caller's.
     *
-    * Spark drops a late row against the PREVIOUS batch's watermark.
-    * With a no-data batch between two calls, that is the watermark the
-    * last data batch advanced to; without one, it is a batch older. So
-    * each batch also drops the rows of windows its own watermark
-    * closes (`order_end` at or before it, read from the batch's entry
-    * in the offset log) before they reach the store. That is the cut
-    * the no-data batch gave, so the store values are the same. */
+    * Spark drops a late row against the PREVIOUS batch's watermark
+    * (see [[BatchWatermark]]). With a no-data batch between two calls,
+    * that is the watermark the last data batch advanced to; without
+    * one, it is a batch older. So each batch also drops the rows of
+    * windows its own watermark closes (`order_end` at or before it)
+    * before they reach the store. That is the cut the no-data batch
+    * gave, so the store values are the same. */
   private def drain(orders: => DataFrame, store: KvStore, checkpoint: String,
       watermarkDelay: String, maxRestarts: Int, restartDelayMs: Long): Int = {
     val queryCheckpoint = s"$checkpoint/dashboard"
@@ -95,12 +94,9 @@ object OrderDashboard {
     Restarts.fixedDelay(maxRestarts, restartDelayMs) { () =>
       val dashboard = StreamingJobs.orderDashboard(orders, watermarkDelay)
       val spark = dashboard.sparkSession
-      val offsets = new OffsetSeqLog(spark, s"$queryCheckpoint/offsets")
-      val upsertOpen: (DataFrame, Long) => Unit = (batch, batchId) => {
-        val watermarkMs = offsets.offsetSeqMetadataForBatchId(batchId)
-          .fold(0L)(_.batchWatermarkMs)
-        upsert(batch.filter(col("order_end") > timestamp_millis(lit(watermarkMs))), batchId)
-      }
+      val watermarkMs = BatchWatermark.reader(spark, queryCheckpoint)
+      val upsertOpen: (DataFrame, Long) => Unit = (batch, batchId) =>
+        upsert(batch.filter(col("order_end") > timestamp_millis(lit(watermarkMs(batchId)))), batchId)
       val writer = dashboard.writeStream
         .option("checkpointLocation", queryCheckpoint)
         .outputMode(OutputMode.Update)

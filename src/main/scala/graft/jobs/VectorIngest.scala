@@ -2,10 +2,11 @@ package graft.jobs
 
 import graft.ColumnInterpolator
 import graft.operators.{CurationOps, SimilarityOps}
-import graft.sinks.DocStore
+import graft.sinks.{DocStore, Sinks}
 import graft.sources.Readers
 import graft.streaming.Restarts
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.array_join
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 import org.apache.spark.sql.types.StructType
 
@@ -29,13 +30,16 @@ import org.apache.spark.sql.types.StructType
   *    checkpoint).
   *
   * One append-mode query, stateless in Spark: the benchmark table and
-  * the codebooks ride the closure/broadcast, admission is a per-batch
-  * anti-join on the τ-hits, state lives in the stores.
+  * the codebooks ride the closure/broadcast, each batch is scored once
+  * into a persisted readout (one row per contaminated vector) that
+  * both the quarantine write and the admission anti-join read, state
+  * lives in the stores; both stores are written by [[Sinks.docIndex]].
   *
   * At 100 TB/day: per-vector work is the |bench|-row broadcast score
   * plus M·K codebook distances — both narrow; store traffic is one
-  * put per vector; nothing shuffles except the batch-local hit
-  * anti-join on vec_id (AQE broadcasts the tiny hit side). */
+  * put per vector; nothing shuffles except the τ-survivors' per-vector
+  * readout and the batch-local anti-join on vec_id (AQE broadcasts the
+  * tiny readout side). */
 object VectorIngest {
 
   /** Drain `sourceDir` (schema = the embeddings table: vec_id,
@@ -50,29 +54,14 @@ object VectorIngest {
     def vecs: DataFrame = Readers.fileStream(spark, sourceDir, schema)
 
     def writer(batch: DataFrame, batchId: Long): Unit = {
-      val qv = CurationOps.quantVecs(batch)
-      val hits = CurationOps.deconHits(qv, bench)
-      // quarantine: the #91 readout rule per contaminated vector,
-      // the streaming gate's own readout over the same hits
-      CurationOps.deconBest(hits)
-        .foreachPartition { rows: Iterator[Row] =>
-          rows.foreach { r =>
-            quarantine.index(String.valueOf(r.getLong(0)), Map(
-              "best_bench" -> String.valueOf(r.getLong(1)),
-              "max_cos_e6" -> String.valueOf(r.getLong(2)),
-              "n_hits" -> String.valueOf(r.getLong(3))))
-          }
-        }
-      // index admission: clean vectors only, coded by the shared stage
-      val admitted = batch.join(
-        hits.select($"vec_id").distinct(), Seq("vec_id"), "left_anti")
-      SimilarityOps.encodeFrame(admitted, books)
-        .foreachPartition { rows: Iterator[Row] =>
-          rows.foreach { r =>
-            index.index(String.valueOf(r.getLong(0)), Map(
-              "codes" -> r.getSeq[Int](1).mkString(",")))
-          }
-        }
+      val dirty = CurationOps.deconBest(
+        CurationOps.deconHits(CurationOps.quantVecs(batch), bench)).persist()
+      try {
+        Sinks.docIndex(quarantine, "vec_id")(dirty)
+        val admitted = batch.join(dirty.select($"vec_id"), Seq("vec_id"), "left_anti")
+        Sinks.docIndex(index, "vec_id")(SimilarityOps.encodeFrame(admitted, books)
+          .select($"vec_id", array_join($"codes".cast("array<string>"), ",").as("codes")))
+      } finally dirty.unpersist()
     }
 
     Restarts.fixedDelay(maxRestarts, restartDelayMs) { () =>

@@ -94,7 +94,7 @@ object CurationOps {
   def curate(spark: SparkSession, sfDir: String): DataFrame =
     curationFlags(spark, sfDir)
       .filter($"q_ok" === 1L && $"l_ok" === 1L)
-      .select($"doc_id", md5(lower(trim($"text"))).as("text_hash"))
+      .select($"doc_id", contentHash($"text").as("text_hash"))
       .groupBy($"text_hash")
       .agg(min($"doc_id").as("doc_id"))
       .select($"doc_id")
@@ -139,7 +139,7 @@ object CurationOps {
       : (DataFrame, DataFrame, DataFrame) = {
     val f = curationFlags(spark, sfDir)
     val keep = f.filter($"q_ok" === 1L && $"l_ok" === 1L)
-      .select($"doc_id", $"source", $"n_tokens", md5(lower(trim($"text"))).as("h"))
+      .select($"doc_id", $"source", $"n_tokens", contentHash($"text").as("h"))
     val keepers = keep.groupBy($"h").agg(min($"doc_id").as("doc_id"))
       .join(keep.select($"doc_id", $"source", $"n_tokens"), "doc_id")
     val ndKeepers = keepers
@@ -399,20 +399,6 @@ object CurationOps {
   val EmbDecontMod = 31L
   val EmbDecontCos = 400000L
 
-  /** #91 Embedding-space decontamination: flag corpus vectors whose
-    * cosine to ANY held-out benchmark vector reaches the near-dup
-    * bar — the semantic complement of the n-gram checks (#51/#78b),
-    * which miss paraphrased eval answers that token grams never
-    * catch. Per contaminated vector: its best-matching benchmark
-    * item (max cos, bench-id tiebreak) and how many benchmark items
-    * it hits. Here the "benchmark" is vec_id % [[EmbDecontMod]] == 0;
-    * in production it is the eval set's own (small) embedding table.
-    *
-    * Scale shape: the benchmark side is tiny (eval sets are MBs
-    * against a 100 TB corpus) → BROADCAST against one narrow corpus
-    * scan; only τ-survivors reach the per-vector ranking, whose
-    * partitions are bounded by the benchmark size — the corpus is
-    * never shuffled. */
   /** e3-quantized (vec_id, q, n2) projection of an embedding frame —
     * ONE definition shared by the batch decon, its benchmark side,
     * and the streaming per-drop gate, so the quantization cannot
@@ -444,8 +430,10 @@ object CurationOps {
   /** Per-vector best match over [[deconHits]] output: best bench =
     * (cos desc, bench asc), taken as a max over (cos, −bench) structs
     * — an associative merge, so streaming agg state per vector is
-    * O(1) — plus the hit count. ONE readout shared by the streaming
-    * gate and the vector ingest job's quarantine. */
+    * O(1) — plus the hit count. ONE readout shared by the exact #91
+    * report, its #91c LSH scale path, the #91b streaming gate and the
+    * vector ingest job's quarantine, so the report rule cannot drift
+    * between them. */
   private[graft] def deconBest(hits: DataFrame): DataFrame =
     hits
       .groupBy($"vec_id")
@@ -454,27 +442,24 @@ object CurationOps {
       .select($"vec_id", (-$"best.nb").as("best_bench"),
         $"best.cos_e6".as("max_cos_e6"), $"n_hits")
 
+  /** #91 Embedding-space decontamination: flag corpus vectors whose
+    * cosine to ANY held-out benchmark vector reaches the near-dup
+    * bar — the semantic complement of the n-gram checks (#51/#78b),
+    * which miss paraphrased eval answers that token grams never
+    * catch. Per contaminated vector: its best-matching benchmark
+    * item (max cos, bench-id tiebreak) and how many benchmark items
+    * it hits. Here the "benchmark" is vec_id % [[EmbDecontMod]] == 0;
+    * in production it is the eval set's own (small) embedding table.
+    *
+    * Scale shape: the benchmark side is tiny (eval sets are MBs
+    * against a 100 TB corpus) → BROADCAST against one narrow corpus
+    * scan; only τ-survivors reach the per-vector readout
+    * ([[deconBest]], a partial-aggregated struct max) — the corpus is
+    * never shuffled. */
   def deconEmbedding(spark: SparkSession, sfDir: String): DataFrame = {
     val corpus = quantVecs(Tables.embeddings(spark, sfDir))
       .filter($"vec_id" % EmbDecontMod =!= 0L)
-    deconReadout(deconHits(corpus, embBench(spark, sfDir)))
-  }
-
-  /** Per-vector contamination readout over a τ-filtered
-    * (vec_id, bench_id, cos_e6) hit frame — best bench + hit count;
-    * ONE definition shared by the exact #91 and the #91c LSH scale
-    * path so the report rule cannot drift between them. Window
-    * partitions are bounded by the benchmark size. */
-  private def deconReadout(hits: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy($"vec_id").orderBy($"cos_e6".desc, $"bench_id".asc)
-    hits
-      .withColumn("rk", row_number().over(w))
-      .withColumn("n_hits", count(lit(1)).over(Window.partitionBy($"vec_id")))
-      .filter($"rk" === 1)
-      .select($"vec_id", $"bench_id".as("best_bench"),
-        $"cos_e6".as("max_cos_e6"), $"n_hits")
-      .orderBy($"vec_id")
+    deconBest(deconHits(corpus, embBench(spark, sfDir))).orderBy($"vec_id")
   }
 
   /** #91c Semantic-decontamination SCALE path: the #91 judgment
@@ -515,7 +500,7 @@ object CurationOps {
       .select($"vec_id", $"bench_id",
         cosineE6(dotL($"q", $"bq"), $"n2", $"bn2").as("cos_e6"))
       .filter($"cos_e6" >= EmbDecontCos)
-    deconReadout(hits)
+    deconBest(hits).orderBy($"vec_id")
   }
 
   /** Winsorization percentiles for [[lengthGate]] (per mille-free
@@ -889,7 +874,7 @@ object CurationOps {
     * slice agg, id bounds broadcast. */
   def dupTrend(spark: SparkSession, sfDir: String): DataFrame = {
     val docs = Tables.documents(spark, sfDir)
-      .select($"doc_id", md5(lower(trim($"text"))).as("h"))
+      .select($"doc_id", contentHash($"text").as("h"))
     val firsts = docs.groupBy($"h").agg(min($"doc_id").as("first_id"))
     val bounds = docs.agg(min($"doc_id").as("lo"), max($"doc_id").as("hi"))
     docs.join(firsts, "h")

@@ -33,7 +33,7 @@ object DedupOps {
     * per group. One shuffle; at 100 TB, partial-agg keeps it cheap. */
   def dedupExact(spark: SparkSession, sfDir: String): DataFrame =
     Tables.documents(spark, sfDir)
-      .select($"doc_id", md5(lower(trim($"text"))).as("text_hash"))
+      .select($"doc_id", contentHash($"text").as("text_hash"))
       .groupBy($"text_hash")
       .agg(min($"doc_id").as("keep_id"), count(lit(1)).as("cnt"))
       .orderBy($"text_hash")
@@ -57,7 +57,7 @@ object DedupOps {
     Tables.documents(spark, sfDir)
       .select($"doc_id",
         md5(graft.functions.TextHash.normText($"text")).as("norm_hash"),
-        md5(lower(trim($"text"))).as("raw_hash"))
+        contentHash($"text").as("raw_hash"))
       .groupBy($"norm_hash")
       .agg(min($"doc_id").as("keep_id"), count(lit(1)).as("cnt"),
         countDistinct($"raw_hash").as("n_raw_variants"))
@@ -89,7 +89,7 @@ object DedupOps {
   def dedupPrefix(spark: SparkSession, sfDir: String): DataFrame = {
     val tk = graft.functions.TextFunctions.tokens(lower($"text"))
     Tables.documents(spark, sfDir)
-      .select($"doc_id", md5(lower(trim($"text"))).as("raw_hash"),
+      .select($"doc_id", contentHash($"text").as("raw_hash"),
         tk.as("tk"))
       .filter(size($"tk") >= PrefixTok)
       .select($"doc_id", $"raw_hash",
@@ -284,7 +284,7 @@ object DedupOps {
     * output bounded by |sources|. */
   def exactSpan(spark: SparkSession, sfDir: String): DataFrame =
     Tables.documents(spark, sfDir)
-      .select(md5(lower(trim($"text"))).as("raw_hash"), $"source")
+      .select(contentHash($"text").as("raw_hash"), $"source")
       .groupBy($"raw_hash")
       .agg(countDistinct($"source").as("n_sources"),
         count(lit(1)).as("cnt"))
@@ -366,7 +366,7 @@ object DedupOps {
         $"doc_id",
         size(graft.functions.TextFunctions.tokens($"text")).cast(LongType)
           .as("n_tokens"),
-        md5(lower(trim($"text"))).as("raw_hash"),
+        contentHash($"text").as("raw_hash"),
         md5(graft.functions.TextHash.normText($"text")).as("norm_hash"),
         when(size(ltk) >= PrefixTok,
           md5(array_join(slice(ltk, 1, PrefixTok), " "))).as("prefix_hash"))

@@ -2,45 +2,38 @@ package graft.streaming
 
 import graft.ColumnInterpolator
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, SparkSession}
+import org.apache.spark.sql.execution.streaming.checkpointing.OffsetSeqLog
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode}
 import scala.reflect.runtime.universe.TypeTag
 
-/** Reads the engine's own event-time watermark for a running query
-  * SYNCHRONOUSLY (the Flink analog: the operator reads ITS watermark,
-  * not a caller-supplied one — reference windowTest/WindowTest.scala:72
-  * allowedLateness/sideOutputLateData).
+/** Batch N's event-time watermark, read from the query's offset log
+  * — ONE definition for every per-batch decision that needs it.
   *
-  * Source: the query's `WatermarkTracker` via
-  * [[org.apache.spark.sql.graftbridge.StreamingBridge]]. It is updated
-  * on the stream-execution thread at batch commit — strictly before
-  * the next batch's `foreachBatch` runs on that thread — so a read
-  * during batch N is exactly the boundary batch N's stateful
-  * operators drop late rows on (derived from batches < N). The two
-  * public alternatives are both wrong for this: a
-  * `StreamingQueryListener` rides the ASYNC listener bus (batch N can
-  * run before batch N-1's event arrives), and `lastProgress` reports
-  * the watermark USED by the finished batch, i.e. one batch stale
-  * (both measured on Spark 4.1; pinned by StreamingSpec's
-  * three-micro-batch boundary test). */
-object EngineWatermark {
-  private def trackerUs(q: org.apache.spark.sql.streaming.StreamingQuery): Long =
-    org.apache.spark.sql.graftbridge.StreamingBridge.currentWatermarkMs(q)
-      .map(_ * 1000L).getOrElse(0L)
+  * Before batch N runs, Spark records in `<checkpoint>/offsets/N` the
+  * watermark it derived from batches < N (the largest event time seen
+  * through batch N−1 minus the delay; 0 before any data). That value
+  * is batch N's EVICTION watermark: batch N's stateful operators emit
+  * and evict the windows it closes. It is not the boundary Spark 4.1
+  * drops late rows on: those are judged against batch N−1's
+  * watermark, one step behind. The offset log is the write-ahead
+  * record the batch is planned and replayed from, so a replayed or
+  * restarted batch N reads the same value. Readers:
+  * [[StreamingJobs.lateRouted]] (the late side output) and
+  * `OrderDashboard`'s window cut. */
+object BatchWatermark {
 
-  /** Engine watermark in epoch micros for the CURRENT micro-batch of
-    * `queryName` (0 before the first batch / if not running). */
-  def watermarkUs(spark: SparkSession, queryName: String): Long =
-    spark.streams.active.find(_.name == queryName).map(trackerUs).getOrElse(0L)
-
-  /** Strict form for code running INSIDE the query (foreachBatch):
-    * a missing name there is a misconfiguration, and falling back to
-    * watermark 0 would silently treat every row as on-time. */
-  def watermarkUsOrThrow(spark: SparkSession, queryName: String): Long =
-    trackerUs(spark.streams.active.find(_.name == queryName).getOrElse(
-      throw new IllegalStateException(
-        s"streaming query '$queryName' not found among active streams — " +
-          "was the writer's queryName overridden?")))
+  /** batchId → watermark (epoch ms) for the query checkpointed at
+    * `checkpoint`. Call it for a batch that is running (inside
+    * `foreachBatch`), whose entry is always written; a missing entry
+    * means `checkpoint` is not that query's, and fails loudly rather
+    * than routing every row against watermark 0. */
+  def reader(spark: SparkSession, checkpoint: String): Long => Long = {
+    val offsets = new OffsetSeqLog(spark, s"$checkpoint/offsets")
+    batchId => offsets.offsetSeqMetadataForBatchId(batchId).map(_.batchWatermarkMs)
+      .getOrElse(throw new IllegalStateException(
+        s"no offset-log entry for batch $batchId under $checkpoint"))
+  }
 }
 
 /** Structured-Streaming transform builders (SURVEY.md §2.1/§2.2).
@@ -113,26 +106,21 @@ object StreamingJobs {
   }
 
   /** Engine-driven late side output (reference WindowTest.scala:72):
-    * a `foreachBatch` query over the RAW watermarked stream that
-    * splits every micro-batch by the ENGINE's current watermark — read
-    * synchronously via [[EngineWatermark.watermarkUsOrThrow]] from
-    * the query's own watermark tracker, i.e. the same boundary the
-    * stateful operators drop on — and routes each half to a caller
-    * sink. The writer is already named `queryName` (how each batch
-    * finds its own query); callers must NOT override it — a missing
-    * name fails the batch loudly rather than silently routing every
-    * row on-time against watermark 0. */
-  def lateRouted(events: DataFrame, delay: String, queryName: String)
+    * a `foreachBatch` query over the RAW watermarked stream,
+    * checkpointed at `checkpoint`, that splits every micro-batch by
+    * the batch's own watermark ([[BatchWatermark]], read from the
+    * query's offset log, so a restart on the same checkpoint resumes
+    * on the recorded boundary) and routes each half to a caller sink. */
+  def lateRouted(events: DataFrame, delay: String, checkpoint: String)
                 (onTime: DataFrame => Unit, late: DataFrame => Unit): DataStreamWriter[org.apache.spark.sql.Row] = {
-    val session = events.sparkSession
+    val watermarkMs = BatchWatermark.reader(events.sparkSession, checkpoint)
     events
       .withWatermark("ts", delay)
       .writeStream
-      .queryName(queryName)
+      .option("checkpointLocation", checkpoint)
       .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val (ok, lateRows) =
-          lateSplit(batch, EngineWatermark.watermarkUsOrThrow(session, queryName))
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        val (ok, lateRows) = lateSplit(batch, watermarkMs(batchId) * 1000L)
         onTime(ok)
         late(lateRows)
       }
@@ -392,7 +380,7 @@ object StreamingJobs {
     * day ingest pipeline. */
   def streamingDedup(docs: DataFrame, delay: String): DataFrame =
     docs
-      .withColumn("text_hash", md5(lower(trim($"text"))))
+      .withColumn("text_hash", graft.functions.TextFunctions.contentHash($"text"))
       .withWatermark("ts", delay)
       .dropDuplicatesWithinWatermark("text_hash")
 

@@ -915,7 +915,7 @@ class StreamingSpec extends SparkTestBase {
     val events = in.toDF().toDF("ts", "user_id", "value")
     val onTime = collection.mutable.Set[Long]()
     val late = collection.mutable.Set[Long]()
-    val q = StreamingJobs.lateRouted(events, "10 seconds", "laterouter")(
+    val q = StreamingJobs.lateRouted(events, "10 seconds", tmpDir("laterouter"))(
       b => onTime ++= b.select(unix_timestamp(col("ts")).as[Long]).collect(),
       b => late ++= b.select(unix_timestamp(col("ts")).as[Long]).collect())
       .start()
@@ -925,14 +925,14 @@ class StreamingSpec extends SparkTestBase {
       in.addData((ts(120), 1L, 2.0))
       q.processAllAvailable() // engine watermark now 110s
       // late row (10s < 110s) + on-time row in one batch: the split
-      // must come from the query's own lastProgress — the test never
-      // passes a watermark value anywhere, and no listener barrier is
-      // needed because the read is synchronous on the batch thread
+      // must come from the batch's own offset-log entry — the test
+      // never passes a watermark value anywhere, and no listener
+      // barrier is needed because the entry is written before the
+      // batch runs
       in.addData((ts(10), 1L, 9.0), (ts(130), 1L, 3.0))
       q.processAllAvailable()
       assert(late.toSet == Set(10L), s"late=$late")
       assert(onTime.toSet == Set(30L, 120L, 130L), s"onTime=$onTime")
-      assert(graft.streaming.EngineWatermark.watermarkUs(spark, "laterouter") == 120L * 1000000L)
     } finally q.stop()
   }
 
@@ -949,7 +949,7 @@ class StreamingSpec extends SparkTestBase {
     val events = in.toDF().toDF("ts", "user_id", "value")
     val perBatchLate = collection.mutable.ArrayBuffer[Set[Long]]()
     val perBatchOnTime = collection.mutable.ArrayBuffer[Set[Long]]()
-    val q = StreamingJobs.lateRouted(events, "10 seconds", "latebatches")(
+    val q = StreamingJobs.lateRouted(events, "10 seconds", tmpDir("latebatches"))(
       b => perBatchOnTime.synchronized {
         perBatchOnTime += b.select(unix_timestamp(col("ts")).as[Long]).collect().toSet },
       b => perBatchLate.synchronized {
@@ -968,6 +968,39 @@ class StreamingSpec extends SparkTestBase {
         s"onTime per batch = $onTime")
       assert(late == Seq(Set(95L)), s"late per batch = $late")
     } finally q.stop()
+  }
+
+  test("late routing resumes on the recorded boundary after a restart on the same checkpoint") {
+    // The boundary is read from the checkpoint's offset log, so a query
+    // restarted on it routes its first batch against the watermark the
+    // stopped query had reached (110s), not against 0.
+    implicit val sqlCtx = spark.sqlContext
+    val in = MemoryStream[(Timestamp, Long, Double)]
+    val events = in.toDF().toDF("ts", "user_id", "value")
+    val checkpoint = tmpDir("laterestart")
+    val onTime = collection.mutable.ArrayBuffer[Set[Long]]()
+    val late = collection.mutable.ArrayBuffer[Set[Long]]()
+    def start() = StreamingJobs.lateRouted(events, "10 seconds", checkpoint)(
+      b => onTime.synchronized {
+        onTime += b.select(unix_timestamp(col("ts")).as[Long]).collect().toSet },
+      b => late.synchronized {
+        late += b.select(unix_timestamp(col("ts")).as[Long]).collect().toSet })
+      .start()
+    val first = start()
+    try {
+      in.addData((ts(60), 1L, 1.0))                      // boundary 0; wm → 50
+      first.processAllAvailable()
+      in.addData((ts(55), 1L, 2.0), (ts(120), 1L, 3.0)) // boundary 50; wm → 110
+      first.processAllAvailable()
+    } finally first.stop()
+    val second = start()
+    try {
+      in.addData((ts(95), 1L, 4.0), (ts(130), 1L, 5.0)) // boundary 110 after restart
+      second.processAllAvailable()
+      assert(onTime.filter(_.nonEmpty) == Seq(Set(60L), Set(55L, 120L), Set(130L)),
+        s"onTime per batch = $onTime")
+      assert(late.filter(_.nonEmpty) == Seq(Set(95L)), s"late per batch = $late")
+    } finally second.stop()
   }
 
   test("Trigger.AvailableNow drains a bounded backlog then stops (FIRE_AND_PURGE analog)") {
