@@ -1,6 +1,6 @@
 package graft
 
-import graft.functions.{LayoutFunctions, RollingHash, TextHash, TextSetExprs, VectorFunctions}
+import graft.functions.{LayoutFunctions, RollingHash, TextFunctions, TextHash, TextSetExprs, VectorFunctions}
 import org.apache.spark.sql.{Column, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
@@ -89,7 +89,7 @@ object GraftExtensions {
     SqlFunction("graft_gram_strings", "(text, n)", 2,
       a => TextHash.gramStrings(a.col(0), a.int(1, "n"))),
     SqlFunction("graft_count_in_set", "(arr, 'a,b,c')", 2,
-      a => TextSetExprs.countInSet(a.col(0), a.csv(1, "set"))),
+      a => TextFunctions.markerHits(a.col(0), a.csv(1, "set"))),
     SqlFunction("graft_max_token_count", "(arr)", 1,
       a => TextSetExprs.maxTokenCount(a.col(0))),
     SqlFunction("graft_zvalue", "(x, y, bits)", 3,

@@ -18,11 +18,13 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * any column argument is NULL. The plan prints the call itself:
   * `static_invoke(graft.functions.TextHash.simhashData(text#3, 60))`.
   *
-  * Constant arguments (Int, Long, String) ride as literals after the
-  * columns. Plan-time tables and sets cannot: a literal of an object
-  * type compares by reference, which breaks canonicalization and
-  * exchange reuse — those kernels keep their own expression classes
-  * (see README, "Kernels").
+  * Constant arguments ride as literals after the columns: Int, Long,
+  * String, and arrays of them (`TextFunctions.markerHits` passes its
+  * markers as one `array<string>`). A literal compares by value —
+  * an array literal holds a `GenericArrayData`, which compares and
+  * hashes element-wise — so two builds of the same call give equal
+  * plans and exchange reuse holds. Two kernels keep their own
+  * expression classes, each for its reason (README, "Kernels").
   */
 object Kernel {
 

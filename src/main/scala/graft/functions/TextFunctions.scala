@@ -7,9 +7,9 @@ import org.apache.spark.sql.types.LongType
 /** Codegen-friendly text primitives (SURVEY.md §2.7).
   *
   * Built from codegen'd `org.apache.spark.sql.functions._` built-ins
-  * plus native expressions where a built-in form would need an
-  * interpreted higher-order function ([[TextSetExprs]] for marker
-  * counting) — no UDF serialization cost, expressions visible to
+  * plus native kernels where a built-in form would need an
+  * interpreted higher-order function ([[markerHits]]) — no UDF
+  * serialization cost, expressions visible to
   * Catalyst for pruning/pushdown, and the per-document projections
   * stay inside whole-stage codegen (PlanSpec guards the text-family
   * plans against `lambdafunction` reappearing). The only hash used is
@@ -76,12 +76,15 @@ object TextFunctions {
   def permuteSql(inner: String, a: Long, b: Long): String =
     s"($a * ($inner % $MinhashP) + $b) % $MinhashP"
 
-  /** Count of tokens that appear in a marker set (with multiplicity) —
-    * the n-gram-heuristic language-ID building block. Native
-    * codegen'd expression ([[TextSetExprs.countInSet]]); the HOF form
-    * `size(filter(tk, isin))` ran one interpreted lambda per token. */
+  /** Count of tokens that appear in `markers` (with multiplicity;
+    * NULL tokens never match; strings compare byte for byte) — the
+    * n-gram-heuristic language-ID building block. The markers ride as
+    * one array<string> literal into [[TextSetExprs.countInSetData]];
+    * the HOF form `size(filter(tk, isin))` ran one interpreted lambda
+    * per token. */
   def markerHits(tk: Column, markers: Seq[String]): Column =
-    TextSetExprs.countInSet(tk, markers)
+    Kernel.call(TextSetExprs, "countInSetData", LongType, Seq(tk),
+      Seq(markers.toArray))
 
   /** English/German/French stopword markers for the language-ID
     * heuristic. Short, high-frequency function words. */
@@ -101,4 +104,10 @@ object TextFunctions {
       .when(de >= fr && de > 0, "de")
       .when(fr > 0, "fr")
       .otherwise("und")
+
+  /** The detected language of a token array: [[detectedLang]] over
+    * its en/de/fr [[markerHits]]. */
+  def detectLang(tk: Column): Column =
+    detectedLang(markerHits(tk, enMarkers), markerHits(tk, deMarkers),
+      markerHits(tk, frMarkers))
 }

@@ -22,7 +22,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * with empties dropped; hash = first 15 hex digits of md5 as a long
   * (= unsigned(first 8 bytes) >>> 4).
   *
-  * `MinhashSigExpr` additionally folds the k universal-hash
+  * `minhashSigData` additionally folds the k universal-hash
   * permutations into the same pass, turning MinHash signatures into a
   * pure narrow map — no explode, no shuffle — which is exactly what
   * you want in front of a 100 TB corpus.
@@ -506,8 +506,18 @@ object TextHash {
       k: Int): ArrayData =
     new GenericArrayData(dfPrefixJvm(gs.toLongArray(), hot, rank, k))
 
-  def minhashSigData(text: UTF8String, n: Int, pa: Array[Long], pb: Array[Long]): ArrayData =
-    new GenericArrayData(minhashSigBytes(text, n, pa, pb))
+  /** The k permutations' (a_i), (b_i) columns, derived from
+    * [[TextFunctions.minhashAB]] once per k. */
+  private val minhashTables =
+    new java.util.concurrent.ConcurrentHashMap[Integer, Array[Array[Long]]]()
+
+  def minhashSigData(text: UTF8String, n: Int, k: Int): ArrayData = {
+    val ab = minhashTables.computeIfAbsent(k, _ => {
+      val t = TextFunctions.minhashAB(k)
+      Array(t.map(_._1).toArray, t.map(_._2).toArray)
+    })
+    new GenericArrayData(minhashSigBytes(text, n, ab(0), ab(1)))
+  }
 
   def gramHashes(text: Column, n: Int): Column =
     Kernel.call(this, "gramHashesData", Kernel.LongArray, Seq(text), Seq(n))
@@ -537,7 +547,7 @@ object TextHash {
     Kernel.call(this, "simhashData", LongType, Seq(text), Seq(bits))
 
   def minhashSig(text: Column, n: Int, k: Int): Column =
-    ColumnBridge.column(MinhashSigExpr(ColumnBridge.expression(text), n, k))
+    Kernel.call(this, "minhashSigData", Kernel.LongArray, Seq(text), Seq(n, k))
 
   /** df-ordered AllPairs prefix of a sorted gram-set column — see
     * [[dfPrefixJvm]]. `hot`/`rank` ride into codegen as reference
@@ -556,8 +566,12 @@ object TextHash {
 
 /** [[TextHash.dfPrefixJvm]] as a codegen'd unary expression; the hot
   * table and its order ranks are plan-time constants shipped as
-  * codegen reference objects (same pattern as [[MinhashSigExpr]]'s
-  * permutation tables). The tables are held as IndexedSeq, NOT bare
+  * codegen reference objects. It is not a [[Kernel.call]] row because
+  * the kernel binary-searches the table (up to
+  * [[graft.operators.DedupOps.HotGramK]] entries) for every gram: an
+  * `Array[Long]` literal arrives as a `GenericArrayData` of boxed
+  * longs, so each probe would unbox, or each row would copy it back
+  * into a `long[]`. The tables are held as IndexedSeq, NOT bare
   * arrays: case-class equality over arrays is reference-based, so two
   * semantically identical expressions would never compare equal and
   * plan canonicalization / subexpression reuse would silently stop
@@ -580,23 +594,4 @@ case class DfPrefixExpr(child: Expression, hot: IndexedSeq[Long],
   override protected def withNewChildInternal(c: Expression): DfPrefixExpr =
     copy(child = c)
   override def prettyName: String = "df_prefix"
-}
-
-case class MinhashSigExpr(child: Expression, n: Int, k: Int)
-    extends UnaryExpression {
-  private lazy val ab = TextFunctions.minhashAB(k).toArray
-  private lazy val pa: Array[Long] = ab.map(_._1)
-  private lazy val pb: Array[Long] = ab.map(_._2)
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullSafeEval(text: Any): Any =
-    TextHash.minhashSigData(text.asInstanceOf[UTF8String], n, pa, pb)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val paRef = ctx.addReferenceObj("minhashPa", pa, "long[]")
-    val pbRef = ctx.addReferenceObj("minhashPb", pb, "long[]")
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.TextHash.minhashSigData($c, $n, $paRef, $pbRef);")
-  }
-  override protected def withNewChildInternal(c: Expression): MinhashSigExpr =
-    copy(child = c)
-  override def prettyName: String = "minhash_sig"
 }

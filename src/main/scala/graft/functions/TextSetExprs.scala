@@ -1,31 +1,27 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.graftbridge.ColumnBridge
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, LongType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native set-membership counting over string arrays — the
-  * implementation behind [[TextFunctions.markerHits]].
+/** Native kernels over string and id arrays: marker counting (behind
+  * [[TextFunctions.markerHits]]), token-frequency signals and
+  * candidate-pair expansion.
   *
-  * The declarative form `size(filter(tk, t -> t.isin(markers)))` is an
-  * INTERPRETED higher-order function (a lambda invocation per token —
-  * the NOTES.md ~16 µs/lambda class) sitting in the per-document hot
-  * path of language ID, quality scoring, and curation. This expression
-  * keeps the exact semantics (count WITH multiplicity, nulls never
-  * match) as one hash-set probe per token, and ships real `doGenCode`
-  * so the text projections stay inside whole-stage codegen
-  * (`CollapseCodegenStages` refuses WSCG for any node holding a
-  * `CodegenFallback`). */
+  * The declarative forms (`size(filter(tk, t -> t.isin(markers)))`
+  * and the like) are INTERPRETED higher-order functions (a lambda
+  * invocation per token — the NOTES.md ~16 µs/lambda class) sitting
+  * in the per-document hot path of language ID, quality scoring, and
+  * curation. Each kernel keeps the exact semantics in one primitive
+  * loop, called through [[Kernel.call]] so the text projections stay
+  * inside whole-stage codegen. */
 object TextSetExprs {
 
-  /** Count of elements of `tk` (array<string>) present in `markers`,
-    * with multiplicity. */
+  /** [[TextFunctions.markerHits]] under the `graft_count_in_set` name. */
   def countInSet(tk: Column, markers: Seq[String]): Column =
-    ColumnBridge.column(CountInSetExpr(ColumnBridge.expression(tk), markers))
+    TextFunctions.markerHits(tk, markers)
 
   /** Occurrence count of the most frequent element of `tk`
     * (array<string>); 0 for an empty array — the Gopher-style
@@ -155,12 +151,21 @@ object TextSetExprs {
     new GenericArrayData(if (k == cap) out else out.slice(0, k))
   }
 
-  def countInSetData(a: ArrayData, set: java.util.HashSet[UTF8String]): Long = {
+  /** Elements of `a` equal to some element of `markers`, with
+    * multiplicity; NULL elements never match. `markers` is a short
+    * literal (language ID passes 6–7 stopwords), scanned per token. */
+  def countInSetData(a: ArrayData, markers: ArrayData): Long = {
     val n = a.numElements()
+    val m = markers.numElements()
     var cnt = 0L
     var i = 0
     while (i < n) {
-      if (!a.isNullAt(i) && set.contains(a.getUTF8String(i))) cnt += 1
+      if (!a.isNullAt(i)) {
+        val t = a.getUTF8String(i)
+        var j = 0
+        while (j < m && (markers.isNullAt(j) || !t.equals(markers.getUTF8String(j)))) j += 1
+        if (j < m) cnt += 1
+      }
       i += 1
     }
     cnt
@@ -197,26 +202,4 @@ object TextSetExprs {
     while (it.hasNext) { val c = it.next().toLong; ssq += c * c }
     ssq
   }
-}
-
-case class CountInSetExpr(child: Expression, markers: Seq[String])
-    extends UnaryExpression {
-  override def dataType: DataType = LongType
-  // rebuilt per JVM after serialization; UTF8String equality is
-  // byte-wise, matching Spark's string semantics for isin
-  @transient private lazy val set: java.util.HashSet[UTF8String] = {
-    val s = new java.util.HashSet[UTF8String](markers.size * 2)
-    markers.foreach(m => s.add(UTF8String.fromString(m)))
-    s
-  }
-  override def nullSafeEval(a: Any): Any =
-    TextSetExprs.countInSetData(a.asInstanceOf[ArrayData], set)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val setRef = ctx.addReferenceObj("markerSet", set, "java.util.HashSet")
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.TextSetExprs.countInSetData($c, $setRef);")
-  }
-  override protected def withNewChildInternal(c: Expression): CountInSetExpr =
-    copy(child = c)
-  override def prettyName: String = "count_in_set"
 }

@@ -1,52 +1,33 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
-/** Native Catalyst expressions for the embedding hot path — the
-  * implementations behind [[VectorFunctions.quantize]] / `dotL` /
-  * `norm2`.
+/** Native kernels for the embedding hot path — the implementations
+  * behind [[VectorFunctions.quantize]] / `dotL` / `norm2`.
   *
   * The declarative forms (`transform`/`zip_with`/`aggregate`) are
   * INTERPRETED higher-order functions — ~128 lambda invocations per
   * 64-dim dot product, which dominates every ANN / embedding-dedup
   * query (NOTES.md measured ~50× penalty vs a JVM loop). These
-  * expressions keep the exact integer semantics of the HOF forms
+  * kernels keep the exact integer semantics of the HOF forms
   * (and of the DuckDB oracles) while running one tight primitive
   * loop per row. All are one-pass and evaluated inside the scan/join
   * projections — no change to plan shape.
   *
-  * Each one generates a static call into the JVM kernel below —
-  * `norm2` and `sumMod` through [[Kernel.call]], `quantize` and
-  * `dotL` through their own classes (the element type read from the
-  * child; NULL on mismatched lengths). This matters beyond saving a
-  * virtual dispatch: `CollapseCodegenStages` refuses whole-stage
-  * codegen for ANY plan node containing a `CodegenFallback`
-  * expression, so a fallback here would knock the entire
-  * scan→project→join stage onto the slow iterator path. With real
-  * codegen the ANN/dedup stages stay inside one `WholeStageCodegen`
-  * span (asserted in PlanSpec).
+  * Each one is a static call from generated code — through
+  * [[Kernel.call]], except `quantize`, whose [[QuantizeE3Expr]] reads
+  * the child's element type. This matters beyond saving a virtual
+  * dispatch: `CollapseCodegenStages` refuses whole-stage codegen for
+  * ANY plan node containing a `CodegenFallback` expression, so a
+  * fallback here would knock the entire scan→project→join stage onto
+  * the slow iterator path. With real codegen the ANN/dedup stages
+  * stay inside one `WholeStageCodegen` span (asserted in PlanSpec).
   */
 object VectorExprs {
-
-  /** e3 fixed-point quantization: round(x*1000) HALF_UP per element —
-    * identical to `transform(emb, x -> round(x*1000, 0))` and the
-    * oracle's `list_transform(..., round(x*1000))`. */
-  def quantizeE3(emb: Column): Column =
-    ColumnBridge.column(QuantizeE3Expr(ColumnBridge.expression(emb)))
-
-  /** Integer dot product of two array<long> columns. */
-  def dotLong(a: Column, b: Column): Column =
-    ColumnBridge.column(DotLongExpr(
-      ColumnBridge.expression(a), ColumnBridge.expression(b)))
-
-  /** Integer squared norm of an array<long> column. */
-  def norm2Long(a: Column): Column =
-    Kernel.call(this, "norm2Data", LongType, Seq(a))
 
   // ---- codegen kernels (static forwarders; called from generated
   // ---- Java and from the interpreted eval paths) --------------------
@@ -109,28 +90,4 @@ case class QuantizeE3Expr(child: Expression)
   override protected def withNewChildInternal(c: Expression): QuantizeE3Expr =
     copy(child = c)
   override def prettyName: String = "quantize_e3"
-}
-
-case class DotLongExpr(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = LongType
-  // zip_with pads the shorter array with nulls and null*x sums to
-  // null — mismatched lengths yield NULL, never a truncated dot
-  override def nullable: Boolean = true
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val aa = a.asInstanceOf[ArrayData]
-    val bb = b.asInstanceOf[ArrayData]
-    if (aa.numElements() != bb.numElements()) null
-    else VectorExprs.dotData(aa, bb)
-  }
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => s"""
-      if ($a.numElements() != $b.numElements()) {
-        ${ev.isNull} = true;
-      } else {
-        ${ev.value} = graft.functions.VectorExprs.dotData($a, $b);
-      }""")
-  override protected def withNewChildrenInternal(
-      l: Expression, r: Expression): DotLongExpr = copy(left = l, right = r)
-  override def prettyName: String = "dot_long"
 }

@@ -3,6 +3,7 @@ package graft.functions
 import java.security.MessageDigest
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType}
 
@@ -27,14 +28,18 @@ object VectorFunctions {
   /** Fixed-point e3 quantization of an array<float|double> →
     * array<long>: round(x*1000) HALF_UP per element, identical to
     * `transform(emb, x -> round(x*1000, 0))`. */
-  def quantize(emb: Column): Column = VectorExprs.quantizeE3(emb)
+  def quantize(emb: Column): Column =
+    ColumnBridge.column(QuantizeE3Expr(ColumnBridge.expression(emb)))
 
   /** Integer dot product of two array<long> columns. NULL when the
     * lengths differ (`zip_with` pad-with-null semantics). */
-  def dotL(a: Column, b: Column): Column = VectorExprs.dotLong(a, b)
+  def dotL(a: Column, b: Column): Column =
+    when(size(a) === size(b),
+      Kernel.call(VectorExprs, "dotData", LongType, Seq(a, b)))
 
   /** Integer squared norm. */
-  def norm2(a: Column): Column = VectorExprs.norm2Long(a)
+  def norm2(a: Column): Column =
+    Kernel.call(VectorExprs, "norm2Data", LongType, Seq(a))
 
   /** Cosine from integer dot + squared norms (per-row IEEE ops only). */
   def cosine(dot: Column, n2a: Column, n2b: Column): Column =

@@ -441,6 +441,23 @@ object Multimodal {
     }
   }
 
+  /** 64-bit hash of 64 pooled signal values: bit i set iff value i is
+    * above their mean. None for a flat signal (zero contrast): every
+    * flat input would hash to 0 whatever its level. */
+  private def aboveMeanHash(f: Array[Float]): Option[Long] = {
+    var mn = Float.MaxValue; var mx = Float.MinValue; var s = 0.0
+    var i = 0
+    while (i < 64) { s += f(i); if (f(i) < mn) mn = f(i); if (f(i) > mx) mx = f(i); i += 1 }
+    if (mx - mn < 1e-6f) None
+    else {
+      val mean = s / 64
+      var h = 0L
+      i = 0
+      while (i < 64) { if (f(i) > mean) h |= 1L << i; i += 1 }
+      Some(h)
+    }
+  }
+
   /** 64-bit average-hash (aHash) of an image: decode to 64 block-mean
     * luminances via [[ImageIoCodec]], bit i set iff block i is
     * brighter than the image mean — the classic perceptual
@@ -451,19 +468,7 @@ object Multimodal {
     * frame would otherwise pair as hamming-0 "duplicates" — no
     * structure means nothing to match. */
   def imageAHash(bytes: Array[Byte]): Option[Long] =
-    ImageIoCodec.decode(bytes, 64).flatMap { f =>
-      var mn = Float.MaxValue; var mx = Float.MinValue; var s = 0.0
-      var i = 0
-      while (i < 64) { s += f(i); if (f(i) < mn) mn = f(i); if (f(i) > mx) mx = f(i); i += 1 }
-      if (mx - mn < 1e-6f) None
-      else {
-        val mean = s / 64
-        var h = 0L
-        i = 0
-        while (i < 64) { if (f(i) > mean) h |= 1L << i; i += 1 }
-        Some(h)
-      }
-    }
+    ImageIoCodec.decode(bytes, 64).flatMap(aboveMeanHash)
 
   /** 64-bit perceptual AUDIO fingerprint: the clip's loudness
     * envelope pooled to 64 time slots via the real PCM codec
@@ -475,56 +480,42 @@ object Multimodal {
     * or constant tone has no envelope structure, so every flat clip
     * would collide at hash 0 — None instead. */
   def audioAHash(bytes: Array[Byte]): Option[Long] =
-    AudioWavCodec.decode(bytes, 64).flatMap { f =>
-      var mn = Float.MaxValue; var mx = Float.MinValue; var s = 0.0
-      var i = 0
-      while (i < 64) { s += f(i); if (f(i) < mn) mn = f(i); if (f(i) > mx) mx = f(i); i += 1 }
-      if (mx - mn < 1e-6f) None
-      else {
-        val mean = s / 64
-        var h = 0L
-        i = 0
-        while (i < 64) { if (f(i) > mean) h |= 1L << i; i += 1 }
-        Some(h)
-      }
-    }
+    AudioWavCodec.decode(bytes, 64).flatMap(aboveMeanHash)
 
   /** Audio near-dup pairs over PCM assets — the audio twin of
     * [[visualNearDup]] and the missing piece of the per-modality
     * dedup family (text MinHash/SimHash, image aHash, audio
-    * envelope): [[audioAHash]] per clip in the per-partition decode
-    * stage (bytes never shuffle; only (doc_id, hash) longs do), then
-    * the SHARED exact-recall pigeonhole blocking with the same
-    * block-frequency quadratic guard. Undecodable and flat clips are
-    * skipped (nothing rhythmic to match). */
+    * envelope): [[audioAHash]] per clip, then the same blocked
+    * Hamming join. Undecodable and flat clips are skipped (nothing
+    * rhythmic to match). */
   def audioNearDup(assets: Dataset[MediaAsset], maxHamming: Int = 3,
-                   maxBlockDf: Int = 1000): DataFrame = {
-    val spark = assets.sparkSession
-    import spark.implicits._
-    val hashed = assets.filter(_.kind == "audio")
-      .mapPartitions(it => it.flatMap(a => audioAHash(a.bytes).map(h => (a.doc_id, h))))
-      .toDF("doc_id", "ahash")
-    graft.operators.DedupOps.blockedHammingPairs(
-      hashed, "ahash", blocks = 4, blockBits = 16, maxHamming, maxBlockDf)
-  }
+                   maxBlockDf: Int = 1000): DataFrame =
+    nearDup(assets, "audio", audioAHash, maxHamming, maxBlockDf)
 
   /** Visual near-dup pairs over image assets — the multimodal
-    * counterpart of SimHash text dedup: aHash per image in the
-    * per-partition decode stage (bytes never shuffle; only
-    * (doc_id, hash) longs do), then the SHARED exact-recall pigeonhole
-    * blocking (`DedupOps.blockedHammingPairs`, 4×16-bit blocks —
-    * maxHamming ≤ 3 enforced there). aHash blocks are far less
+    * counterpart of SimHash text dedup: [[imageAHash]] per image, then
+    * the exact-recall pigeonhole blocking (maxHamming ≤ 3 enforced
+    * there). aHash blocks are far less
     * uniform than md5 band keys (dark/blown-out regions repeat across
     * a photo corpus), so the block-frequency cap is ON by default —
     * the quadratic-bucket guard, same as overlapPairs' df bound.
     * Undecodable and flat images are skipped (nothing visual to
     * match). */
   def visualNearDup(assets: Dataset[MediaAsset], maxHamming: Int = 3,
-                    maxBlockDf: Int = 1000): DataFrame = {
+                    maxBlockDf: Int = 1000): DataFrame =
+    nearDup(assets, "image", imageAHash, maxHamming, maxBlockDf)
+
+  /** Near-dup pairs of one media kind: `hash` per asset in the
+    * per-partition decode stage (bytes never shuffle; only
+    * (doc_id, hash) longs do; unhashable assets drop out), then
+    * `DedupOps.blockedHammingPairs` over 4×16-bit blocks. */
+  private def nearDup(assets: Dataset[MediaAsset], kind: String,
+      hash: Array[Byte] => Option[Long], maxHamming: Int,
+      maxBlockDf: Int): DataFrame = {
     val spark = assets.sparkSession
     import spark.implicits._
-    val hashed = assets.filter(_.kind == "image")
-      .mapPartitions(it => it.flatMap(a => imageAHash(a.bytes).map(h => (a.doc_id, h))))
+    val hashed = assets.filter(_.kind == kind)
+      .mapPartitions(it => it.flatMap(a => hash(a.bytes).map(h => (a.doc_id, h))))
       .toDF("doc_id", "ahash")
     graft.operators.DedupOps.blockedHammingPairs(
       hashed, "ahash", blocks = 4, blockBits = 16, maxHamming, maxBlockDf)

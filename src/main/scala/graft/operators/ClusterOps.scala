@@ -72,38 +72,13 @@ object ClusterOps {
     * Pass `driverEdgeLimit = 0` to force the distributed loop
     * (ClusterSpec pins its per-round job count that way).
     *
-    * Observability (r12 ADVICE): the 280 B/edge figure is the
-    * STEADY-state estimate — the gather's transient serialized collect
-    * buffers add headroom on top, which is part of why the budget is
-    * 1/8 of heap rather than 1/2 — and because the value derives from
-    * `Runtime.maxMemory()` at class load, the driver-vs-distributed
-    * flip is environment-dependent. So the effective limit is logged
-    * ONCE at first use, and deployments can pin it without recompiling
-    * via the [[DriverEdgeLimitConf]] Spark conf (read only when the
-    * caller left the parameter at this default). */
+    * The 280 B/edge figure is the STEADY-state estimate — the gather's
+    * transient serialized collect buffers add headroom on top, which
+    * is part of why the budget is 1/8 of heap rather than 1/2. */
   val DriverEdgeLimit: Long = {
     val heapEighth = Runtime.getRuntime.maxMemory() / 8
     math.min(1L << 23, math.max(1L << 20, heapEighth / 280L))
   }
-
-  /** Spark conf key that overrides the heap-derived [[DriverEdgeLimit]]
-    * for callers that keep the default parameter — makes path flips
-    * between environments pinnable and diagnosable (r12 ADVICE). */
-  val DriverEdgeLimitConf = "spark.graft.cc.driverEdgeLimit"
-
-  private val limitLogged = new java.util.concurrent.atomic.AtomicBoolean(false)
-
-  /** One-time INFO line naming the effective gather limit and where it
-    * came from, so a path flip between a 64 g study driver and an 8 g
-    * default driver shows up in the log instead of only in wall time. */
-  private def logLimitOnce(effective: Long, overridden: Boolean): Unit =
-    if (limitLogged.compareAndSet(false, true))
-      org.slf4j.LoggerFactory.getLogger(getClass).info(
-        s"connectedComponents driver-gather limit = $effective directed edges (" +
-          (if (overridden) s"overridden via $DriverEdgeLimitConf; "
-           else "") +
-          s"heap-derived default $DriverEdgeLimit from maxMemory=" +
-          s"${Runtime.getRuntime.maxMemory()} at ~280 B/edge steady + collect-buffer headroom)")
 
   /** Rounds taken by this thread's most recent [[connectedComponents]]
     * call — 0 for the driver union–find path (test observability;
@@ -122,21 +97,13 @@ object ClusterOps {
   def connectedComponents(pairs: DataFrame, a: String, b: String,
                           driverEdgeLimit: Long = DriverEdgeLimit): DataFrame = {
     val spark = pairs.sparkSession
-    // a caller-passed limit wins; the derived default can be pinned
-    // per-deployment via the conf (r12 ADVICE observability nit)
-    val confOverride =
-      if (driverEdgeLimit == DriverEdgeLimit)
-        spark.conf.getOption(DriverEdgeLimitConf).map(_.toLong)
-      else None
-    val limit = confOverride.getOrElse(driverEdgeLimit)
-    logLimitOnce(limit, confOverride.isDefined)
     val edges = pairs.select(col(a).as("s"), col(b).as("d"))
       .union(pairs.select(col(b).as("s"), col(a).as("d")))
       .persist(StorageLevel.MEMORY_AND_DISK)
     try {
       // materializes the persisted edges — the count both paths need
       val edgeCount = edges.count()
-      if (edgeCount <= limit) driverUnionFind(spark, edges)
+      if (edgeCount <= driverEdgeLimit) driverUnionFind(spark, edges)
       else starContract(edges)
     } finally edges.unpersist()
   }

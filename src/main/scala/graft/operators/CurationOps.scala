@@ -122,9 +122,7 @@ object CurationOps {
         when($"n_tokens" >= 10 &&
           expr("(n_tokens - n_distinct) * 10000 div n_tokens") <= 3000, 1L)
           .otherwise(0L))
-      .withColumn("detected", detectedLang(
-        markerHits($"tk", enMarkers), markerHits($"tk", deMarkers),
-        markerHits($"tk", frMarkers)))
+      .withColumn("detected", detectLang($"tk"))
       .withColumn("l_ok",
         when(!$"lang".isin(detectableLangs.map(l => l: Any): _*) ||
           $"detected" === $"lang", 1L).otherwise(0L))
@@ -609,9 +607,7 @@ object CurationOps {
   def langMismatch(spark: SparkSession, sfDir: String): DataFrame =
     Tables.documents(spark, sfDir)
       .withColumn("tk", tokens($"text"))
-      .withColumn("detected", detectedLang(
-        markerHits($"tk", enMarkers), markerHits($"tk", deMarkers),
-        markerHits($"tk", frMarkers)))
+      .withColumn("detected", detectLang($"tk"))
       .groupBy($"source", $"lang")
       .agg(count(lit(1)).as("n_docs"),
         sum(when($"detected" =!= $"lang", 1L).otherwise(0L)).as("n_mismatch"))

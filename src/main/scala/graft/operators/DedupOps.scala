@@ -506,7 +506,7 @@ object DedupOps {
     // split BEFORE the signature/gram passes: plan-audited on the
     // filter-after-bandExplode shape, the %IncrMod conjunct fused
     // into the signature-validity filter ABOVE the sig projection
-    // (minhash_sig evaluated for every doc, then 90% discarded)
+    // (minhashSig evaluated for every doc, then 90% discarded)
     // instead of splitting and pushing below it
     val docs = Tables.documents(spark, sfDir).select($"doc_id", $"text")
     val newDocs = docs.filter($"doc_id" % IncrMod === 0L)

@@ -859,16 +859,13 @@ object TextOps {
     * row — WHERE the #54 mismatches go (en-labeled docs detecting
     * 'und' is markup/code bleed; en detecting de is mislabeled
     * ingestion), which decides whether to re-run language ID or fix
-    * the feed. Shares the marker-hit + [[detectedLang]] decision
-    * stages with #45/#54 (one classifier definition); one narrow
-    * scan, a |langs|²-bounded partial agg, row totals broadcast
-    * back. */
+    * the feed. Shares the [[detectLang]] decision with #45/#54 (one
+    * classifier definition); one narrow scan, a |langs|²-bounded
+    * partial agg, row totals broadcast back. */
   def langConfusion(spark: SparkSession, sfDir: String): DataFrame = {
     val cm = Tables.documents(spark, sfDir)
       .withColumn("tk", tokens($"text"))
-      .withColumn("detected", detectedLang(
-        markerHits($"tk", enMarkers), markerHits($"tk", deMarkers),
-        markerHits($"tk", frMarkers)))
+      .withColumn("detected", detectLang($"tk"))
       .groupBy($"lang", $"detected")
       .agg(count(lit(1)).as("n_docs"))
     val rowTot = cm.groupBy($"lang").agg(sum($"n_docs").as("n_lang"))

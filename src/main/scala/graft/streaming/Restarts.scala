@@ -16,25 +16,10 @@ object Restarts {
   /** Fixed-delay restart: rebuild+start the query via `start`, await
     * termination; on failure retry up to `maxRestarts` times with
     * `delayMs` between attempts. Returns the number of restarts used;
-    * throws the last failure once attempts are exhausted. */
-  def fixedDelay(maxRestarts: Int, delayMs: Long)(start: () => StreamingQuery): Int = {
-    var attempt = 0
-    while (true) {
-      try {
-        // start() inside the try: a failure while rebuilding/starting
-        // the query (checkpoint dir hiccup, source listing error) is
-        // retried too, matching Flink's restart-from-checkpoint loop
-        start().awaitTermination()
-        return attempt
-      } catch {
-        case NonFatal(e) =>
-          if (attempt >= maxRestarts) throw e
-          attempt += 1
-          Thread.sleep(delayMs)
-      }
-    }
-    attempt
-  }
+    * throws the last failure once attempts are exhausted. This is
+    * [[failureRate]] with a window that never forgets a failure. */
+  def fixedDelay(maxRestarts: Int, delayMs: Long)(start: () => StreamingQuery): Int =
+    failureRate(maxRestarts, Long.MaxValue, delayMs)(start)
 
   /** Failure-rate restart: give up only if more than `maxFailures`
     * failures land inside a sliding `intervalMs` window (Flink's
@@ -45,6 +30,9 @@ object Restarts {
     var failures = List.empty[Long]
     while (true) {
       try {
+        // start() inside the try: a failure while rebuilding/starting
+        // the query (checkpoint dir hiccup, source listing error) is
+        // retried too, matching Flink's restart-from-checkpoint loop
         start().awaitTermination()
         return restarts
       } catch {

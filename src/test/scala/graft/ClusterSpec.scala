@@ -57,24 +57,6 @@ class ClusterSpec extends SparkTestBase {
     }
   }
 
-  test("the heap-derived gather limit is pinnable via spark.graft.cc.driverEdgeLimit") {
-    import spark.implicits._
-    // path choice is observable through lastRounds: the driver
-    // union–find resets it to 0, star contraction counts rounds > 0
-    val pairs = (1L to 7L).map(i => (i, i + 1)).toDF("a", "b")
-    spark.conf.set(ClusterOps.DriverEdgeLimitConf, "0")
-    try {
-      ClusterOps.connectedComponents(pairs, "a", "b").count()
-      assert(ClusterOps.lastRounds.get() > 0,
-        "conf override of the default limit must route onto the distributed path")
-      // an explicit caller limit wins over the conf
-      ClusterOps.connectedComponents(pairs, "a", "b",
-        driverEdgeLimit = 1L << 20).count()
-      assert(ClusterOps.lastRounds.get() == 0,
-        "an explicit per-call limit must ignore the conf override")
-    } finally spark.conf.unset(ClusterOps.DriverEdgeLimitConf)
-  }
-
   test("no persisted or checkpointed blocks survive a call on either path (BENCH_r03 leak)") {
     import spark.implicits._
     // capture baseline: other suites may share the session

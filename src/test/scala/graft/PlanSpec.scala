@@ -160,7 +160,7 @@ class PlanSpec extends SparkTestBase {
     // CodegenFallback expression — so this asserts the expressions
     // ship real doGenCode, keeping the scan→project stage fused.
     for ((q, marker) <- Seq(
-        "q_minhash_band" -> "minhash_sig",
+        "q_minhash_band" -> "minhashSigData",
         "q_simhash" -> "simhashData",
         "q_dedup_ngram" -> "df_prefix")) {
       val df = SparkEntry.queries(q)(spark, sf)
@@ -181,6 +181,42 @@ class PlanSpec extends SparkTestBase {
         s"$q: expected the $marker projection inside WholeStageCodegen:\n" +
           df.queryExecution.executedPlan)
     }
+  }
+
+  test("kernel calls with constant arguments compare by value: independent builds reuse one exchange") {
+    import graft.functions.{TextFunctions, TextHash}
+    import org.apache.spark.sql.Column
+    import org.apache.spark.sql.execution.adaptive.QueryStageExec
+    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+    import org.apache.spark.sql.functions.col
+    val docs = Tables.documents(spark, sf)
+    def tk = TextFunctions.tokens(col("text"))
+    // each builder call makes fresh constant objects (a new markers
+    // array per call), so only value equality makes the two builds equal
+    val cases = Seq[(String, () => Column)](
+      "minhashSig" -> (() => TextHash.minhashSig(col("text"), 3, 16)),
+      "markerHits" -> (() => TextFunctions.markerHits(tk, TextFunctions.enMarkers)))
+    for ((name, build) <- cases) {
+      def agg = docs.groupBy(build().as("key")).count()
+      val (a, b) = (agg, agg)
+      assert(a.queryExecution.optimizedPlan.sameResult(b.queryExecution.optimizedPlan),
+        s"$name: two independent builds must give sameResult plans")
+      val u = a.union(b)
+      u.collect()
+      def reused(p: SparkPlan): Boolean = p match {
+        case _: ReusedExchangeExec => true
+        case x: AdaptiveSparkPlanExec => reused(x.executedPlan)
+        case q: QueryStageExec => reused(q.plan)
+        case other => other.children.exists(reused)
+      }
+      assert(reused(u.queryExecution.executedPlan),
+        s"$name: the self-union must plan a ReusedExchangeExec:\n" +
+          u.queryExecution.executedPlan)
+    }
+    // and value equality still tells different constants apart
+    val en = docs.select(TextFunctions.markerHits(tk, TextFunctions.enMarkers))
+    val de = docs.select(TextFunctions.markerHits(tk, TextFunctions.deMarkers))
+    assert(!en.queryExecution.optimizedPlan.sameResult(de.queryExecution.optimizedPlan))
   }
 
   test("q_token_drift keeps top-k in a bounded aggregator — no vocab-sized window sort") {
