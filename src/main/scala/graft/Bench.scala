@@ -62,21 +62,12 @@ object Bench {
     // BENCH_ONLY.
     val auditOnly = Set("q_dedup_embedding", "q_decon_embedding")
     val withAudit = sys.env.get("SPARK_GRAFT_BENCH_AUDIT").contains("1")
-    // SPARK_GRAFT_BENCH_COLD=1 (r14, VERDICT r13 #6): time a SINGLE
-    // attempt per query instead of best-of-2. In a fresh JVM that is
-    // the run-each-query-once COLD regime: every artifact family's
-    // build cost lands on its first consumer exactly once (best-of-2
-    // pays builds inside the discarded first attempt, so the default
-    // numbers are steady-state serves). Default behavior unchanged —
-    // the driver's bench stays best-of-2, methodology identical to
-    // every prior round.
-    val coldAttempts = if (sys.env.get("SPARK_GRAFT_BENCH_COLD").contains("1")) 1 else 2
     val results = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .filter { case (name, _) =>
         withAudit || only.exists(_.contains(name)) || !auditOnly.contains(name) }
       .map { case (name, fn) =>
-      val attempts = (1 to coldAttempts).map { _ =>
+      val attempts = (1 to 2).map { _ =>
         resetSession()
         val t0 = System.nanoTime()
         try { fn(spark, sfDir).count(); (System.nanoTime() - t0) / 1e9 }

@@ -19,10 +19,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * inside whole-stage codegen. */
 object TextSetExprs {
 
-  /** [[TextFunctions.markerHits]] under the `graft_count_in_set` name. */
-  def countInSet(tk: Column, markers: Seq[String]): Column =
-    TextFunctions.markerHits(tk, markers)
-
   /** Occurrence count of the most frequent element of `tk`
     * (array<string>); 0 for an empty array — the Gopher-style
     * repetition signal's kernel. */

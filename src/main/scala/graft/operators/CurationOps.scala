@@ -1087,12 +1087,11 @@ object CurationOps {
     * Plan: one (source, token) partial-agg'd count shuffle; the
     * per-source and per-token totals derive from it (vocab-sized
     * re-aggregations), the tiny per-source totals broadcast, and the
-    * top-k is the bounded-heap [[BoundedTopK]] aggregator — O(k)
-    * state per source merged map-side, never a sort of a source's
-    * whole vocabulary in one window partition (the q_topn_agg
-    * pattern; vocab is bounded, but O(k) beats O(vocab)). */
+    * top-k is the [[TopK]] builder — O(k) state per source merged
+    * map-side, never a sort of a source's whole vocabulary in one
+    * window partition (the q_topn_agg pattern; vocab is bounded, but
+    * O(k) beats O(vocab)). */
   def tokenDrift(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits.{newProductEncoder, newStringEncoder}
     // r14: the plan used to reference this subtree FOUR times
     // (srcTot, tokTot, grand, and the final join) and ReuseExchange
     // never fires across them — the join branches carry inferred
@@ -1115,12 +1114,7 @@ object CurationOps {
       .agg(sum(size(tokens($"text")).cast(LongType)).as("na"))
     val tokTot = bySrc.groupBy($"token").agg(sum($"a").as("atot"))
     val grand = srcTot.agg(sum($"na").as("ntot"))
-    // (token, a, rate_e3, rest_rate_e3, drift_e3) per source, kept
-    // k-at-a-time: drift desc, token asc
-    val topk = new BoundedTopK[(String, Long, Long, Long, Long)](
-      DriftTopK,
-      (x, y) => x._5 > y._5 || (x._5 == y._5 && x._1 < y._1))
-    bySrc.join(tokTot, "token")
+    val drift = bySrc.join(tokTot, "token")
       .join(broadcast(srcTot), "source")
       .crossJoin(broadcast(grand))
       .select($"source", $"token", $"a",
@@ -1129,16 +1123,11 @@ object CurationOps {
         // rate 0, not a division error
         expr("(1000 * (atot - a)) div greatest(ntot - na, 1)").as("rest_rate_e3"))
       .withColumn("drift_e3", $"rate_e3" - $"rest_rate_e3")
-      .as[(String, String, Long, Long, Long, Long)]
-      .groupByKey(_._1)
-      .mapValues { case (_, token, a, rate, rest, drift) => (token, a, rate, rest, drift) }
-      .agg(topk.toColumn.name("top"))
-      .flatMap { case (source, top) =>
-        top.iterator.zipWithIndex.map { case ((token, a, rate, rest, drift), i) =>
-          (source, (i + 1).toLong, token, a, rate, rest, drift)
-        }
-      }
-      .toDF("source", "rnk", "token", "a", "rate_e3", "rest_rate_e3", "drift_e3")
+    // per source, kept k-at-a-time: drift desc, token asc
+    TopK(drift, Seq("source"), Seq((-$"drift_e3").as("drift_e3"), $"token",
+        $"a", $"rate_e3", $"rest_rate_e3"), DriftTopK, "rnk")
+      .select($"source", $"rnk", $"token", $"a", $"rate_e3", $"rest_rate_e3",
+        (-$"drift_e3").as("drift_e3"))
       .orderBy($"source", $"rnk")
   }
 
@@ -1511,10 +1500,10 @@ object CurationOps {
     * deterministic 60-bit hash — a reproducible fixed-size
     * "reservoir" (md5 order, never rand(): the same K docs come back
     * on every run and engine, and adding documents only ever replaces
-    * the highest-hash picks). Physical shape: the [[BoundedTopK]]
-    * aggregator keeps O(K) state per partition and merges K-sized
-    * buffers, so the corpus is scanned once and NEVER globally sorted
-    * — the shuffle carries partitions × K rows where the oracle's
+    * the highest-hash picks). Physical shape: the [[TopK]] builder
+    * keeps O(K) state per partition and merges K-sized buffers, so
+    * the corpus is scanned once and NEVER globally sorted — the
+    * shuffle carries partitions × K rows where the oracle's
     * ORDER BY ... LIMIT K would sort all of them (PlanSpec pins the
     * no-global-Sort shape). */
   /** The deterministic sample key of [[uniformSample]] over any
@@ -1523,29 +1512,19 @@ object CurationOps {
     docs.select(hash60(concat($"doc_id".cast("string"), lit(":u"))).as("h"),
       $"doc_id", $"source")
 
-  /** The bounded-heap reservoir stage of [[uniformSample]] — a GLOBAL
-    * [[BoundedTopK]] aggregate, shared verbatim by the streaming form
-    * (complete mode): the K-smallest merge is a commutative,
-    * idempotent-on-duplicates monoid, so micro-batch boundaries and
-    * arrival order can never change the reservoir — the same K docs
-    * fall out of an unbounded stream as out of the batch scan. */
-  def reservoirAgg(keyed: DataFrame): DataFrame = {
-    import keyed.sparkSession.implicits.{newProductEncoder, newLongEncoder, newStringEncoder}
-    val agg = new BoundedTopK[(Long, Long, String)](UniformK,
-      (a, b) => a._1 < b._1 || (a._1 == b._1 && a._2 < b._2))
-    keyed.as[(Long, Long, String)]
-      .select(agg.toColumn.name("top"))
-      .toDF("top")
-  }
+  /** The reservoir stage of [[uniformSample]] — a GLOBAL [[TopK]]
+    * over (h, doc_id), shared verbatim by the streaming form (complete
+    * mode): the K-smallest merge is commutative, so micro-batch
+    * boundaries and arrival order can never change the reservoir —
+    * the same K docs fall out of an unbounded stream as out of the
+    * batch scan. Output: (rnk, h, doc_id, source). */
+  def reservoirAgg(keyed: DataFrame): DataFrame =
+    TopK(keyed, Nil, Seq($"h", $"doc_id", $"source"), UniformK, "rnk")
 
-  /** Rank-explode presentation shared by the batch sample and the
-    * streaming spec's final-reservoir readout. */
+  /** Presentation shared by the batch sample and the streaming spec's
+    * final-reservoir readout. */
   def reservoirRows(top: DataFrame): DataFrame =
-    top
-      .select(posexplode($"top").as(Seq("pos", "r")))
-      .select(($"pos" + 1).cast(LongType).as("rnk"),
-        $"r._2".as("doc_id"), $"r._1".as("h"), $"r._3".as("source"))
-      .orderBy($"rnk")
+    top.select($"rnk", $"doc_id", $"h", $"source").orderBy($"rnk")
 
   def uniformSample(spark: SparkSession, sfDir: String): DataFrame =
     reservoirRows(reservoirAgg(uniformKeyed(Tables.documents(spark, sfDir))))
@@ -1562,22 +1541,15 @@ object CurationOps {
     * token budget, so a token-cost-aware audit samples them more).
     * Deterministic: md5-derived u, never rand(), integer division —
     * the same K docs on every run and engine. Physical shape is
-    * [[uniformSample]]'s: one narrow scan into a [[BoundedTopK]]
-    * aggregate, O(K) state per partition, no global sort. */
+    * [[uniformSample]]'s: one narrow scan into the [[TopK]] builder,
+    * O(K) state per partition, no global sort. */
   def weightedSample(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits.{newProductEncoder, newLongEncoder}
-    val agg = new BoundedTopK[(Long, Long, Long)](WeightedK,
-      (a, b) => a._1 < b._1 || (a._1 == b._1 && a._2 < b._2))
-    Tables.documents(spark, sfDir)
+    val prio = Tables.documents(spark, sfDir)
       .select(hash60(concat($"doc_id".cast("string"), lit(":w"))).as("u"),
         $"doc_id", (size(tokens($"text")).cast(LongType) + 1L).as("w"))
       .select(expr("u div w").as("prio"), $"doc_id", $"w")
-      .as[(Long, Long, Long)]
-      .select(agg.toColumn.name("top"))
-      .toDF("top")
-      .select(posexplode($"top").as(Seq("pos", "r")))
-      .select(($"pos" + 1).cast(LongType).as("rnk"),
-        $"r._2".as("doc_id"), $"r._1".as("prio"), $"r._3".as("w"))
+    TopK(prio, Nil, Seq($"prio", $"doc_id", $"w"), WeightedK, "rnk")
+      .select($"rnk", $"doc_id", $"prio", $"w")
       .orderBy($"rnk")
   }
 
@@ -1588,29 +1560,18 @@ object CurationOps {
     * each source — the stratified audit sample ("show me 20 random
     * docs from every source") with #76's determinism contract
     * (md5 order, never rand()). Physical shape: one
-    * [[BoundedTopK]]-aggregated shuffle keyed by source — partial
+    * [[TopK]]-aggregated shuffle keyed by source — partial
     * buffers keep O(K) rows per (partition × source) so the shuffle
     * carries sources × partitions × K rows, where the oracle's
     * per-source row_number window would sort every row of each
     * source's partition. Adding a source never perturbs another
     * source's picks (hash order is per-doc, keyed independently). */
   def groupSample(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits.{newProductEncoder, newLongEncoder, newStringEncoder}
-    val agg = new BoundedTopK[(Long, Long)](GroupK,
-      (a, b) => a._1 < b._1 || (a._1 == b._1 && a._2 < b._2))
-    Tables.documents(spark, sfDir)
+    val hashed = Tables.documents(spark, sfDir)
       .select($"source",
         hash60(concat($"doc_id".cast("string"), lit(":g"))).as("h"), $"doc_id")
-      .as[(String, Long, Long)]
-      .groupByKey(_._1)
-      .mapValues(r => (r._2, r._3))
-      .agg(agg.toColumn.name("top"))
-      .flatMap { case (src, top) =>
-        top.iterator.zipWithIndex.map { case ((h, doc), i) =>
-          (src, (i + 1).toLong, doc, h)
-        }
-      }
-      .toDF("source", "rnk", "doc_id", "h")
+    TopK(hashed, Seq("source"), Seq($"h", $"doc_id"), GroupK, "rnk")
+      .select($"source", $"rnk", $"doc_id", $"h")
       .orderBy($"source", $"rnk")
   }
 
@@ -1627,30 +1588,20 @@ object CurationOps {
     *
     * Scale shape: the quality frame is the materialized #95 artifact
     * (doc-keyed scan, built once per corpus); ranking is the SAME
-    * bounded-heap [[BoundedTopK]] as [[groupSample]] — O(K) state per
-    * source carried through a map-side-combined object agg, shuffle
+    * [[TopK]] builder as [[groupSample]] — O(K) state per source
+    * carried through a map-side-combined object agg, shuffle
     * volume sources × partitions × K, never a per-source sort of the
     * corpus. */
   def sourceCap(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits.{newProductEncoder, newLongEncoder, newStringEncoder}
-    val agg = new BoundedTopK[(Long, Long)](SourceCapK,
-      (a, b) => a._1 < b._1 || (a._1 == b._1 && a._2 < b._2))
     val quality = qualityPercentile(spark, sfDir)
       .select($"doc_id", $"composite_e4")
-    Tables.documents(spark, sfDir).select($"source", $"doc_id")
+    val scored = Tables.documents(spark, sfDir).select($"source", $"doc_id")
       .join(quality, Seq("doc_id"), "left")
-      .select($"source",
-        (-coalesce($"composite_e4", lit(-1L))).as("negq"), $"doc_id")
-      .as[(String, Long, Long)]
-      .groupByKey(_._1)
-      .mapValues(r => (r._2, r._3))
-      .agg(agg.toColumn.name("top"))
-      .flatMap { case (src, top) =>
-        top.iterator.zipWithIndex.map { case ((negq, doc), i) =>
-          (src, (i + 1).toLong, doc, -negq)
-        }
-      }
-      .toDF("source", "rnk", "doc_id", "composite_e4")
+      .select($"source", coalesce($"composite_e4", lit(-1L)).as("composite_e4"),
+        $"doc_id")
+    TopK(scored, Seq("source"), Seq((-$"composite_e4").as("composite_e4"), $"doc_id"),
+        SourceCapK, "rnk")
+      .select($"source", $"rnk", $"doc_id", (-$"composite_e4").as("composite_e4"))
       .orderBy($"source", $"rnk")
   }
 

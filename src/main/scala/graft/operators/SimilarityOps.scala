@@ -28,20 +28,21 @@ object SimilarityOps {
       .select($"vec_id", quantize($"embedding").as("q"))
       .withColumn("n2", norm2($"q"))
 
-  private def ranked(joined: DataFrame, k: Int,
-      carry: Seq[String] = Nil): DataFrame = {
-    val w = Window.partitionBy($"query_id")
-      .orderBy($"cos_e6".desc, $"vec_id".asc)
-    joined
-      .select($"query_id" +: $"vec_id" +:
-        cosineE6(dotL($"a.q", $"b.q"), $"a.n2", $"b.n2").as("cos_e6") +:
+  /** Per-`keys` top-k by the exact-tier total order (cos_e6 desc,
+    * vec_id asc) through the [[TopK]] builder: `keys`, `rank`,
+    * `vec_id`, `cos_e6`, then the `carry` columns. */
+  private def cosTop(scored: DataFrame, keys: Seq[String], k: Int,
+      carry: Seq[String] = Nil): DataFrame =
+    TopK(scored, keys, (-$"cos_e6").as("cos_e6") +: $"vec_id" +: carry.map(col),
+        k, "rank")
+      .select(keys.map(col) ++ Seq($"rank", $"vec_id", (-$"cos_e6").as("cos_e6")) ++
         carry.map(col): _*)
-      .withColumn("rank", row_number().over(w).cast(LongType))
-      .filter($"rank" <= k)
-      .select($"query_id" +: $"rank" +: $"vec_id" +: $"cos_e6" +:
-        carry.map(col): _*)
+
+  private def ranked(joined: DataFrame, k: Int): DataFrame =
+    cosTop(joined.select($"query_id", $"vec_id",
+        cosineE6(dotL($"a.q", $"b.q"), $"a.n2", $"b.n2").as("cos_e6")),
+        Seq("query_id"), k)
       .orderBy($"query_id", $"rank")
-  }
 
   /** Depth of the exact ranking artifact — the max k any exact-tier
     * consumer needs (#43/#152/#118 use 5, #79's exact leg 3, #110 2). */
@@ -65,14 +66,13 @@ object SimilarityOps {
     * in the union of per-label top-ks, so #152's different-label
     * ranking and #118's per-label counts come from the same ≤
     * |queries|·|labels|·K rows — a few hundred — while the build
-    * stays ONE corpus scan into a bounded-heap agg (O(K) state per
-    * group per partition via [[BoundedTopK]]; the shuffle carries
-    * groups × K rows, never the corpus). The artifact is exactly what
+    * stays ONE corpus scan into the [[TopK]] builder (O(K) state per
+    * group per partition; the shuffle carries groups × K rows, never
+    * the corpus). The artifact is exactly what
     * an ANN evaluation tier persists next to its index: the
     * ground-truth ranking for the standing query batch. */
   private[operators] def exactRankShared(spark: SparkSession, sfDir: String): DataFrame =
     exactRank(spark, sfDir) {
-      import spark.implicits.{newProductEncoder, newLongEncoder}
       val v = Tables.embeddings(spark, sfDir)
         .select($"vec_id", quantize($"embedding").as("q"),
           $"label".cast(LongType).as("label"))
@@ -85,23 +85,13 @@ object SimilarityOps {
         .select($"query_id", $"qlabel", col("b.label").as("label"),
           $"vec_id",
           cosineE6(dotL($"a.q", $"b.q"), $"a.n2", $"b.n2").as("cos_e6"))
-        .as[(Long, Long, Long, Long, Long)]
-      scored
-        .groupByKey(r => (r._1, r._2, r._3))
-        .mapValues(r => (r._5, r._4)) // (cos_e6, vec_id)
-        .agg(new BoundedTopK[(Long, Long)](AnnExactK,
-          (a, b) => a._1 > b._1 || (a._1 == b._1 && a._2 < b._2))
-          .toColumn.name("top"))
-        .flatMap { case ((qid, ql, l), top) =>
-          top.iterator.map { case (cos, vec) => (qid, ql, l, vec, cos) }
-        }
-        .toDF("query_id", "qlabel", "label", "vec_id", "cos_e6")
+      cosTop(scored, Seq("query_id", "qlabel", "label"), AnnExactK).drop("rank")
     }
 
   /** Per-query top-k of an [[exactRankShared]] projection by the
     * exact-tier total order (cos_e6 desc, vec_id asc) — the serve-side
-    * re-rank every consumer shares. The window partitions a few
-    * hundred artifact rows, never the corpus.
+    * re-rank every consumer shares, over a few hundred artifact rows,
+    * never the corpus.
     *
     * The containment proof only holds for k ≤ [[AnnExactK]] (the
     * artifact materializes exactly the top-[[AnnExactK]] per
@@ -115,13 +105,7 @@ object SimilarityOps {
       s"rankTop serves from the exactRankShared artifact, which holds only " +
       s"the top-$AnnExactK per (query, label); k=$k would be a silently " +
       s"truncated ranking. Raise AnnExactK (rebuilding the artifact) instead.")
-    val w = Window.partitionBy($"query_id")
-      .orderBy($"cos_e6".desc, $"vec_id".asc)
-    a.withColumn("rank", row_number().over(w).cast(LongType))
-      .filter($"rank" <= k)
-      .select($"query_id" +: $"rank" +: $"vec_id" +: $"cos_e6" +:
-        carry.map(col): _*)
-      .orderBy($"query_id", $"rank")
+    cosTop(a, Seq("query_id"), k, carry).orderBy($"query_id", $"rank")
   }
 
   /** #43 Brute-force cosine top-5 — served from the
@@ -1135,8 +1119,8 @@ object SimilarityOps {
     * corpus vector ONCE (in production the M-byte codes are the
     * stored column — a 32-64× bandwidth cut vs raw vectors, which is
     * the entire point of PQ); per-query top-k is the bounded-heap
-    * [[graft.operators.BoundedTopK]] (O(k) state, no window sort, no
-    * join, no shuffle beyond the |queries|-key agg). Bounded driver
+    * [[TopK]] builder (O(k) state, no window sort, no join, no
+    * shuffle beyond the |queries|-key agg). Bounded driver
     * collects: PqK seeds + d·PqK centroid cells + the 10-vector query
     * fixture. */
   def annPq(spark: SparkSession, sfDir: String): DataFrame = {
@@ -1164,7 +1148,7 @@ object SimilarityOps {
         row
       }
     }
-    encodeFrame(Tables.embeddings(spark, sfDir).filter($"vec_id" >= 10), books)
+    val scored = encodeFrame(Tables.embeddings(spark, sfDir).filter($"vec_id" >= 10), books)
       .as[(Long, Array[Int])]
       .flatMap { case (id, codes) =>
         qids.indices.iterator.map { qi =>
@@ -1173,17 +1157,9 @@ object SimilarityOps {
           (qids(qi), id, s)
         }
       }
-      .groupByKey(_._1)
-      .mapValues(r => (r._3, r._2))
-      .agg(new BoundedTopK[(Long, Long)](PqTopK,
-        (a, b) => a._1 < b._1 || (a._1 == b._1 && a._2 < b._2))
-        .toColumn.name("top"))
-      .flatMap { case (qid, top) =>
-        top.iterator.zipWithIndex.map { case ((ad, v), i) =>
-          (qid, (i + 1).toLong, v, ad)
-        }
-      }
-      .toDF("query_id", "rank", "vec_id", "adist_e6")
+      .toDF("query_id", "vec_id", "adist_e6")
+    TopK(scored, Seq("query_id"), Seq($"adist_e6", $"vec_id"), PqTopK, "rank")
+      .select($"query_id", $"rank", $"vec_id", $"adist_e6")
       .orderBy($"query_id", $"rank")
   }
 }

@@ -212,7 +212,6 @@ object TextOps {
     * BROADCAST against the vocab table — per-batch scoring never
     * reshuffles the corpus. */
   def tfidfTopk(spark: SparkSession, sfDir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val docs = Tables.documents(spark, sfDir)
     // per-doc term dedup is LOCAL (array_distinct before the explode)
     // — the old explode-then-distinct shape shuffled the full
@@ -230,15 +229,13 @@ object TextOps {
     val tf = docs.filter($"doc_id" < TfidfDocLimit)
       .select($"doc_id", explode(tokens($"text")).as("term"))
       .groupBy($"doc_id", $"term").agg(count(lit(1)).as("tf"))
-    val w = Window.partitionBy($"doc_id")
-      .orderBy($"score_e3".desc, $"term".asc)
-    df.join(broadcast(tf), "term")
+    val scored = df.join(broadcast(tf), "term")
       .crossJoin(broadcast(n))
       .select($"doc_id", $"term", $"tf", $"df",
         ($"tf" * expr("(1000 * n_docs) div df")).as("score_e3"))
-      .withColumn("rnk", row_number().over(w).cast(LongType))
-      .filter($"rnk" <= TfidfTopK)
-      .select($"doc_id", $"rnk", $"term", $"tf", $"df", $"score_e3")
+    TopK(scored, Seq("doc_id"),
+        Seq((-$"score_e3").as("score_e3"), $"term", $"tf", $"df"), TfidfTopK, "rnk")
+      .select($"doc_id", $"rnk", $"term", $"tf", $"df", (-$"score_e3").as("score_e3"))
       .orderBy($"doc_id", $"rnk")
   }
 
@@ -401,10 +398,9 @@ object TextOps {
     * any aggregation — only the query terms' posting lists (tf rows)
     * ever reach a shuffle, never the corpus vocabulary. df and the
     * query list are broadcast; the tf↔dl join shuffles only posting
-    * rows on doc_id. The per-query ranking is the bounded-heap
-    * [[BoundedTopK]] (O(K) state per partition), not a Window sort —
-    * the oracle's row_number is the same total order (score desc,
-    * doc_id asc). */
+    * rows on doc_id. The per-query ranking is the [[TopK]] builder
+    * (O(K) state per partition), not a Window sort — the oracle's
+    * row_number is the same total order (score desc, doc_id asc). */
   def bm25Topk(spark: SparkSession, sfDir: String): DataFrame =
     retrievalTopk(bm25Scored(postingFrames(spark, sfDir)), Bm25TopK)
       .orderBy($"qid", $"rnk")
@@ -490,26 +486,14 @@ object TextOps {
       .groupBy($"qid", $"doc_id").agg(sum($"c").as("score_e6"))
   }
 
-  /** Bounded-heap per-query top-K by (score desc, doc_id asc) — the
-    * ranking reduction shared by all three retrieval rankers (O(K)
-    * state per partition, no Window sort; the oracle's row_number is
-    * the same total order). Input columns: (qid, doc_id, score_e6). */
-  private def retrievalTopk(scored: DataFrame, k: Int): DataFrame = {
-    val spark = scored.sparkSession
-    import spark.implicits.{newProductEncoder, newStringEncoder, newLongEncoder}
-    scored.as[(String, Long, Long)]
-      .groupByKey(_._1)
-      .mapValues(r => (r._3, r._2))
-      .agg(new BoundedTopK[(Long, Long)](k,
-        (a, b) => a._1 > b._1 || (a._1 == b._1 && a._2 < b._2))
-        .toColumn.name("top"))
-      .flatMap { case (qid, top) =>
-        top.iterator.zipWithIndex.map { case ((score, doc), i) =>
-          (qid, (i + 1).toLong, doc, score)
-        }
-      }
-      .toDF("qid", "rnk", "doc_id", "score_e6")
-  }
+  /** Per-query top-K by (score desc, doc_id asc) through the [[TopK]]
+    * builder — the ranking reduction shared by all three retrieval
+    * rankers (O(K) state per partition, no Window sort; the oracle's
+    * row_number is the same total order). Input columns: (qid,
+    * doc_id, score_e6). */
+  private def retrievalTopk(scored: DataFrame, k: Int): DataFrame =
+    TopK(scored, Seq("qid"), Seq((-$"score_e6").as("score_e6"), $"doc_id"), k, "rnk")
+      .select($"qid", $"rnk", $"doc_id", (-$"score_e6").as("score_e6"))
 
   /** RRF constant k = 60 (the standard Cormack/Clarke/Buettcher
     * value) and the fused depth. */

@@ -80,7 +80,7 @@ class CodegenSpec extends SparkTestBase {
       TextHash.gramStrings(col("text"), 2).as("gram_strs"),
       graft.functions.VectorExprs.sumMod(
         TextHash.gramHashes(col("text"), 3), 1000000007L).as("sum_mod"),
-      graft.functions.TextSetExprs.countInSet(
+      graft.functions.TextFunctions.markerHits(
         graft.functions.TextFunctions.tokens(col("text")),
         graft.functions.TextFunctions.enMarkers).as("marker_hits"),
       graft.functions.TextSetExprs.maxTokenCount(

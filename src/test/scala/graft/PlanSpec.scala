@@ -220,14 +220,26 @@ class PlanSpec extends SparkTestBase {
   }
 
   test("q_token_drift keeps top-k in a bounded aggregator — no vocab-sized window sort") {
-    // the per-source top-k must be the BoundedTopK Aggregator (O(k)
-    // state, map-side merged), never a row_number window whose
+    // the per-source top-k must be the TopK builder's collect_top_k
+    // (O(k) state, map-side merged), never a row_number window whose
     // partition holds a source's entire vocabulary
     val plan = fullPlanString("q_token_drift")
     assert(!plan.contains("Window"),
       s"q_token_drift must not plan a window operator:\n$plan")
-    assert(plan.contains("partial_boundedtopk") || plan.contains("ObjectHashAggregate"),
-      s"expected the typed bounded top-k aggregate:\n$plan")
+    assert(plan.contains("partial_collect_top_k"),
+      s"expected the bounded top-k aggregate:\n$plan")
+  }
+
+  test("every TopK site partial-aggregates collect_top_k and plans no Window") {
+    for (q <- Seq("q_topn_agg", "q_sample_uniform", "q_sample_weighted",
+        "q_sample_group", "q_source_cap", "q_token_drift", "q_bm25_topk",
+        "q_hybrid_rrf", "q_tfidf_topk", "q_ann_pq", "q_ann_lsh",
+        "q_ann_multiprobe", "q_ann_ivf")) {
+      val plan = fullPlanString(q)
+      assert(plan.contains("partial_collect_top_k"),
+        s"$q: expected the map-side bounded top-k:\n$plan")
+      assert(!plan.contains("Window"), s"$q: no window sort:\n$plan")
+    }
   }
 
   test("text/curation plans contain no interpreted higher-order functions") {
@@ -430,11 +442,15 @@ class PlanSpec extends SparkTestBase {
     // the ranker serves from the materialized query-term posting
     // artifact (round-10: tf/dl are build-once per corpus
     // fingerprint, shared by BM25 / TF·IDF / RRF) — the serving plan
-    // must scan post-tf, never re-tokenize the corpus (no Generate =
-    // no explode anywhere in the plan)
+    // must scan post-tf, never re-tokenize the corpus (no Generate at
+    // or below the partial top-k; the one above it unnests the ≤ K
+    // ranked rows per query)
     assert(plan.contains("post-tf"),
       "tf must serve from the posting artifact")
-    assert(!plan.contains("Generate"),
+    val aggs = preorder(planOf("q_bm25_topk"))
+      .filter(_.nodeName.contains("ObjectHashAggregate"))
+    assert(aggs.nonEmpty)
+    assert(preorder(aggs.last).forall(_.nodeName != "Generate"),
       "the serving plan must not re-explode the corpus")
   }
 

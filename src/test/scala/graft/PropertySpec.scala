@@ -1,14 +1,16 @@
 package graft
 
 import graft.functions.{RollingHash, TextFunctions, TextHash}
-import graft.operators.{DedupOps, TopKAggregator}
+import graft.operators.{DedupOps, TopK}
+import org.apache.spark.sql.functions.{col, lit}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
 /** Property-based checks of the kernel math the oracle-gated queries
-  * rely on — pure JVM, no Spark session needed. Deterministic seed so
-  * failures reproduce. */
+  * rely on — pure JVM, except the TopK builder property, which runs on
+  * the shared test session. Deterministic seed so failures
+  * reproduce. */
 class PropertySpec extends AnyFunSuite {
 
   private def forSamples[A](g: Gen[A], n: Int = 300)(f: A => Unit): Unit = {
@@ -398,20 +400,33 @@ class PropertySpec extends AnyFunSuite {
     }
   }
 
-  test("TopKAggregator over any partitioning equals global sorted top-k") {
+  test("TopK over any partitioning equals per-key sorted take-k, ascending and negated") {
+    val spark = SparkTestBase.session
+    import spark.implicits._
+    // tight value range → many ties, broken by the unique id
     val rows = Gen.listOf(for {
-      v <- Gen.choose(0.0, 10.0); id <- Gen.choose(0L, 100L)
-    } yield ("k", v, id))
-    forSamples(Gen.zip(rows, Gen.choose(1, 5), Gen.choose(1, 4))) {
-      case (xs, k, nChunks) =>
-        val agg = new TopKAggregator(k)
-        val chunks = xs.grouped(math.max(1, xs.length / nChunks + 1)).toList
-        val merged = chunks.map(_.map(r => (r._2, r._3)).foldLeft(agg.zero)(agg.reduce))
-          .foldLeft(agg.zero)(agg.merge)
-        val expect = xs.map(r => (r._2, r._3))
-          .sortBy { case (v, id) => (-v, id) }.take(k)
-        assert(agg.finish(merged).toSeq == expect,
-          s"xs=$xs k=$k chunks=$nChunks")
+      key <- Gen.oneOf("a", "b", "c"); v <- Gen.choose(0L, 4L); id <- Gen.choose(0L, 500L)
+    } yield (key, v, id)).map(_.distinctBy(_._3))
+    forSamples(Gen.zip(rows, Gen.choose(1, 5), Gen.choose(1, 4)), n = 20) {
+      case (xs, k, parts) =>
+        val df = xs.toDF("key", "value", "id").repartition(parts)
+        def model(desc: Boolean, keyOf: String => String) =
+          xs.groupBy(r => keyOf(r._1)).toSeq.flatMap { case (key, g) =>
+            g.sortBy { case (_, v, id) => (if (desc) -v else v, id) }.take(k)
+              .zipWithIndex.map { case ((_, v, id), i) => (key, i + 1L, v, id) }
+          }.sortBy(r => (r._1, r._2))
+        def run(keys: Seq[String], desc: Boolean) = {
+          val v = if (desc) (-col("value")).as("value") else col("value")
+          TopK(df, keys, Seq(v, col("id")), k, "rank")
+            .select(if (keys.isEmpty) lit("") else col("key"), col("rank"),
+              if (desc) -col("value") else col("value"), col("id"))
+            .as[(String, Long, Long, Long)].collect().toSeq.sortBy(r => (r._1, r._2))
+        }
+        for (desc <- Seq(false, true)) {
+          val ctx = s"desc=$desc k=$k parts=$parts xs=$xs"
+          assert(run(Seq("key"), desc) == model(desc, identity), ctx)
+          assert(run(Nil, desc) == model(desc, _ => ""), ctx)
+        }
     }
   }
 
