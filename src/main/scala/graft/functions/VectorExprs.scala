@@ -1,9 +1,9 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
 /** Native kernels for the embedding hot path — the implementations
@@ -41,7 +41,9 @@ object VectorExprs {
       out(i) = VectorFunctions.roundHalfUp(x * 1000)
       i += 1
     }
-    new GenericArrayData(out)
+    // primitive-backed: a GenericArrayData over Array[Long] boxes every
+    // element, which the typed consumers of `quantVecs` then unbox
+    UnsafeArrayData.fromPrimitiveArray(out)
   }
 
   /** Dot product; caller guarantees equal lengths. */

@@ -2,7 +2,7 @@ package graft.functions
 
 import java.security.MessageDigest
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType}
@@ -31,6 +31,16 @@ object VectorFunctions {
   def quantize(emb: Column): Column =
     ColumnBridge.column(QuantizeE3Expr(ColumnBridge.expression(emb)))
 
+  /** The e3-quantized `(vec_id, q, n2)` projection of an embedding
+    * frame — the one quantized-row builder: every vector consumer
+    * (ANN, k-means/PQ training and coding, dedup, decontamination,
+    * the streaming gates and the vector ingest job) reads it, so the
+    * quantization cannot drift between them. Typed consumers read it
+    * `.as[(Long, Array[Long], Long)]`. */
+  def quantVecs(df: DataFrame): DataFrame =
+    df.select(col("vec_id"), quantize(col("embedding")).as("q"))
+      .withColumn("n2", norm2(col("q")))
+
   /** Integer dot product of two array<long> columns. NULL when the
     * lengths differ (`zip_with` pad-with-null semantics). */
   def dotL(a: Column, b: Column): Column =
@@ -57,25 +67,13 @@ object VectorFunctions {
   def roundHalfUp(d: Double): Long =
     if (d >= 0) math.floor(d + 0.5).toLong else math.ceil(d - 0.5).toLong
 
-  /** e3 quantization of one embedding — same math as [[quantize]]. */
+  /** e3 quantization of one embedding — same math as [[quantize]];
+    * the specs' plain-JVM reference for it. */
   def quantizeJvm(emb: Array[Float]): Array[Long] = {
     val out = new Array[Long](emb.length)
     var i = 0
     while (i < emb.length) { out(i) = roundHalfUp(emb(i).toDouble * 1000); i += 1 }
     out
-  }
-
-  /** (vec_id, quantized, norm2) typed rows — the kernel-side input. */
-  def quantized(embeddings: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.Dataset[(Long, Array[Long], Long)] = {
-    import embeddings.sparkSession.implicits._
-    embeddings.select("vec_id", "embedding").as[(Long, Array[Float])]
-      .map { case (id, emb) =>
-        val q = quantizeJvm(emb)
-        var n2 = 0L; var i = 0
-        while (i < q.length) { n2 += q(i) * q(i); i += 1 }
-        (id, q, n2)
-      }
   }
 
   /** Integer dot + one IEEE division + e6 HALF_UP — identical to

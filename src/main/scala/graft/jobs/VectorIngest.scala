@@ -1,6 +1,7 @@
 package graft.jobs
 
 import graft.ColumnInterpolator
+import graft.functions.VectorFunctions
 import graft.operators.{CurationOps, SimilarityOps}
 import graft.sinks.{DocStore, Sinks}
 import graft.sources.Readers
@@ -55,7 +56,7 @@ object VectorIngest {
 
     def writer(batch: DataFrame, batchId: Long): Unit = {
       val dirty = CurationOps.deconBest(
-        CurationOps.deconHits(CurationOps.quantVecs(batch), bench)).persist()
+        CurationOps.deconHits(VectorFunctions.quantVecs(batch), bench)).persist()
       try {
         Sinks.docIndex(quarantine, "vec_id")(dirty)
         val admitted = batch.join(dirty.select($"vec_id"), Seq("vec_id"), "left_anti")

@@ -488,37 +488,40 @@ object Multimodal {
     * envelope): [[audioAHash]] per clip, then the same blocked
     * Hamming join. Undecodable and flat clips are skipped (nothing
     * rhythmic to match). */
-  def audioNearDup(assets: Dataset[MediaAsset], maxHamming: Int = 3,
-                   maxBlockDf: Int = 1000): DataFrame =
-    nearDup(assets, "audio", audioAHash, maxHamming, maxBlockDf)
+  def audioNearDup(assets: Dataset[MediaAsset]): DataFrame =
+    nearDup(assets, "audio", audioAHash)
 
   /** Visual near-dup pairs over image assets — the multimodal
     * counterpart of SimHash text dedup: [[imageAHash]] per image, then
-    * the exact-recall pigeonhole blocking (maxHamming ≤ 3 enforced
-    * there). aHash blocks are far less
+    * the exact-recall pigeonhole blocking. aHash blocks are far less
     * uniform than md5 band keys (dark/blown-out regions repeat across
-    * a photo corpus), so the block-frequency cap is ON by default —
-    * the quadratic-bucket guard, same as overlapPairs' df bound.
-    * Undecodable and flat images are skipped (nothing visual to
-    * match). */
-  def visualNearDup(assets: Dataset[MediaAsset], maxHamming: Int = 3,
-                    maxBlockDf: Int = 1000): DataFrame =
-    nearDup(assets, "image", imageAHash, maxHamming, maxBlockDf)
+    * a photo corpus), so the block-frequency cap ([[NearDupMaxBlockDf]])
+    * is always on — the quadratic-bucket guard, same as overlapPairs'
+    * df bound. Undecodable and flat images are skipped (nothing
+    * visual to match). */
+  def visualNearDup(assets: Dataset[MediaAsset]): DataFrame =
+    nearDup(assets, "image", imageAHash)
+
+  /** Media near-dup bar: pairs at Hamming ≤ [[NearDupMaxHamming]] of
+    * the 64-bit perceptual hash, split into 4 × 16-bit blocks — so by
+    * pigeonhole every pair shares an intact single block — and block
+    * values held by more than [[NearDupMaxBlockDf]] assets dropped. */
+  val NearDupMaxHamming = 3
+  val NearDupMaxBlockDf = 1000
 
   /** Near-dup pairs of one media kind: `hash` per asset in the
     * per-partition decode stage (bytes never shuffle; only
     * (doc_id, hash) longs do; unhashable assets drop out), then
-    * `DedupOps.blockedHammingPairs` over 4×16-bit blocks. */
+    * `DedupOps.comboHammingPairs` over 4 × 16-bit blocks. */
   private def nearDup(assets: Dataset[MediaAsset], kind: String,
-      hash: Array[Byte] => Option[Long], maxHamming: Int,
-      maxBlockDf: Int): DataFrame = {
+      hash: Array[Byte] => Option[Long]): DataFrame = {
     val spark = assets.sparkSession
     import spark.implicits._
     val hashed = assets.filter(_.kind == kind)
       .mapPartitions(it => it.flatMap(a => hash(a.bytes).map(h => (a.doc_id, h))))
       .toDF("doc_id", "ahash")
-    graft.operators.DedupOps.blockedHammingPairs(
-      hashed, "ahash", blocks = 4, blockBits = 16, maxHamming, maxBlockDf)
+    graft.operators.DedupOps.comboHammingPairs(hashed, "ahash", blocks = 4,
+      blockBits = 16, NearDupMaxHamming, NearDupMaxBlockDf)
   }
 
   /** End-to-end: media table → sampled frames → features → per-doc

@@ -611,8 +611,8 @@ object CoreOps {
     * the lag window and the 1-row moments broadcast both run on
     * that bounded frame. */
   /** The per-day event counts behind [[dailyAnomaly]] — ONE
-    * day-bucketing definition shared with the streaming volume gate
-    * (StreamingJobs.volumeGate): commutative counts over a bounded
+    * day-bucketing definition shared with the streaming volume
+    * dashboard (#133, on a (ts) stream): commutative counts over a bounded
     * |days| key space, so the streaming form runs it verbatim in
     * complete mode and the live dashboard can never disagree with
     * the batch anomaly report's input frame. */

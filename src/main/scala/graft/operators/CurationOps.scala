@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.{ColumnInterpolator, Tables}
 import graft.functions.TextFunctions._
+import graft.functions.VectorFunctions.quantVecs
 import graft.tools.Materialize
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -272,9 +273,9 @@ object CurationOps {
     }
 
   /** The distinct benchmark gram set of [[decontaminate]] — shared by
-    * the batch operator and the streaming per-drop gate
-    * (StreamingJobs.tokenDeconGate) so the gram definition cannot
-    * drift between them. */
+    * the batch operator and the streaming per-drop form of
+    * [[gramHits]], so the gram definition cannot drift between
+    * them. */
   private[graft] def benchGramSet(docs: DataFrame,
       gram: Int = DecontGram): DataFrame =
     docs.filter($"doc_id" % DecontMod === 0L)
@@ -287,7 +288,9 @@ object CurationOps {
     * on batch and streaming frames alike (narrow explode + broadcast
     * join + one keyed agg). gramHashes is per-doc DISTINCT, so
     * count(*) after the join is the distinct contaminated-gram
-    * count. */
+    * count. Run in update mode on an ingest stream (#51b, each drop
+    * flagged at ingest against the benchmark), each contaminated doc
+    * emits exactly once: its grams arrive in one micro-batch. */
   private[graft] def gramHits(docs: DataFrame, benchGrams: DataFrame,
       gram: Int = DecontGram): DataFrame =
     docs.select($"doc_id", explode(
@@ -396,16 +399,6 @@ object CurationOps {
     * and "semantic near-duplicate" are the same judgment. */
   val EmbDecontMod = 31L
   val EmbDecontCos = 400000L
-
-  /** e3-quantized (vec_id, q, n2) projection of an embedding frame —
-    * ONE definition shared by the batch decon, its benchmark side,
-    * and the streaming per-drop gate, so the quantization cannot
-    * drift between them. */
-  private[graft] def quantVecs(df: DataFrame): DataFrame = {
-    import graft.functions.VectorFunctions.{quantize, norm2}
-    df.select($"vec_id", quantize($"embedding").as("q"))
-      .withColumn("n2", norm2($"q"))
-  }
 
   /** The held-out benchmark embedding table (bench_id, bq, bn2) —
     * shared by [[deconEmbedding]] and the streaming gate. */
@@ -656,8 +649,9 @@ object CurationOps {
     * duplicate-collapsing [[BoundedDistinctTopK]]: O(K) state per
     * source, commutative idempotent merge, so the SAME sketch falls
     * out of a batch scan and an unbounded stream (complete mode) at
-    * any micro-batch split — shared by the streaming gate
-    * (`StreamingJobs.kmvGate`) and its spec's batch recompute. */
+    * any micro-batch split, arrival order or re-delivery — the live
+    * "how many distinct tokens has this feed shipped" sketch when run
+    * on a (source, tok) stream, read out with `kmvSketchRows`. */
   def kmvMinsAgg(toks: DataFrame): DataFrame = {
     import toks.sparkSession.implicits.{newLongEncoder, newProductEncoder, newStringEncoder}
     val agg = new BoundedDistinctTopK[Long](KmvK, _ < _)
@@ -724,9 +718,12 @@ object CurationOps {
     * The cumulative window runs per source over its BUCKETS (a
     * handful of rows), never over docs. */
   /** The (source, bucket, count) histogram cells — the operator's
-    * ONE aggregation, shared with the streaming form (where the cell
-    * grid is the complete-mode state, bounded by construction — the
-    * same reason streamingCms ships a sketch). */
+    * ONE aggregation, shared with the streaming form (#94b, run on a
+    * document stream in complete mode), where the cell grid is the
+    * aggregation state, bounded at O(sources × maxlen/W) whatever the
+    * stream length — the same reason streamingCms ships a sketch.
+    * Cell counts are commutative sums, so the streamed cells equal
+    * the batch histogram exactly and [[histEstimates]] reads either. */
   private[graft] def histCells(docs: DataFrame): DataFrame =
     docs.select($"source", size(tokens($"text")).cast(LongType).as("n_tokens"))
       .groupBy($"source", expr(s"n_tokens div $HistBucketW").as("b"))

@@ -1043,12 +1043,9 @@ object DedupOps {
 
   /** SimHash geometry: hash60 supplies 60 entropy bits. The 4 × 15
     * single-block split (exact pigeonhole recall for Hamming ≤ 3 with
-    * ANY 4-way split) remains for [[blockedHammingPairs]]' other
-    * consumer (visual near-dup, where the df cap applies) and as the
-    * independent scheme DedupSpec cross-checks [[dedupSimhash]]
-    * against; the TEXT pair path itself uses the C(6,3) combination
-    * keys below, whose buckets stay O(1) where single-block buckets
-    * grow n/2^15. */
+    * ANY 4-way split) is the q_dedup_simhash oracle's blocking; the
+    * operator uses the C(6,3) combination keys below, whose buckets
+    * stay O(1) where single-block buckets grow n/2^15. */
   val SimhashBits = 60
   val SimhashBlocks = 4
   val SimhashBlockBits: Int = SimhashBits / SimhashBlocks
@@ -1094,16 +1091,26 @@ object DedupOps {
         graft.functions.TextHash.simhash($"text", SimhashBits).as("simhash"))
       .filter($"simhash" =!= -1L) // token-less docs have no signature
     comboHammingPairs(sigs, "simhash", SimhashCombBlocks,
-      SimhashCombBlockBits, maxHamming = 3)
+      SimhashCombBlockBits, maxHamming = 3, maxKeyDf = 0)
   }
 
-  /** Combination-blocked Hamming pairing: candidates share the
-    * concatenated values of some (blocks − maxHamming)-subset of
-    * blocks. Exact recall by pigeonhole (≤ maxHamming corrupted
-    * blocks ⇒ ≥ blocks − maxHamming intact ⇒ some emitted subset is
-    * fully intact on both sides). Keys are uniform-ish
-    * (blocks−maxHamming)·blockBits-bit values, so buckets stay O(1)
-    * where single-block buckets grow O(n/2^blockBits).
+  /** The Hamming pair builder, shared by [[dedupSimhash]] and
+    * `Multimodal`'s image/audio near-dup: combination blocking, where
+    * candidates share the concatenated values of some
+    * (blocks − maxHamming)-subset of blocks. Exact recall by
+    * pigeonhole (≤ maxHamming corrupted blocks ⇒ ≥ blocks −
+    * maxHamming intact ⇒ some emitted subset is fully intact on both
+    * sides). Keys are uniform-ish (blocks−maxHamming)·blockBits-bit
+    * values, so buckets stay O(1) where single-block buckets grow
+    * O(n/2^blockBits). With blocks − maxHamming = 1 the keys are the
+    * single blocks themselves.
+    *
+    * `maxKeyDf > 0` first drops (combo, key) values shared by more
+    * than that many rows: unlike md5-derived band keys, perceptual
+    * hash blocks are NOT uniform, and a corpus-common value (flat
+    * image regions, boilerplate) would otherwise build a quadratic
+    * bucket — the same df bound [[overlapPairs]] applies. 0 keeps
+    * every key (SimHash's combo keys stay O(1) by construction).
     *
     * Physical shape: ONE corpus scan (the signature expression runs
     * once), the combo explode, ONE shuffle into (combo, key)
@@ -1115,13 +1122,13 @@ object DedupOps {
     * exact dedup (#37) first — a pair LISTING over k identical docs
     * is Θ(k²) in its own output no matter the algorithm. */
   private[graft] def comboHammingPairs(hashed: DataFrame, hashCol: String,
-      blocks: Int, blockBits: Int, maxHamming: Int): DataFrame = {
+      blocks: Int, blockBits: Int, maxHamming: Int, maxKeyDf: Int): DataFrame = {
     val pick = blocks - maxHamming
     require(pick >= 1 && pick * blockBits <= 62,
       s"combo keys must fit a long: pick=$pick blockBits=$blockBits")
     val mask = (1L << blockBits) - 1
     val combos = (0 until blocks).combinations(pick).toArray
-    val blk = hashed.select($"doc_id", col(hashCol).as("hash"))
+    val keyed = hashed.select($"doc_id", col(hashCol).as("hash"))
       .select($"doc_id", $"hash",
         explode(array(combos.zipWithIndex.map { case (combo, ci) =>
           val key = combo.foldLeft(lit(0L): Column) { (acc, b) =>
@@ -1131,6 +1138,11 @@ object DedupOps {
           struct(lit(ci.toLong).as("c"), key.as("key"))
         }: _*)).as("ck"))
       .select($"doc_id", $"hash", $"ck.c".as("c"), $"ck.key".as("key"))
+    val blk = if (maxKeyDf > 0) {
+      val rare = keyed.groupBy($"c", $"key").agg(count(lit(1)).as("df"))
+        .filter($"df" <= maxKeyDf).select($"c", $"key")
+      keyed.join(rare, Seq("c", "key"))
+    } else keyed
     // Bucket-local pair expansion over sorted equal-key runs. NOT a
     // groupBy+collect_list: with ~one distinct key per row the object
     // hash aggregate falls back to sort-based with per-row object
@@ -1209,50 +1221,6 @@ object DedupOps {
         }
       }
       .toDF("doc_a", "doc_b", "hamming")
-      .distinct()
-      .orderBy($"doc_a", $"doc_b")
-  }
-
-  /** Pigeonhole-blocked Hamming pairing, shared by [[dedupSimhash]]
-    * and `Multimodal.visualNearDup`: split each hash into `blocks`
-    * blocks of `blockBits` bits; Hamming ≤ blocks−1 can corrupt at
-    * most blocks−1 of them, so every true pair shares an intact
-    * (block, key) — candidates come from an EQUI self-join on that key
-    * with EXACT recall (pigeonhole, which is why maxHamming < blocks
-    * is REQUIRED — a larger threshold would silently lose recall),
-    * then one popcount verifies. `maxBlockDf > 0` drops block keys
-    * shared by more than that many rows first: unlike md5-derived band
-    * keys, hash blocks are NOT uniform, and a corpus-common value
-    * (flat image regions, boilerplate) would otherwise build a
-    * quadratic candidate bucket — the same df bound [[overlapPairs]]
-    * applies. */
-  private[graft] def blockedHammingPairs(hashed: DataFrame, hashCol: String,
-      blocks: Int, blockBits: Int, maxHamming: Int,
-      maxBlockDf: Int = 0): DataFrame = {
-    require(maxHamming < blocks,
-      s"pigeonhole recall needs maxHamming < blocks, got $maxHamming >= $blocks")
-    val mask = (1L << blockBits) - 1
-    // rename FIRST, explode in a second select: referencing the alias
-    // in the same projection is a lateral column reference (internal
-    // analyzer error under a typed child plan)
-    val blk = hashed.select($"doc_id", col(hashCol).as("hash"))
-      .select($"doc_id", $"hash",
-        explode(array((0 until blocks).map(b =>
-          struct(lit(b.toLong).as("b"),
-            shiftright($"hash", blockBits * b)
-              .bitwiseAND(mask).as("key"))): _*)).as("blk"))
-      .select($"doc_id", $"hash", $"blk.b".as("b"), $"blk.key".as("key"))
-    val cands = if (maxBlockDf > 0) {
-      val rare = blk.groupBy($"b", $"key").agg(count(lit(1)).as("df"))
-        .filter($"df" <= maxBlockDf).select($"b", $"key")
-      blk.join(rare, Seq("b", "key"))
-    } else blk
-    cands.as("x")
-      .join(cands.as("y"),
-        $"x.b" === $"y.b" && $"x.key" === $"y.key" && $"x.doc_id" < $"y.doc_id")
-      .select($"x.doc_id".as("doc_a"), $"y.doc_id".as("doc_b"),
-        bit_count($"x.hash".bitwiseXOR($"y.hash")).cast(LongType).as("hamming"))
-      .filter($"hamming" <= maxHamming)
       .distinct()
       .orderBy($"doc_a", $"doc_b")
   }
@@ -1347,10 +1315,7 @@ object DedupOps {
     * route to the LSH tier could change a gated answer. */
   def dedupEmbedding(spark: SparkSession, sfDir: String,
       maxVectors: Long = DedupEmbeddingMaxVectors): DataFrame = {
-    implicit val enc = org.apache.spark.sql.Encoders.tuple(
-      org.apache.spark.sql.Encoders.scalaLong,
-      org.apache.spark.sql.Encoders.scalaLong,
-      org.apache.spark.sql.Encoders.scalaLong)
+    import spark.implicits.newProductEncoder
     val emb = Tables.embeddings(spark, sfDir)
     val n = emb.count()
     require(n <= maxVectors,
@@ -1361,7 +1326,7 @@ object DedupOps {
       s"serialized buffers). Use the scale path instead: " +
       s"DedupOps.dedupEmbeddingLsh (q_dedup_embedding_lsh) — identical " +
       s"integer cosine math, LSH-bounded candidates, nothing collected.")
-    val quant = VectorFunctions.quantized(emb)
+    val quant = VectorFunctions.quantVecs(emb).as[(Long, Array[Long], Long)]
     val corpus = spark.sparkContext.broadcast(
       quant.collect().sortBy(_._1))
     quant.mapPartitions { it =>
@@ -1398,26 +1363,17 @@ object DedupOps {
     * production index stores); the oracle computes the identical p
     * from count(*) in exact integer SQL and applies the same shift
     * to the same wide-bucket expression. */
-  def dedupEmbeddingLsh(spark: SparkSession, sfDir: String): DataFrame = {
-    val emb = Tables.embeddings(spark, sfDir)
-    val v = embBucketed(emb, VectorFunctions.scaledPlanes(emb.count()))
-    v.as("a").join(v.as("b"),
-        $"a.bucket" === $"b.bucket" && $"a.vec_id" < $"b.vec_id")
-      .select($"a.vec_id".as("vec_a"), $"b.vec_id".as("vec_b"),
-        VectorFunctions.cosineE6(
-          VectorFunctions.dotL($"a.q", $"b.q"), $"a.n2", $"b.n2").as("cos_e6"))
-      .filter($"cos_e6" >= 400000L)
-      .orderBy($"vec_a", $"vec_b")
-  }
+  def dedupEmbeddingLsh(spark: SparkSession, sfDir: String): DataFrame =
+    embOrPairsDirect(spark, sfDir, tables = 1).orderBy($"vec_a", $"vec_b")
 
   /** (vec_id, q, n2, bucket) under the table-0 wide bucket truncated
-    * to p planes — THE quantize/norm/bucket projection every
-    * embedding dedup consumer shares and the oracles mirror
+    * to p planes — THE bucket projection the sign-bucket index and
+    * its incremental consumers share and the oracles mirror
     * bit-for-bit; one definition so an operator can never
-    * desynchronize from the shared artifact. */
+    * desynchronize from the shared artifact. With one table,
+    * [[embOrPairsDirect]] keys on this same bucket. */
   private[graft] def embBucketed(emb: DataFrame, p: Int): DataFrame =
-    emb.select($"vec_id", VectorFunctions.quantize($"embedding").as("q"))
-      .withColumn("n2", VectorFunctions.norm2($"q"))
+    VectorFunctions.quantVecs(emb)
       .withColumn("bucket", shiftright(VectorFunctions.lshBucketWide($"q"),
         VectorFunctions.MaxPlanes - p))
 
@@ -1519,26 +1475,30 @@ object DedupOps {
       sfDir: String): DataFrame =
     embOrPairs(spark, sfDir)(embOrPairsDirect(spark, sfDir))
 
-  /** The defining OR-LSH computation behind [[embOrPairsShared]]. */
-  private[graft] def embOrPairsDirect(spark: SparkSession,
-      sfDir: String): DataFrame = {
+  /** The embedding-LSH pair builder — the defining OR-LSH computation
+    * behind [[embOrPairsShared]]: (vec_a, vec_b, cos_e6) pairs at
+    * cos ≥ τ among vectors colliding in ANY of `tables` independent
+    * plane tables, each a wide bucket truncated to the corpus-scaled
+    * plane count. One table is [[dedupEmbeddingLsh]] (table 0's
+    * bucket is [[embBucketed]]'s). A pair colliding in several tables
+    * is collapsed by the set-distinct (the oracle's UNION does the
+    * same); with one table each pair is emitted once. */
+  private[graft] def embOrPairsDirect(spark: SparkSession, sfDir: String,
+      tables: Int = VectorFunctions.LshOrTables): DataFrame = {
     val emb = Tables.embeddings(spark, sfDir)
-    val p = VectorFunctions.scaledPlanes(emb.count())
-    val shift = VectorFunctions.MaxPlanes - p
-    val keyed = emb
-      .select($"vec_id", VectorFunctions.quantize($"embedding").as("q"))
-      .withColumn("n2", VectorFunctions.norm2($"q"))
+    val shift = VectorFunctions.MaxPlanes - VectorFunctions.scaledPlanes(emb.count())
+    val keyed = VectorFunctions.quantVecs(emb)
       .select($"vec_id", $"q", $"n2",
-        posexplode(array((0 until VectorFunctions.LshOrTables).map(t =>
+        posexplode(array((0 until tables).map(t =>
           shiftright(VectorFunctions.lshBucketWideT(t, $"q"), shift)): _*))
           .as(Seq("t", "bucket")))
-    keyed.as("a").join(keyed.as("b"),
+    val pairs = keyed.as("a").join(keyed.as("b"),
         $"a.t" === $"b.t" && $"a.bucket" === $"b.bucket" &&
           $"a.vec_id" < $"b.vec_id")
       .select($"a.vec_id".as("vec_a"), $"b.vec_id".as("vec_b"),
         VectorFunctions.cosineE6(
           VectorFunctions.dotL($"a.q", $"b.q"), $"a.n2", $"b.n2").as("cos_e6"))
       .filter($"cos_e6" >= 400000L)
-      .distinct()
+    if (tables == 1) pairs else pairs.distinct()
   }
 }

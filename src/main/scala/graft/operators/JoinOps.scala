@@ -1215,9 +1215,10 @@ object JoinOps {
     * against orders plus both range rules in ONE scan (the order key
     * is unique, so the left join preserves row count and n_checked
     * stays count(*)). ONE definition shared with the streaming
-    * per-drop gate (StreamingJobs.integrityGate): against a stream
-    * it is a stream-static left join + a complete-mode commutative
-    * agg, so the live totals and the batch audit cannot disagree. */
+    * per-drop form (#150): against a stream it is a stream-static
+    * left join (the static side is the reference dim, so no
+    * watermark is needed) + a complete-mode commutative agg, so the
+    * live totals and the batch audit cannot disagree. */
   private[graft] def lineitemChecksAgg(li: DataFrame, o: DataFrame): DataFrame =
     li.select($"l_orderkey", $"l_quantity", $"l_discount")
       .join(o.select($"o_orderkey"), $"l_orderkey" === $"o_orderkey", "left")

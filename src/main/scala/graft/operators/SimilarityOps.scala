@@ -3,7 +3,7 @@ package graft.operators
 import graft.{ColumnInterpolator, Tables}
 import graft.functions.VectorFunctions._
 import graft.tools.Materialize
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
@@ -24,9 +24,7 @@ import org.apache.spark.sql.types.LongType
 object SimilarityOps {
 
   private def vecs(spark: SparkSession, sfDir: String): DataFrame =
-    Tables.embeddings(spark, sfDir)
-      .select($"vec_id", quantize($"embedding").as("q"))
-      .withColumn("n2", norm2($"q"))
+    quantVecs(Tables.embeddings(spark, sfDir))
 
   /** Per-`keys` top-k by the exact-tier total order (cos_e6 desc,
     * vec_id asc) through the [[TopK]] builder: `keys`, `rank`,
@@ -210,103 +208,145 @@ object SimilarityOps {
     * → rank) is the production article, and the corpus-side cell
     * assignment runs exactly once per corpus, not per query batch.
     * Determinism: cell choice compares e6-rounded cosine with
-    * centroid-id tiebreak (SURVEY.md §4). */
+    * centroid-id tiebreak (SURVEY.md §4). `pivots` carries each
+    * centroid's squared norm, computed once from the book. */
   private def bestCells(pivots: Array[(Long, Array[Long], Long)])(
       q: Array[Long], n2: Long, k: Int): Seq[Long] =
     pivots.map { case (pid, pq, pn2) =>
       (pid, graft.functions.VectorFunctions.cosineE6Jvm(q, pq, n2, pn2))
     }.sortBy { case (pid, c6) => (-c6, pid) }.take(k).map(_._1).toSeq
 
-  /** Clusters for [[kmeansProfile]] — seeds are the K lowest vec_ids. */
-  val KmeansK = 8
+  // ---- the codebook: k-means (m = 1) and PQ (m = PqM) ---------------
 
-  /** Nearest centroid by integer squared L2 (n2v + n2c − 2·dot; every
-    * term BIGINT, so cross-engine exact). `cents` is sorted by cluster
-    * id ascending and ties keep the FIRST minimum — the same
-    * (dist asc, c asc) total order the oracle's row_number uses. */
-  private def nearestCluster(cents: Array[(Long, Array[Long], Long)])(
-      q: Array[Long], n2: Long): (Long, Long) = {
-    var bestC = -1L; var bestD = Long.MaxValue
-    var i = 0
-    while (i < cents.length) {
-      val (c, cq, cn2) = cents(i)
-      var dot = 0L; var j = 0
-      while (j < cq.length) { dot += q(j) * cq(j); j += 1 }
-      val d = n2 + cn2 - 2 * dot
-      if (d < bestD) { bestD = d; bestC = c }
+  /** One trained codebook per subspace; each entry carries its
+    * ORIGINAL seed-centroid id next to the centroid subvector,
+    * entries sorted by that id. k-means is the one-subspace case
+    * (its entries are whole centroids), PQ has [[PqM]] subspaces. The
+    * id — not the array position — is the code: if a seed cell
+    * empties during training (possible when two seed subvectors
+    * coincide), positional labels would shift relative to the
+    * oracle's kept seed ids and every downstream code would silently
+    * disagree. */
+  type PqBooks = Array[Array[(Int, Array[Long])]]
+
+  /** Squared L2 between `q`'s subvector at `off` and the entry `c` —
+    * every term BIGINT (|q| ≲ 1e3, far below 2^63), so it is the same
+    * integer as k-means' n2v + n2c − 2·dot and cross-engine exact. */
+  private def sqL2(q: Array[Long], off: Int, c: Array[Long]): Long = {
+    var d = 0L; var j = 0
+    while (j < c.length) { val t = q(off + j) - c(j); d += t * t; j += 1 }
+    d
+  }
+
+  /** The nearest entry of `book` to `q`'s subvector at `off`: its
+    * ORIGINAL id and squared L2. Ties keep the FIRST minimum, which
+    * over the id-sorted entries is the lowest id — the (dist asc,
+    * c asc) total order the oracles' row_number uses. */
+  private def nearest(book: Array[(Int, Array[Long])], q: Array[Long],
+      off: Int): (Int, Long) = {
+    var best = 0; var bestD = Long.MaxValue; var i = 0
+    while (i < book.length) {
+      val d = sqL2(q, off, book(i)._2)
+      if (d < bestD) { bestD = d; best = i }
       i += 1
     }
-    (bestC, bestD)
+    (book(best)._1, bestD)
   }
 
-  /** The K seed vectors: lowest vec_ids, numbered 0..K-1. k vectors
-    * cross the driver (TakeOrdered — no full sort). */
-  private def kmeansSeeds(spark: SparkSession, sfDir: String): Array[(Long, Array[Long], Long)] = {
-    import spark.implicits.{newProductEncoder, newLongEncoder, newLongArrayEncoder}
-    import graft.functions.VectorFunctions.quantized
-    quantized(Tables.embeddings(spark, sfDir).orderBy($"vec_id".asc).limit(KmeansK))
-      .collect().sortBy(_._1).zipWithIndex
-      .map { case ((_, q, n2), c) => (c.toLong, q, n2) }
+  /** The seed books: the `k` lowest vec_ids, numbered 0..k−1, each
+    * split into `m` subvectors. k vectors cross the driver
+    * (TakeOrdered — no full sort). */
+  private def seed(spark: SparkSession, sfDir: String, k: Int, m: Int): PqBooks = {
+    import spark.implicits.newProductEncoder
+    val vs = quantVecs(Tables.embeddings(spark, sfDir).orderBy($"vec_id".asc).limit(k))
+      .as[(Long, Array[Long], Long)].collect().sortBy(_._1).map(_._2)
+    val sd = vs.headOption.fold(0)(_.length / m)
+    Array.tabulate(m)(j => vs.zipWithIndex.map { case (v, c) =>
+      (c, v.slice(j * sd, (j + 1) * sd))
+    })
   }
 
-  /** One deterministic Lloyd update against `cents`: assign every
-    * vector to its nearest centroid (integer squared L2,
-    * lowest-cluster-id ties), then the HALF_UP integer mean per
-    * (cluster, dim) — computed INSIDE Spark SQL so the rounding is
-    * the exact `round()` the DuckDB oracle applies (SURVEY.md §4).
-    * Returns the updated centroids plus the total assignment distance
-    * vs the INPUT centroids (the convergence signal [[kmeansConverge]]
-    * reports).
-    *
-    * Scale shape: ONE narrow corpus scan with the k×dim centroid
-    * table riding the task closure (~4 KB), ONE partial-agg'd shuffle
-    * to k·dim groups (the per-cluster distance total rides the dim-0
-    * group — no second scan for it); only k·dim cells ever cross the
-    * driver. A cluster that loses all members simply drops out. */
-  private def lloydUpdate(spark: SparkSession, sfDir: String,
-      cents: Array[(Long, Array[Long], Long)]): (Array[(Long, Array[Long], Long)], Long) = {
-    import spark.implicits.{newProductEncoder, newLongEncoder, newLongArrayEncoder}
-    import graft.functions.VectorFunctions.quantized
-    val rows = quantized(Tables.embeddings(spark, sfDir))
-      .map { case (_, q, n2) =>
-        val (c, d) = nearestCluster(cents)(q, n2)
-        (c, q, d)
+  /** The coding map: each vector of `embeddings` with its quantized
+    * coordinates, its code in every subspace (the [[nearest]] entry's
+    * original id) and that entry's squared L2 — a stateless narrow
+    * map with the books in the task closure, shared by training
+    * ([[lloydStep]]), the k-means assignment, the PQ encoder and the
+    * cell audit, batch and streaming, so they code a vector
+    * identically by construction. */
+  private def coded(embeddings: DataFrame, books: PqBooks)
+      : Dataset[(Long, Array[Long], Array[Int], Array[Long])] = {
+    val spark = embeddings.sparkSession
+    import spark.implicits.newProductEncoder
+    quantVecs(embeddings).as[(Long, Array[Long], Long)]
+      .map { case (id, q, _) =>
+        val sd = q.length / books.length
+        val codes = new Array[Int](books.length)
+        val dists = new Array[Long](books.length)
+        var m = 0
+        while (m < books.length) {
+          val (c, d) = nearest(books(m), q, m * sd)
+          codes(m) = c; dists(m) = d
+          m += 1
+        }
+        (id, q, codes, dists)
       }
-      .toDF("c", "q", "dist")
-      .select($"c", $"dist", posexplode($"q").as(Seq("dim", "qv")))
-      .groupBy($"c", $"dim")
+  }
+
+  /** One deterministic Lloyd step against `books`: code every corpus
+    * vector ([[coded]]), then the HALF_UP integer mean per
+    * (subspace, cell, dim) — computed INSIDE Spark SQL so the
+    * rounding is the exact `round()` the DuckDB oracle applies
+    * (SURVEY.md §4). Returns the next books — a cell that loses all
+    * members drops out, the survivors keep their ids — and each
+    * subspace's total distance to the INPUT books (the convergence
+    * signal [[kmeansConverge]] reports).
+    *
+    * Scale shape: ONE narrow corpus scan with the books riding the
+    * task closure, ONE partial-agg'd shuffle to (subspace, cell, dim)
+    * groups — k·d of them whatever m is — with each cell's distance
+    * total riding its dim-0 group (no second scan for it); only those
+    * cells cross the driver. */
+  private def lloydStep(spark: SparkSession, sfDir: String,
+      books: PqBooks): (PqBooks, Array[Long]) = {
+    import spark.implicits.newProductEncoder
+    val rows = coded(Tables.embeddings(spark, sfDir), books)
+      .flatMap { case (_, q, codes, dists) =>
+        val sd = q.length / codes.length
+        codes.indices.iterator.map(m =>
+          (m, codes(m), dists(m), q.slice(m * sd, (m + 1) * sd)))
+      }
+      .toDF("m", "c", "dist", "sub")
+      .select($"m", $"c", $"dist", posexplode($"sub").as(Seq("dim", "qv")))
+      .groupBy($"m", $"c", $"dim")
       .agg(round(sum($"qv").cast("double") / count(lit(1))).cast(LongType).as("cv"),
         sum($"dist").as("sdist"))
       .collect()
-    val next = rows.groupBy(_.getLong(0)).toArray.sortBy(_._1)
-      .map { case (c, rs) =>
-        val q = rs.sortBy(_.getInt(1)).map(_.getLong(2))
-        var n2 = 0L; var i = 0
-        while (i < q.length) { n2 += q(i) * q(i); i += 1 }
-        (c, q, n2)
-      }
-    val sumDist = rows.filter(_.getInt(1) == 0).map(_.getLong(3)).sum
-    (next, sumDist)
+      .groupBy(_.getInt(0))
+    val cells = Array.tabulate(books.length)(m => rows.getOrElse(m, Array.empty))
+    val next = cells.map(_.groupBy(_.getInt(1)).toArray.sortBy(_._1)
+      .map { case (c, rs) => (c, rs.sortBy(_.getInt(2)).map(_.getLong(3))) })
+    (next, cells.map(_.filter(_.getInt(2) == 0).map(_.getLong(4)).sum))
   }
 
-  private val kmeansCents = new Materialize.Artifact[
-    Array[(Long, Array[Long], Long)]]("kmeans-centroids", "embeddings")
+  /** Clusters for [[kmeansProfile]] — seeds are the K lowest vec_ids. */
+  val KmeansK = 8
 
-  /** The k×dim centroids after one Lloyd update, built ONCE per
-    * corpus fingerprint: ~4 KB that ride task closures, shared by the
-    * k-means assignment ([[kmeansAssignShared]]) AND [[annIvf]]'s
-    * cell seeding — the IVF pivots are the real trained centroids,
-    * the way a production pipeline connects its clustering to its
-    * index. */
-  private[graft] def kmeansCentroidsShared(spark: SparkSession,
-      sfDir: String): Array[(Long, Array[Long], Long)] =
+  private val kmeansCents = new Materialize.Artifact[PqBooks]("kmeans-centroids", "embeddings")
+
+  /** The k×dim centroids after one Lloyd step — a one-subspace book —
+    * built ONCE per corpus fingerprint: ~4 KB that ride task
+    * closures, shared by the k-means assignment
+    * ([[kmeansAssignShared]]) AND [[annIvf]]'s cell seeding — the IVF
+    * pivots are the real trained centroids, the way a production
+    * pipeline connects its clustering to its index. */
+  private[graft] def kmeansCentroidsShared(spark: SparkSession, sfDir: String): PqBooks =
     kmeansCents(spark, sfDir) {
-      lloydUpdate(spark, sfDir, kmeansSeeds(spark, sfDir))._1
+      lloydStep(spark, sfDir, seed(spark, sfDir, KmeansK, 1))._1
     }
 
   /** Final (cluster_id, vec_id, dist) assignment against the shared
     * updated centroids — one narrow corpus scan. Deterministic and
-    * oracle-exact end to end (see [[lloydUpdate]]); Lloyd's
+    * oracle-exact end to end (see [[lloydStep]]); Lloyd's
     * per-iteration full scan is inherent to the algorithm — the knob
     * at 100 TB is the iteration count ([[KmeansRounds]] for the
     * convergence profile; the assignment ships after one update),
@@ -315,22 +355,18 @@ object SimilarityOps {
     assignFrame(Tables.embeddings(spark, sfDir),
       kmeansCentroidsShared(spark, sfDir))
 
-  /** The assignment stage itself — ONE definition shared by the
-    * batch operator above and the streaming gate
-    * ([[graft.streaming.StreamingJobs.assignGate]]): a stateless
-    * narrow map with the ~4 KB centroid table in the task closure, so
-    * the two runtimes route a vector to the same cluster by
-    * construction. */
-  private[graft] def assignFrame(embeddings: DataFrame,
-      cents: Array[(Long, Array[Long], Long)]): DataFrame = {
+  /** The assignment stage itself — ONE definition for the batch
+    * operator above and a stream of embeddings (#67c: run on a
+    * streaming frame it is the topic-routing step of a continuous
+    * ingest, each arriving vector landing in its trained cluster
+    * while the model retrains in batch): the [[coded]] map against
+    * the one-subspace book, so the two runtimes route a vector to the
+    * same cluster by construction. */
+  private[graft] def assignFrame(embeddings: DataFrame, cents: PqBooks): DataFrame = {
     val spark = embeddings.sparkSession
     import spark.implicits.newProductEncoder
-    import graft.functions.VectorFunctions.quantized
-    quantized(embeddings)
-      .map { case (id, q, n2) =>
-        val (c, d) = nearestCluster(cents)(q, n2)
-        (c, id, d)
-      }
+    coded(embeddings, cents)
+      .map { case (id, _, c, d) => (c(0).toLong, id, d(0)) }
       .toDF("cluster_id", "vec_id", "dist")
   }
 
@@ -410,16 +446,16 @@ object SimilarityOps {
     * reads to decide whether one update (the shipping default)
     * suffices on its corpus.
     *
-    * Scale: [[KmeansRounds]] × the [[lloydUpdate]] cost (one narrow
+    * Scale: [[KmeansRounds]] × the [[lloydStep]] cost (one narrow
     * scan + one k·dim-group shuffle per round); only k·dim cells and
     * 3 stat rows ever cross the driver. */
   def kmeansConverge(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits.{newProductEncoder, localSeqToDatasetHolder}
-    var cents = kmeansSeeds(spark, sfDir)
+    var cents = seed(spark, sfDir, KmeansK, 1)
     val stats = (1 to KmeansRounds).map { r =>
-      val (next, sumDist) = lloydUpdate(spark, sfDir, cents)
-      val byId = next.map(c => c._1 -> c._2).toMap
-      val shift = cents.flatMap { case (c, q0, _) =>
+      val (next, dist) = lloydStep(spark, sfDir, cents)
+      val byId = next(0).toMap
+      val shift = cents(0).flatMap { case (c, q0) =>
         byId.get(c).map { q1 =>
           var s = 0L; var i = 0
           while (i < q0.length) { s += math.abs(q0(i) - q1(i)); i += 1 }
@@ -427,7 +463,7 @@ object SimilarityOps {
         }
       }.sum
       cents = next
-      (r.toLong, sumDist, shift)
+      (r.toLong, dist(0), shift)
     }
     stats.toDF("round", "sum_dist", "shift").orderBy($"round")
   }
@@ -457,20 +493,21 @@ object SimilarityOps {
   }
 
   def annIvf(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits.{newProductEncoder, newLongEncoder, newLongArrayEncoder}
-    import graft.functions.VectorFunctions.quantized
+    import spark.implicits.newProductEncoder
     // every vec_id selection is a COLUMN filter applied before the
-    // typed quantize map, so it reaches the parquet scan as a pushed
-    // filter — the probe path must extract 10 query vectors without
-    // reading (or quantizing) the 100 TB corpus
+    // typed map, so it reaches the parquet scan as a pushed filter —
+    // the probe path must extract 10 query vectors without reading
+    // (or quantizing) the 100 TB corpus
     def emb = Tables.embeddings(spark, sfDir)
-    val pivots = kmeansCentroidsShared(spark, sfDir)
+    val pivots = kmeansCentroidsShared(spark, sfDir)(0).map { case (c, v) =>
+      (c.toLong, v, v.map(x => x * x).sum)
+    }
     val cells = ivfIndex(spark, sfDir) {
-      quantized(emb.filter($"vec_id" >= 10))
+      quantVecs(emb.filter($"vec_id" >= 10)).as[(Long, Array[Long], Long)]
         .map { case (id, q, n2) => (bestCells(pivots)(q, n2, 1).head, id, q, n2) }
         .toDF("cell", "vec_id", "q", "n2")
     }
-    val probes = quantized(emb.filter($"vec_id" < 10))
+    val probes = quantVecs(emb.filter($"vec_id" < 10)).as[(Long, Array[Long], Long)]
       .flatMap { case (id, q, n2) => bestCells(pivots)(q, n2, 2).map(c => (c, id, q, n2)) }
       .toDF("qcell", "query_id", "q", "n2")
     ranked(
@@ -963,104 +1000,32 @@ object SimilarityOps {
   val PqK = 4
   val PqTopK = 5
 
-  /** One trained codebook per subspace; each entry carries its
-    * ORIGINAL seed-centroid id next to the centroid subvector,
-    * entries sorted by that id. The id — not the array position — is
-    * what [[encodeFrame]] emits as the code: if a seed cell empties
-    * during training (possible when two seed subvectors coincide),
-    * positional labels would shift relative to the oracle's kept seed
-    * ids and every downstream code would silently disagree. */
-  type PqBooks = Array[Array[(Int, Array[Long])]]
-
-  /** Nearest codebook entry's ORIGINAL centroid id by integer squared
-    * L2, plus its distance; ties keep the FIRST minimum, which over
-    * the id-sorted entries is the lowest id — the subspace analog of
-    * [[nearestCluster]]'s (dist asc, c asc) total order. */
-  private def nearestSubD(book: Array[(Int, Array[Long])],
-      sub: Array[Long]): (Int, Long) = {
-    var best = -1; var bestD = Long.MaxValue
-    var i = 0
-    while (i < book.length) {
-      val b = book(i)._2
-      var d = 0L; var j = 0
-      while (j < b.length) { val t = sub(j) - b(j); d += t * t; j += 1 }
-      if (d < bestD) { bestD = d; best = i }
-      i += 1
-    }
-    (book(best)._1, bestD)
-  }
-
-  private def nearestSub(book: Array[(Int, Array[Long])], sub: Array[Long]): Int =
-    nearestSubD(book, sub)._1
-
   private val pqBooks = new Materialize.Artifact[PqBooks]("pq-codebooks", "embeddings")
 
-  /** PQ codebook training — one deterministic Lloyd round PER
-    * SUBSPACE, all [[PqM]] subspaces in a single corpus pass: seeds
-    * are the [[PqK]] lowest vec_ids' subvectors (the [[kmeansSeeds]]
-    * convention), assignment is integer squared L2 with lowest-id
-    * ties, the centroid update is the HALF_UP integer mean computed
-    * INSIDE Spark SQL (the exact `round()` the oracle applies —
-    * [[lloydUpdate]]'s contract). A cell that loses all members drops
-    * out, exactly as in k-means. Bounded driver traffic: PqK seed
-    * vectors in, PqM·PqK·(d/PqM) = d·PqK centroid cells out. */
-  private def pqTrain(spark: SparkSession, sfDir: String): PqBooks = {
-    import spark.implicits.{newProductEncoder, newIntEncoder, newLongArrayEncoder}
-    import graft.functions.VectorFunctions.quantized
-    val seedVecs = quantized(
-        Tables.embeddings(spark, sfDir).orderBy($"vec_id".asc).limit(PqK))
-      .collect().sortBy(_._1).map(_._2)
-    val sd = seedVecs(0).length / PqM
-    val seeds: PqBooks =
-      Array.tabulate(PqM)(m => seedVecs.zipWithIndex
-        .map { case (v, c) => (c, v.slice(m * sd, (m + 1) * sd)) })
-    val cells = quantized(Tables.embeddings(spark, sfDir))
-      .flatMap { case (_, q, _) =>
-        (0 until PqM).iterator.map { m =>
-          val sub = q.slice(m * sd, (m + 1) * sd)
-          (m, nearestSub(seeds(m), sub), sub)
-        }
-      }
-      .toDF("m", "c", "sub")
-      .select($"m", $"c", posexplode($"sub").as(Seq("dim", "qv")))
-      .groupBy($"m", $"c", $"dim")
-      .agg(round(sum($"qv").cast("double") / count(lit(1))).cast(LongType).as("cv"))
-      .collect()
-    val byM = cells.groupBy(_.getInt(0))
-    // surviving cells keep their ORIGINAL seed id c (sortBy puts the
-    // entries in id order; emptied cells simply leave a gap)
-    Array.tabulate(PqM) { m =>
-      byM(m).groupBy(_.getInt(1)).toArray.sortBy(_._1).map { case (c, rs) =>
-        (c, rs.sortBy(_.getInt(2)).map(_.getLong(3)))
-      }
-    }
-  }
-
-  /** The trained PQ codebooks, built ONCE per corpus fingerprint —
-    * [[PqM]] arrays of up-to-[[PqK]] centroid subvectors (sorted by
-    * centroid id), ~d·PqK longs that ride task closures. Shared by
-    * [[annPq]] and the streaming encode gate
-    * ([[graft.streaming.StreamingJobs.pqEncodeGate]]). */
+  /** The trained PQ codebooks — one [[lloydStep]] from the [[PqK]]
+    * lowest vec_ids' subvectors, all [[PqM]] subspaces in a single
+    * corpus pass — built ONCE per corpus fingerprint: [[PqM]] arrays
+    * of up-to-[[PqK]] centroid subvectors (sorted by centroid id),
+    * ~d·PqK longs that ride task closures. Bounded driver traffic:
+    * PqK seed vectors in, d·PqK centroid cells out. Shared by
+    * [[annPq]], [[pqCells]] and the vector ingest job. */
   private[graft] def pqCodebooksShared(spark: SparkSession,
       sfDir: String): PqBooks =
-    pqBooks(spark, sfDir)(pqTrain(spark, sfDir))
+    pqBooks(spark, sfDir)(lloydStep(spark, sfDir, seed(spark, sfDir, PqK, PqM))._1)
 
-  /** The PQ encode stage — ONE definition shared by the batch ADC
-    * scorer ([[annPq]]) and the streaming encode gate, so the two
-    * runtimes code a vector identically by construction: a stateless
-    * narrow map with the codebooks in the task closure, emitting
-    * (vec_id, codes) where codes(m) indexes subspace m's codebook. */
-  private[graft] def encodeFrame(embeddings: DataFrame,
-      books: PqBooks): DataFrame = {
+  /** The PQ encode stage — ONE definition for the batch ADC scorer
+    * ([[annPq]]), the vector ingest job and a stream of embeddings
+    * (#44d's streaming form: run on a streaming frame it codes each
+    * arriving vector against the batch-trained books, the index upkeep
+    * a vector store runs at ingest), so every runtime codes a vector
+    * identically by construction: the [[coded]] map, emitting
+    * (vec_id, codes) where codes(m) is the original id of subspace
+    * m's nearest entry. */
+  private[graft] def encodeFrame(embeddings: DataFrame, books: PqBooks): DataFrame = {
     val spark = embeddings.sparkSession
     import spark.implicits.newProductEncoder
-    import graft.functions.VectorFunctions.quantized
-    val sd = books(0)(0)._2.length
-    quantized(embeddings)
-      .map { case (id, q, _) =>
-        (id, Array.tabulate(PqM)(m =>
-          nearestSub(books(m), q.slice(m * sd, (m + 1) * sd))))
-      }
+    coded(embeddings, books)
+      .map { case (id, _, c, _) => (id, c) }
       .toDF("vec_id", "codes")
   }
 
@@ -1071,22 +1036,16 @@ object SimilarityOps {
     * audit PQ needs exactly as the LSH buckets (#131) and MinHash
     * bands (#142) have: a cell hoarding the corpus means the
     * codebook under-fits (raise PqK / retrain), a fat error tail
-    * bounds how far an ADC rank can be trusted. Same [[nearestSubD]]
-    * coding rule as the scorer, so the audit measures the index that
-    * actually serves. One narrow corpus scan (codebooks in the
-    * closure), one PqM·PqK-group partial agg, shares broadcast as a
-    * 1-row total. */
+    * bounds how far an ADC rank can be trusted. Same [[coded]] map
+    * as the scorer, so the audit measures the index that actually
+    * serves. One narrow corpus scan (codebooks in the closure), one
+    * PqM·PqK-group partial agg, shares broadcast as a 1-row total. */
   def pqCells(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits.{newProductEncoder, newLongEncoder}
+    import spark.implicits.newProductEncoder
     val books = pqCodebooksShared(spark, sfDir)
-    val sd = books(0)(0)._2.length
-    import graft.functions.VectorFunctions.quantized
-    val cells = quantized(Tables.embeddings(spark, sfDir).filter($"vec_id" >= 10))
-      .flatMap { case (_, q, _) =>
-        (0 until PqM).iterator.map { m =>
-          val (c, d) = nearestSubD(books(m), q.slice(m * sd, (m + 1) * sd))
-          (m.toLong, c.toLong, d)
-        }
+    val cells = coded(Tables.embeddings(spark, sfDir).filter($"vec_id" >= 10), books)
+      .flatMap { case (_, _, c, d) =>
+        c.indices.iterator.map(m => (m.toLong, c(m).toLong, d(m)))
       }
       .toDF("m", "code", "err")
       .groupBy($"m", $"code")
@@ -1124,27 +1083,20 @@ object SimilarityOps {
     * collects: PqK seeds + d·PqK centroid cells + the 10-vector query
     * fixture. */
   def annPq(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits.{newProductEncoder, newLongEncoder, newLongArrayEncoder}
-    import graft.functions.VectorFunctions.quantized
+    import spark.implicits.newProductEncoder
     val books = pqCodebooksShared(spark, sfDir)
-    val sd = books(0)(0)._2.length
-    val queries = quantized(
-        Tables.embeddings(spark, sfDir).filter($"vec_id" < 10))
-      .collect().sortBy(_._1)
+    val queries = quantVecs(Tables.embeddings(spark, sfDir).filter($"vec_id" < 10))
+      .as[(Long, Array[Long], Long)].collect().sortBy(_._1)
     val qids = queries.map(_._1)
     // ADC lookup table: per query × subspace × CODE (the original
     // centroid id, always < PqK — emptied cells leave unused slots),
     // the exact squared L2 between the query subvector and that
     // centroid (e6 units — e3 coordinates squared)
     val lut: Array[Array[Array[Long]]] = queries.map { case (_, qv, _) =>
+      val sd = qv.length / PqM
       Array.tabulate(PqM) { m =>
-        val sub = qv.slice(m * sd, (m + 1) * sd)
         val row = new Array[Long](PqK)
-        books(m).foreach { case (c, b) =>
-          var s = 0L; var j = 0
-          while (j < b.length) { val t = sub(j) - b(j); s += t * t; j += 1 }
-          row(c) = s
-        }
+        books(m).foreach { case (c, b) => row(c) = sqL2(qv, m * sd, b) }
         row
       }
     }

@@ -279,10 +279,10 @@ object TextOps {
     redactStage(Tables.documents(spark, sfDir)).orderBy($"doc_id")
 
   /** The stateless redaction projection behind [[piiRedact]] — ONE
-    * definition shared with the streaming ingest gate
-    * (StreamingJobs.redactGate) and the end-to-end ingest job
-    * (jobs.IngestPipeline), so batch rewrite and at-ingest redaction
-    * can never disagree on a byte. Input needs (doc_id, source,
+    * definition shared with the streaming form (#146, pure per-row
+    * append mode with zero state, so a drop lands clean) and the
+    * end-to-end ingest job (jobs.IngestPipeline), so batch rewrite
+    * and at-ingest redaction can never disagree on a byte. Input needs (doc_id, source,
     * text); `carry` names extra input columns to pass through
     * untouched (the ingest job rides its gate flags and content hash
     * through the rewrite instead of paying a join). */
@@ -770,10 +770,11 @@ object TextOps {
       .select($"w1".as("token"), lit(1L).as("in_vocab"))
   }
 
-  /** Per-doc OOV counts against a broadcast `vocab` — the stage the
-    * streaming ingest gate ([[graft.streaming.StreamingJobs.oovGate]])
-    * shares with the batch per-doc audit: stateless per doc, so it
-    * runs identically over a micro-batch drop and a batch scan.
+  /** Per-doc OOV counts against a broadcast `vocab` — one stage for
+    * the batch per-doc audit and the streaming ingest form (#114b):
+    * stateless per doc, so it runs identically over a micro-batch
+    * drop and a batch scan; in update mode each doc emits exactly
+    * once, because each doc arrives in one micro-batch.
     * Per-doc counts fit BIGINT at any corpus scale (the DECIMAL
     * guard is only needed for [[oovRate]]'s source totals). */
   private[graft] def oovPerDoc(docs: DataFrame, vocab: DataFrame): DataFrame =
@@ -1001,8 +1002,9 @@ object TextOps {
         .cast(LongType).as("units"))
 
   /** Per-source fertility report over a (source, text) frame — the
-    * ONE scoring definition behind [[bpeApply]] and
-    * StreamingJobs.bpeGate. A narrow broadcast vocab lookup per token
+    * ONE scoring definition behind [[bpeApply]] and its streaming
+    * form (#151b, complete mode: O(|sources|) state of commutative
+    * sums, so micro-batch-invariant). A narrow broadcast vocab lookup per token
     * occurrence into a SINGLE partial-agg'd per-source sum (map-side
     * combine collapses to \|sources\| rows per partition — one
     * shuffle total, and single-agg is what streaming complete mode

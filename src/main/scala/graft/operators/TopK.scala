@@ -71,8 +71,8 @@ object TopK {
     *
     * Two bounded top-ks stay outside this builder:
     *  - [[BoundedDistinctTopK]]: the KMV sketch (`CurationOps.kmvMinsAgg`,
-    *    `kmvGate`) must collapse duplicate hashes inside the merge, and
-    *    `CollectTopK` keeps duplicates;
+    *    batch and streaming) must collapse duplicate hashes inside the
+    *    merge, and `CollectTopK` keeps duplicates;
     *  - `JoinOps.topnWindow`: q_topn_window's `row_number` form, the
     *    oracle twin that [[topnAgg]] is checked against. */
   def apply(df: DataFrame, keys: Seq[String], order: Seq[Column], k: Int,

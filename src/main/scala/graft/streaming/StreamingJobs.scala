@@ -185,116 +185,6 @@ object StreamingJobs {
       .agg(count(lit(1)).as("n_bigrams"),
         expr("sum(r) div count(1)").as("lm_score_e6"))
 
-  /** Streaming length histogram (SURVEY.md §2.7 #94b): the #94
-    * fixed-grid cells maintained over an unbounded document stream in
-    * complete mode — the cell grid IS the aggregation state, bounded
-    * at O(sources × maxlen/W) regardless of stream length, and cell
-    * counts are commutative sums, so the micro-batch cells equal the
-    * batch histogram exactly (the mergeability that motivates
-    * shipping a histogram instead of the #59 sort). Quantile readout
-    * is `CurationOps.histEstimates` over the cell table — the SAME
-    * estimation rule as batch (StreamingSpec pins both layers). */
-  def streamingHist(docs: DataFrame): DataFrame =
-    graft.operators.CurationOps.histCells(docs)
-
-  /** Streaming token-gram decontamination gate (SURVEY.md §2.7
-    * #51b): flag each arriving doc that shares a token gram with the
-    * BROADCAST benchmark gram set — #51 run at ingest instead of
-    * over the whole corpus, the textual sibling of [[deconGate]].
-    * The scoring subtree is `CurationOps.gramHits` — the ONE
-    * definition shared with the batch operator — and the update-mode
-    * agg keyed by doc_id emits each contaminated doc exactly once
-    * (its grams arrive in one micro-batch; the [[lmGate]]
-    * contract). */
-  def tokenDeconGate(stream: DataFrame, benchGrams: DataFrame): DataFrame =
-    graft.operators.CurationOps.gramHits(stream, benchGrams)
-
-  /** Streaming OOV gate (SURVEY.md §2.7 #114b): score each arriving
-    * doc's out-of-vocabulary token share against the BROADCAST
-    * reference vocabulary — #114 run at ingest, the
-    * tokenizer-coverage / encoding-rot alarm a pipeline fires before
-    * admitting a drop (a doc whose text is mostly unknown tokens is
-    * a new domain, a new language, or mojibake). The per-doc stage
-    * is `TextOps.oovPerDoc` — the ONE definition shared with the
-    * batch audit — stateless but for the update-mode agg keyed by
-    * doc_id; each doc arrives in one micro-batch, so each doc emits
-    * exactly once (the [[lmGate]] contract). */
-  def oovGate(stream: DataFrame, vocab: DataFrame): DataFrame =
-    graft.operators.TextOps.oovPerDoc(stream, vocab)
-
-  /** Streaming KMV distinct-token sketch (SURVEY.md §2.7 #58b): the
-    * per-source K-minimum-values sketch maintained over an unbounded
-    * token stream in complete mode — O(K) state per source whatever
-    * the vocabulary, because the duplicate-collapsing bounded merge
-    * IS the sketch (`CurationOps.kmvMinsAgg`, one shared
-    * definition). The live "how many distinct tokens has this feed
-    * shipped" estimate; read out with `kmvSketchRows`. Micro-batch
-    * boundaries, arrival order, and re-delivery cannot change the
-    * state (commutative idempotent monoid). Input: (source, tok). */
-  def kmvGate(toks: DataFrame): DataFrame =
-    graft.operators.CurationOps.kmvMinsAgg(toks)
-
-  /** Streaming character-class profile (SURVEY.md §2.7 #119b): the
-    * per-source encoding-health dashboard maintained over an ingest
-    * stream in complete mode — the SAME stateless classifier and
-    * report stages as the batch operator (`TextOps.charClassCounts` /
-    * `charReport`); commutative integer sums keep state O(|sources|)
-    * and the result micro-batch-invariant. A mojibake feed shows up
-    * as a falling alpha share LIVE, not at the next batch profile.
-    * Input: (source, text). */
-  def charGate(stream: DataFrame): DataFrame =
-    graft.operators.TextOps.charReport(
-      graft.operators.TextOps.charClassCounts(stream))
-
-  /** Streaming tokenizer-fit gate (SURVEY.md §2.7 #151b streaming
-    * form): per-source fertility/compression of an ingest stream
-    * scored against the BATCH-trained BPE vocabulary — the
-    * "does yesterday's tokenizer still fit today's drop" alarm (a
-    * fertility spike means the feed drifted away from the trained
-    * vocabulary: new language, new templates, encoding breakage).
-    * SAME `TextOps.bpeFitStage` scoring definition as the batch
-    * report: broadcast vocab lookup (out-of-vocab segments to chars)
-    * into one complete-mode per-source agg of commutative sums —
-    * O(|sources|) state, micro-batch-invariant. Input: (source,
-    * text); `unitsVocab` from `TextOps.bpeUnitsVocab`. */
-  def bpeGate(stream: DataFrame, unitsVocab: DataFrame): DataFrame =
-    graft.operators.TextOps.bpeFitStage(stream, unitsVocab)
-
-  /** Streaming data-quality gate (SURVEY.md §2.7 #150 streaming
-    * form): the lineitem constraint pass — FK orphans against the
-    * STATIC orders dim plus both range rules — maintained live over
-    * the ingest stream, so a bad feed (orphaned keys, negative
-    * quantities) alarms within a micro-batch instead of at the
-    * nightly audit. SAME `lineitemChecksAgg` stage as the batch
-    * battery (one definition): stream-static left join (the static
-    * side is the reference dim — supported, no watermark needed) into
-    * a complete-mode 1-row agg of commutative counts, so the result
-    * is micro-batch-invariant and ≡ the batch audit over the same
-    * rows. Input: (l_orderkey, l_quantity, l_discount). */
-  def integrityGate(lines: DataFrame, orders: DataFrame): DataFrame =
-    graft.operators.JoinOps.lineitemChecksAgg(lines, orders)
-
-  /** Streaming PII-redaction gate (SURVEY.md §2.7 #146 streaming
-    * form): redact each drop at ingest with the SAME stateless
-    * projection as the batch rewrite (`TextOps.redactStage`, one
-    * definition) — pure per-row append mode, zero state, so the
-    * corpus lands clean instead of waiting for a rewrite pass, and
-    * the two paths cannot disagree on a byte. Input: (doc_id,
-    * source, text). */
-  def redactGate(stream: DataFrame): DataFrame =
-    graft.operators.TextOps.redactStage(stream)
-
-  /** Streaming daily-volume dashboard (SURVEY.md §2.6 #133
-    * streaming form): per-day event counts maintained live over the
-    * ingest stream in complete mode — the SAME day-bucketing stage
-    * as the batch anomaly report's input frame
-    * (`CoreOps.dailyCounts`, one definition), so the live dashboard
-    * and the nightly exact-integer 3σ report can never disagree on
-    * a day's volume. Commutative counts over a bounded |days| key
-    * space: O(|days|) state, micro-batch-invariant. Input: (ts). */
-  def volumeGate(stream: DataFrame): DataFrame =
-    graft.operators.CoreOps.dailyCounts(stream)
-
   /** Streaming large-order alarm (SURVEY.md §2.6 #33k streaming
     * form): per-order running quantity totals over a lineitem
     * stream, emitting orders past the [[graft.operators.JoinOps.BigOrderQtyE2]]
@@ -322,7 +212,8 @@ object StreamingJobs {
     * (cos, −bench) structs — an associative merge, so the agg state
     * per key is O(1). StreamingSpec pins stream ≡ batch per vector. */
   def deconGate(stream: DataFrame, bench: DataFrame): DataFrame = {
-    import graft.operators.CurationOps.{deconBest, deconHits, quantVecs}
+    import graft.functions.VectorFunctions.quantVecs
+    import graft.operators.CurationOps.{deconBest, deconHits}
     deconBest(deconHits(quantVecs(stream), bench))
   }
 
@@ -449,29 +340,6 @@ object StreamingJobs {
           }
       }
   }
-
-  /** #67c Streaming cluster-assignment gate: each arriving embedding
-    * routed to its nearest TRAINED centroid — the topic-routing step
-    * of a continuous ingest pipeline (new docs land in their cluster
-    * shard; the model retrains in batch, like the #71 moments). The
-    * SAME assignment stage as the batch operator
-    * (SimilarityOps.assignFrame — one shared definition), stateless
-    * with the ~4 KB centroid table in the closure, so stream and
-    * batch route identically by construction. */
-  def assignGate(stream: DataFrame,
-      cents: Array[(Long, Array[Long], Long)]): DataFrame =
-    graft.operators.SimilarityOps.assignFrame(stream, cents)
-
-  /** Streaming PQ-encode gate (SURVEY.md §2.7 #44d streaming form):
-    * each arriving embedding coded against the BATCH-trained PQ
-    * codebooks — the index-maintenance step a production vector store
-    * runs at ingest (codes append to the compressed scan tier; the
-    * codebooks retrain in batch). The SAME encode stage as the batch
-    * ADC scorer (SimilarityOps.encodeFrame — one shared definition),
-    * stateless with the ~d·PqK-long codebooks in the closure. */
-  def pqEncodeGate(stream: DataFrame,
-      books: graft.operators.SimilarityOps.PqBooks): DataFrame =
-    graft.operators.SimilarityOps.encodeFrame(stream, books)
 
   /** Per-key state of [[ttlFoldGate]]: the FROZEN fold of the events
     * that aged past the TTL horizon, plus the live buffer of the rest,

@@ -92,22 +92,27 @@ class DedupSpec extends SparkTestBase {
       s"got $pairs")
   }
 
-  test("combination blocking equals single-block pigeonhole blocking") {
-    import graft.operators.DedupOps.{SimhashBits, SimhashBlockBits, SimhashBlocks}
-    // both schemes have EXACT recall at Hamming ≤ 3, so they must
-    // produce the identical pair set — this cross-checks the combo
-    // key packing independently of the DuckDB oracle
+  test("combination blocking equals brute-force all-pairs Hamming <= 3") {
+    import graft.operators.DedupOps.SimhashBits
+    // combination blocking has EXACT recall at Hamming ≤ 3, so it must
+    // produce every pair a scan of ALL signature pairs finds — this
+    // cross-checks the combo key packing and the run-buffer expansion
+    // independently of the DuckDB oracle
     val sigs = Tables.documents(spark, sf)
       .select(col("doc_id"),
         TextHash.simhash(col("text"), SimhashBits).as("simhash"))
       .filter(col("simhash") =!= -1L)
+      .as[(Long, Long)].collect().sortBy(_._1)
+    val reference = (for {
+      i <- sigs.indices
+      j <- i + 1 until sigs.length
+      ham = java.lang.Long.bitCount(sigs(i)._2 ^ sigs(j)._2).toLong
+      if ham <= 3
+    } yield (sigs(i)._1, sigs(j)._1, ham)).sorted
     val combo = DedupOps.dedupSimhash(spark, sf)
       .as[(Long, Long, Long)].collect().toSeq
-    val single = DedupOps.blockedHammingPairs(
-      sigs, "simhash", SimhashBlocks, SimhashBlockBits, maxHamming = 3)
-      .as[(Long, Long, Long)].collect().toSeq
-    assert(combo == single,
-      s"extra=${combo.diff(single)} missing=${single.diff(combo)}")
+    assert(combo == reference,
+      s"extra=${combo.diff(reference)} missing=${reference.diff(combo)}")
   }
 
   test("prefix dedup partitions the long-doc corpus and is refined by exact classes") {

@@ -615,5 +615,20 @@ class SimilaritySpec extends SparkTestBase {
       for (m <- 0 until PqM)
         assert(codes(m) != books0(m).head._1, "a dropped cell id must never be emitted")
     }
+    // k-means is the one-subspace book: drop a cluster the update
+    // kept and the assignment must route by the survivors' ORIGINAL
+    // ids, dist = the squared L2 to the chosen centroid
+    val cents0 = SimilarityOps.kmeansCentroidsShared(spark, sf)
+    val dropped = cents0(0)(1)._1
+    val cents: SimilarityOps.PqBooks = Array(cents0(0).filter(_._1 != dropped))
+    val wantAsg = emb.map { case (id, q) =>
+      val (c, d) = cents(0).map { case (c, b) => (c, d2(q, b)) }
+        .minBy { case (c, d) => (d, c) }
+      (c.toLong, id, d)
+    }.toSet
+    val gotAsg = SimilarityOps.assignFrame(Tables.embeddings(spark, sf), cents)
+      .as[(Long, Long, Long)].collect().toSet
+    assert(gotAsg == wantAsg, "assignment diverges from the id-labeled argmin model")
+    assert(!gotAsg.exists(_._1 == dropped.toLong), "a dropped cluster id must never be emitted")
   }
 }

@@ -92,7 +92,7 @@ class StreamingSpec extends SparkTestBase {
       .as[(String, Long, Long)].collect().toSet
     val docs = docsDf.as[(String, String)].collect()
     val in = MemoryStream[(String, String)]
-    val q = StreamingJobs.streamingHist(in.toDF().toDF("source", "text"))
+    val q = CurationOps.histCells(in.toDF().toDF("source", "text"))
       .writeStream.format("memory").queryName("lenhist")
       .outputMode(OutputMode.Complete).start()
     try {
@@ -151,7 +151,7 @@ class StreamingSpec extends SparkTestBase {
       .select("doc_id", "text").as[(Long, String)].collect()
     val bench = CurationOps.benchGramSet(allDocs)
     val in = MemoryStream[(Long, String)]
-    val q = StreamingJobs.tokenDeconGate(
+    val q = CurationOps.gramHits(
         in.toDF().toDF("doc_id", "text"), bench)
       .writeStream.format("memory").queryName("tokdecon")
       .outputMode(OutputMode.Update).start()
@@ -177,7 +177,7 @@ class StreamingSpec extends SparkTestBase {
         Tables.documents(spark, sf).select(col("doc_id"), col("text")), vocab)
       .as[(Long, Long, Long, Long)].collect().toSet
     val in = MemoryStream[(Long, String)]
-    val q = StreamingJobs.oovGate(in.toDF().toDF("doc_id", "text"), vocab)
+    val q = TextOps.oovPerDoc(in.toDF().toDF("doc_id", "text"), vocab)
       .writeStream.format("memory").queryName("oovgate")
       .outputMode(OutputMode.Update).start()
     try {
@@ -269,7 +269,7 @@ class StreamingSpec extends SparkTestBase {
     val rows = Tables.embeddings(spark, sf)
       .select("vec_id", "embedding").as[(Long, Array[Float])].collect()
     val in = MemoryStream[(Long, Array[Float])]
-    val q = StreamingJobs.assignGate(
+    val q = SimilarityOps.assignFrame(
         in.toDF().toDF("vec_id", "embedding"), cents)
       .writeStream.format("memory").queryName("assign")
       .outputMode(OutputMode.Append).start()
@@ -293,7 +293,7 @@ class StreamingSpec extends SparkTestBase {
     val rows = Tables.embeddings(spark, sf)
       .select("vec_id", "embedding").as[(Long, Array[Float])].collect()
     val in = MemoryStream[(Long, Array[Float])]
-    val q = StreamingJobs.pqEncodeGate(
+    val q = SimilarityOps.encodeFrame(
         in.toDF().toDF("vec_id", "embedding"), books)
       .writeStream.format("memory").queryName("pqcodes")
       .outputMode(OutputMode.Append).start()
@@ -678,7 +678,7 @@ class StreamingSpec extends SparkTestBase {
     val docs = Tables.documents(spark, sf)
       .select("source", "text").as[(String, String)].collect()
     val in = MemoryStream[(String, String)]
-    val q = StreamingJobs.charGate(in.toDF().toDF("source", "text"))
+    val q = TextOps.charReport(TextOps.charClassCounts(in.toDF().toDF("source", "text")))
       .writeStream.format("memory").queryName("chargate")
       .outputMode(OutputMode.Complete).start()
     try {
@@ -702,7 +702,7 @@ class StreamingSpec extends SparkTestBase {
     val docs = Tables.documents(spark, sf)
       .select("source", "text").as[(String, String)].collect()
     val in = MemoryStream[(String, String)]
-    val q = StreamingJobs.bpeGate(in.toDF().toDF("source", "text"), vocab)
+    val q = TextOps.bpeFitStage(in.toDF().toDF("source", "text"), vocab)
       .writeStream.format("memory").queryName("bpegate")
       .outputMode(OutputMode.Complete).start()
     try {
@@ -745,7 +745,7 @@ class StreamingSpec extends SparkTestBase {
     assert(batch._2 >= 1L && batch._3 >= 1L && batch._4 >= 1L,
       "crafted violations must register in the batch pass")
     val in = MemoryStream[(Long, Double, Double)]
-    val q = StreamingJobs.integrityGate(
+    val q = JoinOps.lineitemChecksAgg(
         in.toDF().toDF("l_orderkey", "l_quantity", "l_discount"), orders)
       .writeStream.format("memory").queryName("integritygate")
       .outputMode(OutputMode.Complete).start()
@@ -789,7 +789,7 @@ class StreamingSpec extends SparkTestBase {
     assert(byId(900004L)._3 == "no pii here at all" &&
       byId(900004L)._4 + byId(900004L)._5 + byId(900004L)._6 == 0L)
     val in = MemoryStream[(Long, String, String)]
-    val q = StreamingJobs.redactGate(in.toDF().toDF("doc_id", "source", "text"))
+    val q = TextOps.redactStage(in.toDF().toDF("doc_id", "source", "text"))
       .writeStream.format("memory").queryName("redactgate")
       .outputMode(OutputMode.Append).start()
     try {
@@ -820,7 +820,7 @@ class StreamingSpec extends SparkTestBase {
     // merge would drift
     val shuffled = rows.reverse
     val in = MemoryStream[(String, String)]
-    val q = StreamingJobs.kmvGate(in.toDF().toDF("source", "tok"))
+    val q = CurationOps.kmvMinsAgg(in.toDF().toDF("source", "tok"))
       .writeStream.format("memory").queryName("kmv")
       .outputMode(OutputMode.Complete).start()
     try {
@@ -1196,7 +1196,7 @@ class StreamingSpec extends SparkTestBase {
       .dailyCounts(Tables.events(spark, sf))
       .as[(String, Long)].collect().toSet
     val in = MemoryStream[Timestamp]
-    val q = StreamingJobs.volumeGate(in.toDF().toDF("ts"))
+    val q = graft.operators.CoreOps.dailyCounts(in.toDF().toDF("ts"))
       .writeStream.format("memory").queryName("volgate")
       .outputMode(OutputMode.Complete).start()
     try {
